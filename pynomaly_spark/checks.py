@@ -309,6 +309,18 @@ class SuiteResult:
         return m.unionByName(v)
 
 
+def _stage(frame: DataFrame, path: str) -> DataFrame:
+    """Write ``frame`` to parquet at ``path`` and read it back.
+
+    The read passes the writer's schema, which skips the one-task job a
+    schema-less ``read.parquet`` runs to infer it from the footers.  A
+    file source makes every column nullable on read, so the result has
+    exactly the schema inference would give.
+    """
+    frame.write.mode("overwrite").parquet(path)
+    return frame.sparkSession.read.schema(frame.schema).parquet(path)
+
+
 def _hash_dup_candidates(
     enriched: DataFrame,
     persisted_out: Optional[List] = None,
@@ -590,8 +602,7 @@ def run_suite(
         # once, and each branch re-scans it with column pruning.
         os.makedirs(stage_dir, exist_ok=True)
         path = os.path.join(stage_dir, f"enriched_{suite.suite_hash()}.parquet")
-        enriched.write.mode("overwrite").parquet(path)
-        enriched = df.sparkSession.read.parquet(path)
+        enriched = _stage(enriched, path)
         _mark("staged heavy-column write")
     else:
         enriched = enriched.persist()
@@ -1218,18 +1229,20 @@ def run_suite(
     # the slowest instead of once per frame (same §2.6 overlap as the
     # primer).  Each count also sizes its fused join-back's bounded
     # broadcast.
+    # Counts come back in _job2's enumeration order: dup groups first,
+    # then violator subsets (the same index scheme as primer job 1).
     _job2 = [f for _, _, f in _pending_uniq] + [
         f for _, _, f in _pending_drift
     ]
-    _job2_counts: dict = {}
+    _job2_counts: List[int] = []
     if _job2:
         from concurrent.futures import ThreadPoolExecutor as _TPE2
 
         with _TPE2(max_workers=min(8, len(_job2))) as _pool2:
-            _job2_counts = dict(
-                _pool2.map(lambda f: (id(f), int(f.count())), _job2)
-            )
-    for chk, keys, dup_groups in _pending_uniq:
+            _job2_counts = list(_pool2.map(lambda f: int(f.count()), _job2))
+    _uniq_counts = _job2_counts[: len(_pending_uniq)]
+    _drift_counts = _job2_counts[len(_pending_uniq):]
+    for (chk, keys, dup_groups), n_dup in zip(_pending_uniq, _uniq_counts):
         metric_frames.append(
             _count_metric(
                 dup_groups.groupBy("partition_id").agg(
@@ -1239,7 +1252,7 @@ def run_suite(
                 "duplicate_rows",
             )
         )
-        _fused_uniq.append((chk, dup_groups, _job2_counts[id(dup_groups)]))
+        _fused_uniq.append((chk, dup_groups, n_dup))
     if _deferred_uniq or _pending_drift:
         _mark("dup-group/violator primer (job 2)")
 
@@ -1380,11 +1393,10 @@ def run_suite(
                     F.lit(None).cast("double"),
                 )
             )
-        for j, chk, violators in _pending_drift:
+        for (j, chk, violators), n_viol in zip(_pending_drift, _drift_counts):
             marker = f"_d{j}_score"
             # violators built + counted with job 2 above (hot keyed
             # cache); the count sizes the bounded broadcast here
-            n_viol = _job2_counts[id(violators)]
             cond = (F.col("partition_id") == F.col(f"_d{j}_pid")) & (
                 F.col("row_id") == F.col(f"_d{j}_rid")
             )

@@ -398,52 +398,21 @@ def link_prediction(
         id_t, IntegerType
     )
     if use_pack:
-        # See the docstring: one 8-byte injective pair key through the
-        # wedge aggregate + anti-join, unpacked exactly before the
-        # top-k.  int ids pack unconditionally (shiftleft never
-        # overflows for |x| < 2^31; low word is y's unsigned 32-bit
-        # image).  Explicit pack_ids=True on wider ids adds the
-        # in-plan range guard ON the pack expression itself — it IS
-        # the aggregate key, so Catalyst cannot prune it.
-        guard = pack_ids is True and not isinstance(id_t, IntegerType)
-
-        def _side(c):
-            if not guard:
-                return c.cast("long")
-            return F.when(
-                (c >= 0) & (c < F.lit(2147483648)), c.cast("long")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "link_prediction: pack_ids=True requires "
-                            "ids in [0, 2^31); got "
-                        ),
-                        c.cast("string"),
-                    )
-                ).cast("long")
-            )
-
-        def _pack(xc, yc):
-            return F.shiftleft(_side(xc), 32) + (
-                _side(yc).bitwiseAND(F.lit(4294967295))
-            )
-
+        # See the docstring and _pair_pack: one 8-byte injective pair
+        # key through the wedge aggregate + anti-join, unpacked exactly
+        # before the top-k; pack_ids=True on wider ids range-guards the
+        # key in plan.
+        pack, ux, uy = _pair_pack(
+            id_t,
+            pack_ids is True and not isinstance(id_t, IntegerType),
+            "link_prediction",
+        )
         cn = wedges.groupBy(
-            _pack(F.col("n"), F.col("y")).alias("_xy")
+            pack(F.col("n"), F.col("y")).alias("_xy")
         ).agg(F.count(F.lit(1)).cast("long").alias("common"))
-        existing = und.select(_pack(F.col("u"), F.col("v")).alias("_xy"))
-        lo = F.col("_xy").bitwiseAND(F.lit(4294967295))
-        cand = (
-            cn.join(existing, ["_xy"], "left_anti")
-            .select(
-                F.shiftright(F.col("_xy"), 32).cast(id_t).alias("x"),
-                F.when(lo >= F.lit(2147483648), lo - F.lit(4294967296))
-                .otherwise(lo)
-                .cast(id_t)
-                .alias("y"),
-                "common",
-            )
+        existing = und.select(pack(F.col("u"), F.col("v")).alias("_xy"))
+        cand = cn.join(existing, ["_xy"], "left_anti").select(
+            ux(F.col("_xy")).alias("x"), uy(F.col("_xy")).alias("y"), "common"
         )
     else:
         cn = wedges.groupBy(F.col("n").alias("x"), "y").agg(

@@ -14,11 +14,14 @@ SQL-expressible in the oracle).
 
 from __future__ import annotations
 
+import os
+import stat
 from typing import Callable, Dict
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _R = 6  # default rounding for float-valued metrics
 
@@ -40,8 +43,38 @@ _EMB_DIM = 64
 _SPREAD_TABLES = frozenset({"documents", "embeddings"})
 
 
+# Inferred schema per local parquet file, keyed on (path, inode, mtime,
+# size) so a rewritten file is inferred afresh.  Only schemas are kept:
+# each read still builds a new relation with fresh attribute ids, so a
+# query can self-join two reads of one table.
+_SCHEMAS: Dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once.
+
+    A schema-less parquet read runs a one-task Spark job to read the
+    footer; with the schema supplied the read plans without any job.
+    Directories, remote URIs and paths that cannot be stat'ed are always
+    read schema-less.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def _tbl(spark, sf_dir, name) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     return _spread(df) if name in _SPREAD_TABLES else df
 
 
@@ -2406,7 +2439,7 @@ def q_events_funnel(spark, sf_dir):
     self-join per step.  Integer-µs comparisons are exact cross-engine."""
     from pynomaly_spark.sessions import funnel_counts
 
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = _tbl(spark, sf_dir, "events")
     return funnel_counts(events, _FUNNEL_STEPS).select(
         F.col("step").cast("long").alias("step"),
         "step_type",

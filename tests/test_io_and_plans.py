@@ -493,3 +493,90 @@ def test_aqe_splits_planted_skew_join(spark):
                 conf.unset(k)
             else:
                 conf.set(k, v)
+
+
+# the registry_light benchmark tables, committed with the checkout
+_BENCH_SF = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "perfbench", "data", "sf0.1",
+)
+
+
+def test_registry_builds_launch_no_spark_job(spark):
+    """Once each table's schema is known, building a headline query (or
+    events_funnel) plans without a single Spark job: a schema-less
+    parquet read would run a one-task footer job per call."""
+    from bench import HEADLINE
+    from pynomaly_spark.queries import QUERIES
+
+    names = HEADLINE + ["events_funnel"]
+    for name in names:  # warm build: infers each table's schema once
+        QUERIES[name](spark, _BENCH_SF)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name in names:
+            group = f"build-{name}"
+            sc.setJobGroup(group, group)
+            QUERIES[name](spark, _BENCH_SF)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == {name: 0 for name in names}
+
+
+def test_read_parquet_reinfers_rewritten_file(spark, tmp_path):
+    """The schema memo is keyed on the file's identity: overwriting a
+    path with a different column set is read with the new columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pynomaly_spark.queries import _tbl
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    first = _tbl(spark, str(tmp_path), "t")
+    assert first.columns == ["a", "b"]
+    assert sorted(r.a for r in first.collect()) == [1, 2]
+
+    pq.write_table(pa.table({"c": [3.5, 4.5, 5.5]}), path)
+    second = _tbl(spark, str(tmp_path), "t")
+    assert second.columns == ["c"]
+    assert sorted(r.c for r in second.collect()) == [3.5, 4.5, 5.5]
+
+
+def test_doc_self_join_has_fresh_attributes(spark):
+    """Only schemas are memoized, never relations: two _doc() reads in
+    one query carry disjoint attribute ids and self-join on doc_id."""
+    from pynomaly_spark.queries import _doc
+
+    def expr_ids(df):
+        out = df._jdf.queryExecution().analyzed().output()
+        return {out.apply(i).exprId().id() for i in range(out.size())}
+
+    a = _doc(spark, _BENCH_SF)
+    b = _doc(spark, _BENCH_SF)
+    assert not expr_ids(a) & expr_ids(b)
+    n = a.count()
+    assert n > 0
+    assert a.join(b, a["doc_id"] == b["doc_id"]).count() == n
+
+
+def test_staged_readback_schema_equals_inferred(spark, tmp_path):
+    """run_suite's staged read-back passes the writer's schema; a file
+    source makes it nullable, so it equals the inferred schema even
+    when the writer's columns are non-nullable."""
+    from pynomaly_spark.checks import _stage
+
+    frame = spark.range(50).select(
+        F.col("id").alias("row_id"),
+        F.lit(3).alias("partition_id"),
+        F.unhex(F.sha2(F.col("id").cast("string"), 256)).alias("_sha"),
+        F.when(F.col("id") % 7 == 0, None).otherwise(F.lit("x")).alias("s"),
+    )
+    assert not frame.schema["row_id"].nullable
+    path = str(tmp_path / "enriched.parquet")
+    staged = _stage(frame, path)
+    assert staged.schema == spark.read.parquet(path).schema
+    assert staged.count() == 50
