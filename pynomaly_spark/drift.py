@@ -114,6 +114,62 @@ def _gated_frame(pid, row_ids) -> pd.DataFrame:
     )
 
 
+def _slim(df, id_col, partition_col, features_col, fcols, carry, salt_col):
+    """The columns a per-group fit reads: id, the partition as a string,
+    the features (flat ``fcols`` or the array ``features_col``), then
+    the carry and salt columns."""
+    feat_sel = (
+        [F.col(c) for c in fcols]
+        if fcols
+        else [F.col(features_col).alias(features_col)]
+    )
+    return df.select(
+        F.col(id_col),
+        F.col(partition_col).cast("string").alias(partition_col),
+        *feat_sel,
+        *[F.col(c) for c in carry],
+        *([F.col(salt_col)] if salt_col else []),
+    )
+
+
+def _score_group(
+    g: pd.DataFrame,
+    pid: str,
+    k: int,
+    ext: int,
+    id_col: str,
+    features_col: str,
+    fcols: list,
+    carry: list,
+    exact_tiebreak: bool = False,
+) -> pd.DataFrame:
+    """One group's output frame: gated when it has at most ``k`` rows,
+    else one LoOP fit; ``carry`` columns pass through."""
+    if exact_tiebreak:
+        # position order == id order, so the kernel's stable-sort
+        # tie-break equals the oracle's ORDER BY (dist, id)
+        g = g.sort_values(id_col, kind="stable")
+    row_ids = g[id_col].to_numpy()
+    if len(g) <= k:
+        out = _gated_frame(pid, row_ids)
+    else:
+        if fcols:
+            pts = g[fcols].to_numpy(dtype=np.float64)
+        else:
+            pts = np.stack(g[features_col].to_numpy())
+        if exact_tiebreak:
+            # duplicate-collapsing (dist, id) path: O(distinct^2)
+            # instead of O(rows^2) on tie-heavy features, same
+            # outputs (kernel.loop_scores_tied docstring)
+            res = kernel.loop_scores_tied(pts, n_neighbors=k, extent=ext)
+        else:
+            res = kernel.loop_scores(pts, n_neighbors=k, extent=ext)
+        out = _result_frame(pid, row_ids, res)
+    for c in carry:
+        out[c] = g[c].to_numpy()
+    return out
+
+
 def loop_grouped(
     df: DataFrame,
     n_neighbors: int = 10,
@@ -163,45 +219,12 @@ def loop_grouped(
     )
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if exact_tiebreak:
-            # position order == id order, so the kernel's stable-sort
-            # tie-break equals the oracle's ORDER BY (dist, id)
-            pdf = pdf.sort_values(id_col, kind="stable")
         pid = _pid_str(pdf[partition_col].iloc[0])
-        row_ids = pdf[id_col].to_numpy()
-        if len(pdf) <= k:
-            out = _gated_frame(pid, row_ids)
-        else:
-            if fcols:
-                pts = pdf[fcols].to_numpy(dtype=np.float64)
-            else:
-                pts = np.stack(pdf[features_col].to_numpy())
-            if exact_tiebreak:
-                # duplicate-collapsing (dist, id) path: O(distinct^2)
-                # instead of O(rows^2) on tie-heavy features, same
-                # outputs (kernel.loop_scores_tied docstring)
-                res = kernel.loop_scores_tied(
-                    pts, n_neighbors=k, extent=ext
-                )
-            else:
-                res = kernel.loop_scores(pts, n_neighbors=k, extent=ext)
-            out = _result_frame(pid, row_ids, res)
-        for c in carry:
-            out[c] = pdf[c].to_numpy()
-        return out
+        return _score_group(
+            pdf, pid, k, ext, id_col, features_col, fcols, carry, exact_tiebreak
+        )
 
-    feat_sel = (
-        [F.col(c) for c in fcols]
-        if fcols
-        else [F.col(features_col).alias(features_col)]
-    )
-    slim = df.select(
-        F.col(id_col).alias(id_col),
-        F.col(partition_col).cast("string").alias(partition_col),
-        *feat_sel,
-        *[F.col(c) for c in carry],
-        *([F.col(salt_col)] if salt_col else []),
-    )
+    slim = _slim(df, id_col, partition_col, features_col, fcols, carry, salt_col)
     group_keys = [partition_col] + ([salt_col] if salt_col else [])
     return slim.groupBy(*group_keys).applyInPandas(
         score_group, schema=out_schema
@@ -255,34 +278,13 @@ def loop_grouped_map(
         # them (round-2 review finding)
         for key, g in pdf.groupby(keys, sort=False, dropna=False):
             pid = _pid_str(key[0] if isinstance(key, tuple) else key)
-            row_ids = g[id_col].to_numpy()
-            if len(g) <= k:
-                out = _gated_frame(pid, row_ids)
-            else:
-                if fcols:
-                    pts = g[fcols].to_numpy(dtype=np.float64)
-                else:
-                    pts = np.stack(g[features_col].to_numpy())
-                res = kernel.loop_scores(pts, n_neighbors=k, extent=ext)
-                out = _result_frame(pid, row_ids, res)
-            for c in carry:
-                out[c] = g[c].to_numpy()
-            outs.append(out)
+            outs.append(
+                _score_group(g, pid, k, ext, id_col, features_col, fcols, carry)
+            )
         if outs:
             yield pd.concat(outs, ignore_index=True)[out_cols]
 
-    feat_sel = (
-        [F.col(c) for c in fcols]
-        if fcols
-        else [F.col(features_col).alias(features_col)]
-    )
-    slim = df.select(
-        F.col(id_col),
-        F.col(partition_col).cast("string").alias(partition_col),
-        *feat_sel,
-        *[F.col(c) for c in carry],
-        *([F.col(salt_col)] if salt_col else []),
-    )
+    slim = _slim(df, id_col, partition_col, features_col, fcols, carry, salt_col)
     return slim.repartition(*keys).mapInPandas(run, out_schema)
 
 

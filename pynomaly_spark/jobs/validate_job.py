@@ -6,10 +6,6 @@ Cluster form (north rule)::
         validate_job.py --input /data/code_table --ckpt /data/ckpt \
         --salt-rows 100000
 
-Sandbox form (scaling evidence, see bench_scaling.py)::
-
-    spark-submit --master local[8]  ... ; spark-submit --master local[32] ...
-
 Prints ONE JSON line: rows validated, wall seconds, files/sec, partitions
 committed/skipped.  Resumable: rerunning with the same --ckpt skips
 committed partitions (per-partition manifests carry lineage).

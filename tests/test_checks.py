@@ -353,49 +353,97 @@ def _dup_table(spark, n):
     )
 
 
-def test_dup_candidate_join_not_broadcast_over_bound(spark):
+def _cand_rows(df):
+    from pynomaly_spark.checks import _cand_semi_join, _dup_candidate_hashes
+
+    cand_hashes = _dup_candidate_hashes(df).persist()
+    return cand_hashes, _cand_semi_join(df, cand_hashes, cand_hashes.count())
+
+
+def test_dup_candidate_join_not_broadcast_over_bound(spark, monkeypatch):
     """Round-3 judge item 2: the uniqueness candidate semi-join must not
     UNCONDITIONALLY broadcast.  On an LLM-scale corpus duplicate keys
     are pervasive, so the candidate set is ~the whole table; the old
     hint would OOM every executor.  With a candidate set over the bound
     (and AQE's own conversion disabled so the test sees the engine's
     decision), the executed plan must contain no BroadcastExchange."""
-    from pynomaly_spark.checks import _hash_dup_candidates
+    from pynomaly_spark import checks
 
+    monkeypatch.setattr(checks, "_BROADCAST_ROWS_MAX", 10_000)
     n = 100_000
     df = _dup_table(spark, n)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    caches = []
+    cand_hashes = None
     try:
-        cand = _hash_dup_candidates(
-            df, persisted_out=caches, broadcast_rows_max=10_000
-        )
+        cand_hashes, cand = _cand_rows(df)
         assert cand.count() == n
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for c in caches:
-            c.unpersist()
+        if cand_hashes is not None:
+            cand_hashes.unpersist()
 
 
 def test_dup_candidate_small_set_keeps_broadcast_fast_path(spark):
     """A candidate set under the bound takes the explicit broadcast —
     map-only probe, no exchange of the input side (the measured fast
     path for clean corpora)."""
-    from pynomaly_spark.checks import _hash_dup_candidates
-
     df = _dup_table(spark, 10_000)
-    caches = []
+    cand_hashes, cand = _cand_rows(df)
     try:
-        cand = _hash_dup_candidates(df, persisted_out=caches)
         assert cand.count() == 10_000
         plan = cand._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan, plan
     finally:
-        for c in caches:
-            c.unpersist()
+        cand_hashes.unpersist()
+
+
+def _sorted_rows(frame):
+    pdf = frame.toPandas()
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def test_bounded_joins_shuffle_side_gives_same_verdicts(
+    spark, code_tables, monkeypatch
+):
+    """With the broadcast bound at 0 every bounded join (uniqueness
+    candidates, sha phase 2, fused join-backs) takes its shuffle side;
+    the planted-defect suite must give the same metrics and violations
+    as with the default bound.  The oracle is corrupted on two rows so
+    that sha phases 1 and 2 run."""
+    import pandas as pd
+
+    from pynomaly_spark import checks
+
+    files, commits, oracle, _ = code_tables
+    tampered = ["src/orphan/file_0.py", "src/python/mod_0/file_0.py"]
+    bad_oracle = oracle.withColumn(
+        "content_sha",
+        F.when(F.col("path").isin(tampered), F.sha2(F.lit("x"), 256))
+        .otherwise(F.col("content_sha")),
+    )
+
+    def run():
+        res = run_suite(files, _suite(), commits=commits, sha_oracle=bad_oracle)
+        try:
+            return _sorted_rows(res.metrics), _sorted_rows(res.violations)
+        finally:
+            res.unpersist()
+
+    metrics, violations = run()
+    sha = violations[violations.check_name.str.startswith("sha256_invariant")]
+    assert sorted(sha.path) == sorted(tampered)
+    monkeypatch.setattr(checks, "_BROADCAST_ROWS_MAX", 0)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        metrics_shuffled, violations_shuffled = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    pd.testing.assert_frame_equal(metrics, metrics_shuffled)
+    pd.testing.assert_frame_equal(violations, violations_shuffled)
 
 
 def test_psi_drift_check_flags_shifted_partition(spark):
@@ -570,3 +618,33 @@ def test_proportion_control_suite_check(spark):
             CheckSuite(checks=[ProportionControl("length(content)")]),
             partition_expr=F.col("lang"),
         )
+
+
+def test_functional_dependency_null_lhs_is_not_a_key(spark):
+    """Embedded-uniqueness NULL semantics: rows with a NULL lhs are not
+    checked, so a partition whose only disagreement is two NULL-path
+    rows under different repos passes with 0.  Every partition's metric
+    equals the number of profiling.fd_check violators on its rows."""
+    from pynomaly_spark.checks import FunctionalDependency
+    from pynomaly_spark.profiling import fd_check
+
+    rows = [("repo_a", f"src/f{i}.py", f"c{i}", "clean", "x") for i in range(20)]
+    rows += [("repo_b", f"lib/g{i}.py", f"d{i}", "dirty", "y") for i in range(20)]
+    rows += [("repo_c", "lib/g0.py", "e0", "dirty", "z")]
+    rows += [("repo_d", f"doc/h{i}.md", f"h{i}", "nulls", "w") for i in range(20)]
+    rows += [("repo_d", None, "n0", "nulls", "w"), ("repo_e", None, "n1", "nulls", "w")]
+    files = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    res = run_suite(
+        files,
+        CheckSuite(checks=[FunctionalDependency(("path",), ("repo",))]),
+        partition_expr=F.col("lang"),
+    )
+    m = res.metrics.toPandas().set_index("partition_id")
+    res.unpersist()
+    assert m.loc["nulls"].value == 0.0 and m.loc["nulls"].passed
+    assert m.loc["dirty"].value == 1.0 and not m.loc["dirty"].passed
+    for part in ("clean", "dirty", "nulls"):
+        n = fd_check(files.where(F.col("lang") == part), ["path"], ["repo"]).count()
+        assert m.loc[part].value == n, part

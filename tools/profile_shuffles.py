@@ -18,11 +18,47 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench_scaling import ensure_input, make_pyfiles_zip  # noqa: E402
+
+def make_pyfiles_zip(path: str) -> str:
+    """Package pynomaly_spark for --py-files (the cluster deploy artifact)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        pkg = os.path.join(REPO, "pynomaly_spark")
+        for root, _, names in os.walk(pkg):
+            for n in names:
+                if n.endswith(".py"):
+                    full = os.path.join(root, n)
+                    zf.write(full, os.path.relpath(full, REPO))
+    return path
+
+
+def ensure_input(rows: int) -> str:
+    """Write the ``rows``-row code table once into a cache directory.
+
+    Datagen runs in a SUBPROCESS: an in-process SparkSession's py4j
+    gateway JVM survives spark.stop() for the lifetime of this script,
+    and a leftover datagen JVM would compete with the profiled job.
+    """
+    from pynomaly_spark.datagen_spark import DATAGEN_VERSION
+
+    cache = f"/tmp/pynomaly_bench/code_v{DATAGEN_VERSION}_{rows}"
+    if not os.path.exists(f"{cache}/_DONE"):
+        code = (
+            "import sys; sys.path.insert(0, %r)\n"
+            "from pynomaly_spark.session import get_spark\n"
+            "from pynomaly_spark.datagen_spark import write_code_table_spark\n"
+            "spark = get_spark('profile-datagen')\n"
+            "write_code_table_spark(spark, %r, %d, seed=7)\n"
+            "open(%r + '/_DONE', 'w').write('ok')\n"
+            "spark.stop()\n" % (REPO, cache, rows, cache)
+        )
+        subprocess.run([sys.executable, "-c", code], check=True, timeout=1800)
+    return cache
 
 
 def main() -> None:
