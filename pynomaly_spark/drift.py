@@ -1,14 +1,16 @@
 """LoOP distribution-drift scoring as Spark operators.
 
-Two physical strategies for the same logical op (score every row's local
-outlier probability within its partition group):
+One logical op (score every row's local outlier probability within its
+partition group) with one exact grouped plan, one distributed plan and
+one precomputed-kNN entry point:
 
-* :func:`loop_grouped` — EXACT. One ``groupBy(partition).applyInPandas``
-  stage; the whole per-group pipeline (kNN -> ... -> erf) runs inside one
-  Arrow batch with :mod:`pynomaly_spark.kernel`.  This is the reference
-  semantics bit-for-bit (reference ``fit()``, loop.py:957-991, one fit per
-  group) and the golden-parity path.  One shuffle total (the group
-  exchange).  Right choice while a group fits one worker (<= ~1e6 rows).
+* :func:`loop_grouped` — EXACT. One hash ``repartition`` on the group
+  keys, then ``mapInPandas`` running a pandas groupby per task; each
+  group is one :mod:`pynomaly_spark.kernel` fit (kNN -> ... -> erf).
+  This is the reference semantics bit-for-bit (reference ``fit()``,
+  loop.py:957-991, one fit per group) and the golden-parity path.  One
+  shuffle total, and one Arrow stream per task rather than one frame
+  per group.  Right choice while a group fits one worker (<= ~1e6 rows).
 
 * :func:`loop_distributed` — SCALABLE. Pure DataFrame composition:
   grid-bucketed kNN self-join (:mod:`pynomaly_spark.knn`), array math for
@@ -21,7 +23,8 @@ outlier probability within its partition group):
 
 * :func:`loop_from_knn_table` — the precomputed-kNN entry point (custom
   distance metrics), mirroring the reference's distance-matrix mode
-  (loop.py:974-975 skips ``_distances``).
+  (loop.py:974-975 skips ``_distances``).  Same grouped plan as
+  :func:`loop_grouped`, with the kernel's post-kNN stages per group.
 
 Groups smaller than ``n_neighbors + 1`` are GATED, not crashed: their rows
 come back with ``gated = true`` and null scores, and the constraint layer
@@ -52,7 +55,6 @@ from .knn import knn_self_join
 
 __all__ = [
     "loop_grouped",
-    "loop_grouped_map",
     "loop_distributed",
     "loop_from_knn_table",
     "LOOP_OUTPUT_SCHEMA",
@@ -74,7 +76,7 @@ LOOP_OUTPUT_SCHEMA = StructType(
 
 def _pid_str(value) -> str:
     """Null partition keys surface as NaN through Arrow; normalize to
-    'None' so both grouped paths emit the same id for null groups."""
+    'None' so a null group gets a stable string id."""
     try:
         if value is None or pd.isna(value):
             return "None"
@@ -170,6 +172,33 @@ def _score_group(
     return out
 
 
+def _map_groups(slim: DataFrame, keys: list, out_schema: StructType, body):
+    """ONE hash repartition on ``keys``, then ``mapInPandas`` running a
+    pandas groupby per task: one Arrow stream per TASK, not one frame
+    per GROUP (the per-invocation framing cost that dominates thousands
+    of small salted sub-fits).  Groups never span tasks (hash
+    co-location).  ``body(g, pid)`` returns one group's output frame.
+    """
+    out_cols = [f.name for f in out_schema.fields]
+
+    def run(batches):
+        chunks = list(batches)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        if not len(pdf):
+            return
+        # dropna=False: null group keys must be scored (as pid 'None') —
+        # pandas' default silently drops them (round-2 review finding)
+        outs = [
+            body(g, _pid_str(key[0] if isinstance(key, tuple) else key))
+            for key, g in pdf.groupby(keys, sort=False, dropna=False)
+        ]
+        yield pd.concat(outs, ignore_index=True)[out_cols]
+
+    return slim.repartition(*keys).mapInPandas(run, out_schema)
+
+
 def loop_grouped(
     df: DataFrame,
     n_neighbors: int = 10,
@@ -182,7 +211,8 @@ def loop_grouped(
     feature_cols: Optional[list] = None,
     exact_tiebreak: bool = False,
 ) -> DataFrame:
-    """Exact per-group LoOP via one grouped Arrow UDF stage.
+    """Exact per-group LoOP: one kernel fit per group, all groups of a
+    task in one Arrow stream (:func:`_map_groups`).
 
     ``exact_tiebreak``: sort each group by ``id_col`` and select kNN
     neighbors by ``(distance, id)`` lexicographic order
@@ -207,85 +237,25 @@ def loop_grouped(
     and each sub-group is scored independently — the documented at-scale
     approximation for skewed hot partitions (see
     :func:`pynomaly_spark.skew.with_salt`).  The emitted ``partition_id``
-    stays the ORIGINAL partition value.
+    stays the ORIGINAL partition value.  Per-task memory is
+    total_rows/shuffle_partitions plus group skew, so keep salting on
+    for hot partitions.
     """
     k, ext = int(n_neighbors), int(extent)
     carry = list(carry_cols or [])
     fcols = list(feature_cols or [])
-
-    out_schema = StructType(
-        LOOP_OUTPUT_SCHEMA.fields
-        + [df.schema[c] for c in carry]
-    )
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = _pid_str(pdf[partition_col].iloc[0])
-        return _score_group(
-            pdf, pid, k, ext, id_col, features_col, fcols, carry, exact_tiebreak
-        )
-
-    slim = _slim(df, id_col, partition_col, features_col, fcols, carry, salt_col)
-    group_keys = [partition_col] + ([salt_col] if salt_col else [])
-    return slim.groupBy(*group_keys).applyInPandas(
-        score_group, schema=out_schema
-    )
-
-
-def loop_grouped_map(
-    df: DataFrame,
-    n_neighbors: int = 10,
-    extent: int = 3,
-    partition_col: str = "partition_id",
-    features_col: str = "features",
-    id_col: str = "row_id",
-    carry_cols: Optional[list] = None,
-    salt_col: Optional[str] = None,
-    feature_cols: Optional[list] = None,
-) -> DataFrame:
-    """Same logical op as :func:`loop_grouped`, different physical plan:
-    ONE hash repartition on the group keys, then ``mapInPandas`` running
-    a pandas groupby per task — one Arrow stream per TASK instead of one
-    per GROUP.
-
-    With salted 1000-row sub-fits a million rows means ~1000 tiny
-    groups, and applyInPandas pays per-group Arrow framing for each;
-    this path is 2.7x faster there (measured, identical scores to
-    1e-12).  Groups never span tasks (hash co-location); per-task
-    memory is total_rows/shuffle_partitions plus group skew, so keep
-    the salted path on for hot partitions.  The grouped path remains
-    the golden-parity reference implementation.
-    """
-    k, ext = int(n_neighbors), int(extent)
-    carry = list(carry_cols or [])
-    fcols = list(feature_cols or [])
-    keys = [partition_col] + ([salt_col] if salt_col else [])
-
     out_schema = StructType(
         LOOP_OUTPUT_SCHEMA.fields + [df.schema[c] for c in carry]
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            return
-        outs = []
-        # dropna=False: null group keys must be scored (as pid 'None'),
-        # exactly like the grouped path — pandas' default silently drops
-        # them (round-2 review finding)
-        for key, g in pdf.groupby(keys, sort=False, dropna=False):
-            pid = _pid_str(key[0] if isinstance(key, tuple) else key)
-            outs.append(
-                _score_group(g, pid, k, ext, id_col, features_col, fcols, carry)
-            )
-        if outs:
-            yield pd.concat(outs, ignore_index=True)[out_cols]
+    def body(g: pd.DataFrame, pid: str) -> pd.DataFrame:
+        return _score_group(
+            g, pid, k, ext, id_col, features_col, fcols, carry, exact_tiebreak
+        )
 
     slim = _slim(df, id_col, partition_col, features_col, fcols, carry, salt_col)
-    return slim.repartition(*keys).mapInPandas(run, out_schema)
+    keys = [partition_col] + ([salt_col] if salt_col else [])
+    return _map_groups(slim, keys, out_schema, body)
 
 
 def loop_from_knn_table(
@@ -305,11 +275,10 @@ def loop_from_knn_table(
     """
     k, ext = int(n_neighbors), int(extent)
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = str(pdf[partition_col].iloc[0])
-        row_ids = pdf[id_col].to_numpy()
-        d = np.stack(pdf[dists_col].to_numpy()).astype(np.float64)
-        nbr = np.stack(pdf[ids_col].to_numpy()).astype(np.int64)
+    def body(g: pd.DataFrame, pid: str) -> pd.DataFrame:
+        row_ids = g[id_col].to_numpy()
+        d = np.stack(g[dists_col].to_numpy()).astype(np.float64)
+        nbr = np.stack(g[ids_col].to_numpy()).astype(np.int64)
         pos = {rid: i for i, rid in enumerate(row_ids.tolist())}
         local = np.vectorize(pos.__getitem__, otypes=[np.int64])(nbr)
         res = kernel.loop_from_knn(d, local, k, extent=ext)
@@ -321,23 +290,15 @@ def loop_from_knn_table(
         F.col(dists_col),
         F.col(ids_col),
     )
-    return slim.groupBy(partition_col).applyInPandas(
-        score_group, schema=LOOP_OUTPUT_SCHEMA
-    )
+    return _map_groups(slim, [partition_col], LOOP_OUTPUT_SCHEMA, body)
 
 
 def _erf_udf():
-    try:
-        from scipy.special import erf as _erf  # pragma: no cover
+    """Arrow UDF over the kernel's erf (scipy when importable, else a
+    vectorized ``math.erf``; resolved once in :mod:`kernel`)."""
 
-        def _apply(s: pd.Series) -> pd.Series:
-            return pd.Series(_erf(s.to_numpy()))
-
-    except ImportError:
-        _erf_vec = np.vectorize(math.erf, otypes=[np.float64])
-
-        def _apply(s: pd.Series) -> pd.Series:
-            return pd.Series(_erf_vec(s.to_numpy(dtype=np.float64)))
+    def _apply(s: pd.Series) -> pd.Series:
+        return pd.Series(kernel._erf_vec(s.to_numpy(dtype=np.float64)))
 
     return F.pandas_udf(_apply, DoubleType())
 

@@ -547,7 +547,8 @@ def loop_scores_tied(
     order of the neighborhood EV when an exact distance tie spans
     several distinct vectors (equal-value reordering there is absorbed
     by callers' 6-dp rounding).  Requires position order == external id
-    order (the :func:`pynomaly_spark.drift.loop_grouped` sort) and
+    order (the ``exact_tiebreak`` id sort in
+    :func:`pynomaly_spark.drift.loop_grouped`) and
     NaN-free features (falls back to the row-level path otherwise).
     """
     pts = _as_matrix(points)

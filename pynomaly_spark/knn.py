@@ -1,26 +1,17 @@
 """Distributed kNN self-join (grid-bucketed).
 
 For drift groups too large for one worker's memory, the engine quantizes
-the first ``n_grid_dims`` feature dimensions onto a grid of ``cell_size``
-and resolves neighbors cell-locally.  Two physical strategies:
+the first ``_GRID_DIMS`` feature dimensions onto a grid of ``cell_size``
+and resolves neighbors cell-locally in ONE shuffle: every row is
+replicated to its 3^D neighboring cells (a slim ``(id, features)``
+projection, so the exchange moves ~3^D x the projected input, NOT the
+pair blow-up), then each cell group computes its probes' kNN with
+vectorized numpy inside ``applyInPandas`` (Arrow batches; chunked/blocked
+matmuls, no per-row Python math).  This is 20-50x faster than per-pair
+JVM expression evaluation on dense data: the pair count is occupancy-
+quadratic, and numpy does those FLOPs at matmul speed.
 
-* ``strategy="cells"`` (default) — ONE shuffle: every row is replicated
-  to its 3^D neighboring cells (a slim ``(id, features)`` projection, so
-  the exchange moves ~3^D x the projected input, NOT the pair blow-up),
-  then each cell group computes its probes' kNN with vectorized numpy
-  inside ``applyInPandas`` (Arrow batches; chunked/blocked matmuls, no
-  per-row Python math).  This is 20-50x faster than per-pair JVM
-  expression evaluation on dense data: the pair count is occupancy-
-  quadratic, and numpy does those FLOPs at matmul speed.
-
-* ``strategy="sql"`` — Catalyst-only: explode probe cells, shuffle-join
-  on cell id, per-pair Euclidean via ``zip_with``/``aggregate``, radius
-  prune, single-aggregation top-k
-  (``slice(array_sort(collect_list(struct(dist, id))))``).  No Python at
-  all, but every pair pays an interpreted higher-order-function array
-  walk — keep for environments where Arrow UDFs are unavailable.
-
-Both prune candidates to ``dist <= cell_size``; a row that still has
+Candidates are pruned to ``dist <= cell_size``; a row that still has
 >= k neighbors after the prune is EXACT (its true k nearest all lie
 within ``cell_size`` and therefore inside the probed +/-1 cells), and
 under-filled rows are re-probed with a wider cell by
@@ -53,6 +44,8 @@ from pyspark.sql.types import (
 )
 
 __all__ = ["knn_self_join", "estimate_cell_size"]
+
+_GRID_DIMS = 2  # leading feature dimensions quantized onto the grid
 
 
 def _part_key(v) -> str:
@@ -97,7 +90,6 @@ def estimate_cell_size(
     k: int,
     sample_rows: int = 4000,
     total_rows: int | None = None,
-    n_grid_dims: int = 2,
     target_short_rows: int = 8192,
 ) -> float:
     """Estimate a cell size ~ the true kNN radius from a measured sample.
@@ -176,9 +168,7 @@ def knn_self_join(
     id_col: str = "row_id",
     partition_col: str | None = None,
     cell_size: float | None = None,
-    n_grid_dims: int = 2,
     max_retries: int = 2,
-    strategy: str = "cells",
     brute_threshold: int = 16384,
     caches_out: list | None = None,
 ) -> DataFrame:
@@ -202,9 +192,8 @@ def knn_self_join(
     if cell_size is None:
         cell_size = estimate_cell_size(df, features_col, k)
 
-    pass_fn = _knn_pass_cells if strategy == "cells" else _knn_pass_sql
-    result = pass_fn(
-        df, k, features_col, id_col, partition_col, cell_size, n_grid_dims
+    result = _knn_pass_cells(
+        df, k, features_col, id_col, partition_col, cell_size
     )
     if max_retries <= 0:
         return result
@@ -282,14 +271,13 @@ def knn_self_join(
             result = _materialize(kept.unionByName(redo))
             break
         cell_size *= 4.0
-        redo = pass_fn(
+        redo = _knn_pass_cells(
             redo_probe,
             k,
             features_col,
             id_col,
             partition_col,
             cell_size,
-            n_grid_dims,
             build_df=df.select(*base_keep),
         )
         kept = result.join(
@@ -580,15 +568,13 @@ def _knn_pass_cells(
     id_col: str,
     partition_col: str | None,
     cell_size: float,
-    n_grid_dims: int,
     build_df: DataFrame | None = None,
 ) -> DataFrame:
     """One cell-cogrouped probe/build pass: one shuffle, numpy per cell.
 
     Probes land in their home cell once; build rows are replicated to
     all 3^D neighboring cells, so every probe meets exactly the
-    candidates within +/-1 cell — the same candidate set as the SQL
-    join strategy, without materializing pair rows.
+    candidates within +/-1 cell, without materializing pair rows.
 
     ``id_col`` must be an integral type (engine row ids are xxhash64
     longs): ids travel through the numpy kernel as int64.
@@ -598,7 +584,7 @@ def _knn_pass_cells(
     if dim_count_row is None:  # empty probe side (e.g. routing split)
         return _empty_knn_result(df, id_col, partition_col)
     d_full = int(dim_count_row["d"])
-    dims = min(d_full, n_grid_dims)
+    dims = min(d_full, _GRID_DIMS)
     radius = float(cell_size)
 
     # The cell string is built from GRID COORDINATES ONLY; the partition
@@ -714,113 +700,3 @@ def _knn_pass_cells(
         return pd.DataFrame(out)[[f.name for f in out_schema.fields]]
 
     return both.groupBy(*group_keys).applyInPandas(score_cell, schema=out_schema)
-
-
-def _knn_pass_sql(
-    df: DataFrame,
-    k: int,
-    features_col: str,
-    id_col: str,
-    partition_col: str | None,
-    cell_size: float,
-    n_grid_dims: int,
-    build_df: DataFrame | None = None,
-) -> DataFrame:
-    """One bucketed probe/build pass (probe = ``df``, build = full table)."""
-    build_src = build_df if build_df is not None else df
-    dim_count_row = df.select(F.size(features_col).alias("d")).head()
-    if dim_count_row is None:  # empty probe side
-        return _empty_knn_result(df, id_col, partition_col)
-    dims = min(int(dim_count_row["d"]), n_grid_dims)
-
-    keep = [id_col, features_col] + ([partition_col] if partition_col else [])
-    base = df.select(*keep)
-    build_base = build_src.select(*keep)
-
-    cell_cols = [
-        _cell_expr(features_col, i, cell_size).alias(f"_c{i}") for i in range(dims)
-    ]
-    build = build_base.select(*keep, *cell_cols).withColumn(
-        "_cell", F.concat_ws(":", *[F.col(f"_c{i}") for i in range(dims)])
-    ).drop(*[f"_c{i}" for i in range(dims)])
-
-    # probe side: each row targets its own cell plus all adjacent cells
-    offsets = list(product((-1, 0, 1), repeat=dims))
-    probe_cells = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                *[
-                    (_cell_expr(features_col, i, cell_size) + F.lit(o[i])).cast(
-                        "long"
-                    )
-                    for i in range(dims)
-                ],
-            )
-            for o in offsets
-        ]
-    )
-    probe = base.select(
-        F.col(id_col).alias("_qid"),
-        F.col(features_col).alias("_qf"),
-        *([F.col(partition_col).alias("_qp")] if partition_col else []),
-        F.explode(probe_cells).alias("_cell"),
-    )
-
-    join_keys = ["_cell"] + (["_qp"] if partition_col else [])
-    build_r = build.withColumnRenamed(id_col, "_nid").withColumnRenamed(
-        features_col, "_nf"
-    )
-    if partition_col:
-        build_r = build_r.withColumnRenamed(partition_col, "_qp")
-
-    pairs = probe.join(build_r, on=join_keys, how="inner").where(
-        F.col("_qid") != F.col("_nid")
-    )
-
-    # JVM-side Euclidean distance (whole-stage codegen; no Python)
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with("_qf", "_nf", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    # Radius prune BEFORE the top-k shuffle: any pair farther than
-    # cell_size cannot be a true neighbor of an exactly-resolvable row
-    # (if >= k neighbors lie within cell_size, the true k nearest all lie
-    # within cell_size and hence within the probed +/-1 cells — the
-    # result is EXACT for that row).  Rows left under-filled by the
-    # prune go to the wider-cell retry pass instead of silently keeping
-    # an approximate far neighbor, so the prune improves both accuracy
-    # and shuffle volume (~3x fewer pairs at D=2: ball-vs-box ratio).
-    scored = pairs.select(
-        "_qid",
-        *(["_qp"] if partition_col else []),
-        F.col("_nid"),
-        dist.alias("_dist"),
-    ).where(F.col("_dist") <= F.lit(float(cell_size)))
-
-    # ONE exchange: per-row top-k as an aggregation (sort the bounded
-    # candidate array, slice k) instead of window row_number + regroup —
-    # the round-1 plan shuffled twice (window on _qid, then groupBy on
-    # (_qid, _qp)) and sorted whole reducer partitions.  _qp in the keys
-    # keeps same-id rows of different partitions apart (round-2 ADVICE).
-    agg_keys = ["_qid"] + (["_qp"] if partition_col else [])
-    result = (
-        scored.groupBy(*agg_keys)
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct("_dist", "_nid"))),
-                1,
-                k,
-            ).alias("_pairs")
-        )
-        .select(
-            F.col("_qid").alias(id_col),
-            *([F.col("_qp").alias(partition_col)] if partition_col else []),
-            F.transform("_pairs", lambda s: s["_dist"]).alias("knn_dists"),
-            F.transform("_pairs", lambda s: s["_nid"]).alias("knn_ids"),
-        )
-    )
-    return result

@@ -1827,7 +1827,8 @@ def _emb_drift_loop_sql() -> str:
     with the kernel's guards — the all-equal short-circuit (every plof
     equal to nplof scores 0, kernel._local_outlier_probability) and the
     cluster-size gate (groups of <= n_neighbors rows emit gated=1 with
-    a null score, matching loop_grouped's gated frame).
+    a null score, matching the gated frame drift.loop_grouped emits
+    per group).
     """
     erf = _erf_sql_expr()
     return f"""

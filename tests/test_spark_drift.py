@@ -1,9 +1,9 @@
 """Spark drift-operator parity tests.
 
-The grouped Arrow-UDF path must reproduce the pure-numpy kernel (and
-therefore the reference golden scores) exactly; the distributed Catalyst
-path must match the grouped path; the precomputed-kNN table entry point
-must match the raw-feature path.
+The grouped path (one ``mapInPandas`` stream per task) must reproduce
+the pure-numpy kernel (and therefore the reference golden scores)
+exactly; the distributed Catalyst path must match the grouped path; the
+precomputed-kNN table entry point must match the raw-feature path.
 """
 
 import numpy as np
@@ -180,12 +180,38 @@ def test_salted_grouped_path(spark):
     assert outlier.mean() > inlier.mean() + 0.3
 
 
-def test_map_strategy_matches_grouped(spark):
-    """loop_grouped_map (one Arrow stream per task, pandas groupby) must
-    equal loop_grouped (one Arrow frame per group) exactly — including
-    gated groups, carry columns, salting, and flat feature transport."""
+def _kernel_by_group(pdf, group_cols, k, fcols=None):
+    """Expected scores: one ``kernel.loop_scores`` fit per group of the
+    input frame (rows in id order), or gated (None) when n <= k.  The
+    features are the ``features`` arrays, or the flat ``fcols``."""
+    exp = {}
+    for _, g in pdf.sort_values("row_id").groupby(group_cols, sort=False):
+        if len(g) <= k:
+            exp.update(dict.fromkeys(g.row_id, None))
+            continue
+        if fcols:
+            pts = g[fcols].to_numpy(dtype=np.float64)
+        else:
+            pts = np.stack(g.features.to_numpy())
+        exp.update(zip(g.row_id, kernel.loop_scores(pts, k, 3).scores))
+    return exp
+
+
+def _assert_scores(out, exp):
+    assert len(out) == len(exp) and out.row_id.is_unique
+    for rid, score, gated in zip(out.row_id, out.loop_score, out.gated):
+        if exp[rid] is None:
+            assert gated and (score is None or np.isnan(score))
+        else:
+            assert not gated
+            np.testing.assert_allclose(score, exp[rid], rtol=0, atol=1e-12)
+
+
+def test_grouped_matches_kernel_per_group(spark):
+    """loop_grouped == one kernel fit per group to 1e-12 — including
+    gated groups, carry columns, flat feature transport and salting."""
     from pyspark.sql import functions as F
-    from pynomaly_spark.drift import loop_grouped_map
+    from pynomaly_spark.skew import with_salt
 
     rng = np.random.RandomState(11)
     groups = {
@@ -196,67 +222,110 @@ def test_map_strategy_matches_grouped(spark):
     df = _feature_df(spark, groups).withColumn(
         "tag", F.concat(F.lit("t"), F.col("row_id"))
     )
+    exp = _kernel_by_group(df.toPandas(), ["partition_id"], 10)
 
-    for kwargs in (
-        dict(),
-        dict(carry_cols=["tag"]),
-    ):
-        a = loop_grouped(df, n_neighbors=10, **kwargs)
-        b = loop_grouped_map(df, n_neighbors=10, **kwargs)
-        pa = a.orderBy("row_id").toPandas()
-        pb = b.orderBy("row_id").toPandas()
-        assert list(pa.columns) == list(pb.columns)
-        assert (pa.gated == pb.gated).all()
-        np.testing.assert_allclose(
-            pa.loop_score.to_numpy(dtype=float),
-            pb.loop_score.to_numpy(dtype=float),
-            atol=1e-12,
-        )
-        if "carry_cols" in kwargs:
-            assert (pa.tag == pb.tag).all()
+    out = loop_grouped(df, n_neighbors=10).toPandas()
+    _assert_scores(out, exp)
+    assert set(out.partition_id[out.gated]) == {"tiny"}
 
-    # flat feature columns + salt
+    out = loop_grouped(df, n_neighbors=10, carry_cols=["tag"]).toPandas()
+    _assert_scores(out, exp)
+    assert list(out.columns)[-1] == "tag"
+    assert (out.tag == "t" + out.row_id.astype(str)).all()
+
+    # flat feature columns + salt: each (partition, salt) sub-group is
+    # its own fit, and the emitted partition_id stays the original
+    fcols = ["_f0", "_f1", "_f2"]
     flat = df.select(
         "row_id",
         "partition_id",
-        F.col("features")[0].alias("_f0"),
-        F.col("features")[1].alias("_f1"),
-        F.col("features")[2].alias("_f2"),
+        *[F.col("features")[i].alias(c) for i, c in enumerate(fcols)],
     )
-    from pynomaly_spark.skew import with_salt
-
     salted = with_salt(flat, 100)
-    a = loop_grouped(
-        salted, n_neighbors=10, feature_cols=["_f0", "_f1", "_f2"],
-        salt_col="salt",
-    ).orderBy("row_id").toPandas()
-    b = loop_grouped_map(
-        salted, n_neighbors=10, feature_cols=["_f0", "_f1", "_f2"],
-        salt_col="salt",
-    ).orderBy("row_id").toPandas()
-    np.testing.assert_allclose(
-        a.loop_score.to_numpy(dtype=float),
-        b.loop_score.to_numpy(dtype=float),
-        atol=1e-12,
+    spdf = salted.toPandas()
+    assert spdf.groupby("partition_id").salt.nunique()["b"] > 1
+    out = loop_grouped(
+        salted, n_neighbors=10, feature_cols=fcols, salt_col="salt"
+    ).toPandas()
+    _assert_scores(
+        out, _kernel_by_group(spdf, ["partition_id", "salt"], 10, fcols)
     )
+    assert set(out.partition_id) == set(groups)
 
 
-def test_map_strategy_scores_null_partition_keys(spark):
+def test_grouped_scores_null_partition_keys(spark):
     """Null group keys must be scored (pid 'None'), not silently dropped
     by pandas groupby's dropna default (round-2 review finding)."""
-    from pynomaly_spark.drift import loop_grouped_map
+    from pyspark.sql import functions as F
 
     rng = np.random.RandomState(3)
     groups = {"a": rng.randn(40, 2)}
     df = _feature_df(spark, groups)
-    from pyspark.sql import functions as F
 
     # half the rows get a NULL partition id
     df = df.withColumn(
         "partition_id",
         F.when(F.col("row_id") % 2 == 0, F.col("partition_id")),
     )
-    out = loop_grouped_map(df, n_neighbors=5).toPandas()
+    out = loop_grouped(df, n_neighbors=5).toPandas()
     assert len(out) == 40
     assert set(out.partition_id) == {"a", "None"}
     assert out.loop_score.notna().all()
+
+
+def test_grouped_exact_tiebreak_matches_sorted_kernel(spark):
+    """exact_tiebreak: a tie-heavy group whose ids arrive shuffled over
+    several input partitions scores exactly like the kernel's
+    ``(distance, id)`` tie-break over the rows sorted by id."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.RandomState(17)
+    n, k = 120, 10
+    pts = rng.randint(0, 4, size=(n, 2)).astype(np.float64)  # 16 distinct
+    ids = rng.permutation(10 * n)[:n].astype(np.int64)
+    pdf = pd.DataFrame(
+        {
+            "row_id": ids,
+            "partition_id": "p0",
+            "features": [list(map(float, p)) for p in pts],
+        }
+    )
+    df = spark.createDataFrame(pdf).repartition(5)
+    spread = df.groupBy(F.spark_partition_id()).count().count()
+    assert spread > 1
+    out = loop_grouped(df, n_neighbors=k, exact_tiebreak=True).toPandas()
+    order = np.argsort(ids, kind="stable")
+    exp = kernel.loop_scores(pts[order], k, 3, exact_tiebreak=True)
+    got = out.set_index("row_id").loc[ids[order]]
+    assert not got.gated.any()
+    np.testing.assert_allclose(
+        got.loop_score.to_numpy(dtype=float), exp.scores, rtol=0, atol=1e-12
+    )
+    np.testing.assert_allclose(
+        got.prob_distance_ev.to_numpy(dtype=float),
+        exp.prob_distance_ev,
+        rtol=0,
+        atol=1e-12,
+    )
+
+
+def test_grouped_plan_is_one_map_stream(spark):
+    """loop_grouped plans one MapInPandas over a hash exchange, never a
+    per-group FlatMapGroupsInPandas (one Arrow frame per group)."""
+    df = _feature_df(spark, {"a": np.random.RandomState(1).rand(30, 2)})
+    for scored in (
+        loop_grouped(df, 10),
+        loop_from_knn_table(
+            df.selectExpr(
+                "row_id",
+                "partition_id",
+                "features AS knn_dists",
+                "array(row_id, row_id) AS knn_ids",
+            ),
+            2,
+        ),
+    ):
+        plan = scored._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "hashpartitioning(partition_id" in plan
