@@ -6,9 +6,10 @@ bench runs with the same posture:
 * AQE on (runtime re-planning, skew-join splitting, partition coalescing)
   — the engine's answer to hot repo/lang keys alongside explicit salting
   (:mod:`pynomaly_spark.skew`).
-* Arrow enabled and batch-sized for the grouped LoOP UDF: the kernel's
-  memory is O(batch * k), so cap Arrow batches instead of letting a whole
-  huge group arrive as one slab.
+* Arrow enabled, with batches capped at 10k rows.  The cap sizes each
+  Arrow message, not the drift kernel's memory: ``drift._map_groups``
+  concatenates all of a task's batches before its pandas ``groupby``, so
+  a drift task holds O(rows per task).
 * shuffle partitions sized to cores for local runs; on a real cluster the
   validate job (:mod:`pynomaly_spark.jobs.validate_job`) overrides this to
   ~2-3x total executor cores.
@@ -45,7 +46,8 @@ _ENGINE_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    # grouped applyInPandas: spill-safe group assembly
+    # stream buffer between the JVM and each pandas-UDF worker (the
+    # drift mapInPandas stream)
     "spark.sql.execution.pandas.udf.buffer.size": str(64 * 1024 * 1024),
     # parquet scan: keep splits near the default 128m so partition counts
     # track data volume, not file counts

@@ -636,10 +636,16 @@ def readability(df: DataFrame, text_col: str = "text") -> DataFrame:
             "n_syllable_groups": F.when(t.isNotNull(), y),
         }
     )
+    # The numerator is computed in decimal(38,0): in BIGINT its
+    # 206835·s·w·10⁶ term overflows (and raises under ANSI) once
+    # s·w > ~4.46e7.  The quotient fits a long; ``div`` truncates toward
+    # zero.
     f6 = F.expr(
         "CASE WHEN n_words > 0 AND n_sentences > 0 THEN"
-        " ((206835 * n_sentences * n_words - 1015 * n_words * n_words"
-        "   - 84600 * n_syllable_groups * n_sentences) * 1000000)"
+        " ((206835 * CAST(n_sentences AS DECIMAL(38,0)) * n_words"
+        "   - 1015 * CAST(n_words AS DECIMAL(38,0)) * n_words"
+        "   - 84600 * CAST(n_syllable_groups AS DECIMAL(38,0)) * n_sentences)"
+        "  * 1000000)"
         " div (1000 * n_sentences * n_words) ELSE NULL END"
     ).cast("long")
     return out.withColumn("flesch_6dp", f6)

@@ -1,5 +1,7 @@
 """Constraint-engine tests against exactly-counted planted defects."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -648,3 +650,139 @@ def test_functional_dependency_null_lhs_is_not_a_key(spark):
     for part in ("clean", "dirty", "nulls"):
         n = fd_check(files.where(F.col("lang") == part), ["path"], ["repo"]).count()
         assert m.loc[part].value == n, part
+
+
+def _one_metric_row_per_partition(files, partition_expr, commits, oracle):
+    """Run the default suite + RowInvariant under ``partition_expr``;
+    every (check, metric) pair must have exactly one row for each
+    distinct partition id of the input, NULL included."""
+    suite = CheckSuite.default()
+    suite.checks.append(RowInvariant())
+    res = run_suite(
+        files, suite, commits=commits, sha_oracle=oracle, partition_expr=partition_expr
+    )
+    try:
+        metrics = res.metrics.toPandas()
+        schema = res.unified().schema
+    finally:
+        res.unpersist()
+    parts = sorted(
+        (r[0] for r in files.select(partition_expr).distinct().collect()),
+        key=lambda p: (p is not None, p),
+    )
+    assert None in parts and len(parts) > 2
+    for (check, metric), fam in metrics.groupby(["check_name", "metric"]):
+        got = sorted(
+            (None if p is None or p != p else p for p in fam.partition_id),
+            key=lambda p: (p is not None, p),
+        )
+        assert got == parts, (check, metric)
+    return schema
+
+
+def test_null_partition_ids_get_one_metric_row_each(spark, code_tables):
+    """A partition expression that yields NULL: the NULL partition is in
+    the universe, so every sparse metric still emits a row for it, and
+    ``partition_id`` stays nullable in ``unified()``."""
+    files, commits, oracle, _ = code_tables
+    expr = F.when(F.col("lang") != "python", F.col("lang"))
+    schema = _one_metric_row_per_partition(files, expr, commits, oracle)
+    assert schema["partition_id"].dataType.simpleString() == "string"
+    assert schema["partition_id"].nullable
+
+
+def test_non_string_partition_expr_keeps_its_type(spark, code_tables):
+    """An integer partition expression (NULL for NULL langs): the
+    universe keeps the expression's type, so the metric rows join it
+    and ``partition_id`` comes out as an int."""
+    files, commits, oracle, _ = code_tables
+    schema = _one_metric_row_per_partition(files, F.length("lang"), commits, oracle)
+    assert schema["partition_id"].dataType.simpleString() == "int"
+    assert schema["partition_id"].nullable
+
+
+
+def _fields(schema):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema]
+
+
+def test_empty_input_keeps_the_unified_schema(spark, code_tables):
+    """Zero input rows means an empty partition universe (an ``array()``
+    with no literals has no element type of its own): the suite must
+    still plan, emit no rows, and keep the unified schema, including a
+    non-nullable ``partition_id`` under the default partition expr.  A
+    metrics-only suite falls back to an empty violation relation in the
+    violation schema."""
+    files, commits, oracle, _ = code_tables
+    empty = files.limit(0)
+    suite = CheckSuite.default()
+    suite.checks.append(RowInvariant())
+    res = run_suite(empty, suite, commits=commits, sha_oracle=oracle)
+    try:
+        u = res.unified()
+        assert u.count() == 0
+        assert _fields(u.schema) == [
+            ("kind", "string", False),
+            ("partition_id", "string", False),
+            ("check_name", "string", True),
+            ("metric", "string", True),
+            ("value", "double", True),
+            ("threshold", "double", True),
+            ("passed", "boolean", True),
+            ("row_id", "bigint", True),
+            ("repo", "string", True),
+            ("path", "string", True),
+            ("commit", "string", True),
+            ("detail", "string", True),
+            ("loop_score", "double", True),
+        ]
+    finally:
+        res.unpersist()
+
+    res = run_suite(empty, CheckSuite(checks=[NullRate("content", 0.01)]))
+    assert res.unified().count() == 0
+    assert _fields(res.violations.schema) == [
+        ("partition_id", "string", True),
+        ("check_name", "string", True),
+        ("row_id", "bigint", True),
+        ("repo", "string", True),
+        ("path", "string", True),
+        ("commit", "string", True),
+        ("detail", "string", True),
+        ("loop_score", "double", True),
+    ]
+
+
+def test_final_pass_starts_no_python_scan(spark, code_tables, tmp_path):
+    """The fused final pass reads the partition universe as a JVM
+    constant: after a staged planted-defect suite pass, the executed
+    plan of ``unified()`` has no ``ExistingRDD`` scan (a
+    ``createDataFrame`` list, which starts Python workers on every
+    read), and its only Python operator is the drift ``MapInPandas``."""
+    files, commits, oracle, _ = code_tables
+    bad_oracle = oracle.withColumn(
+        "content_sha",
+        F.when(F.col("path") == "src/orphan/file_0.py", F.sha2(F.lit("x"), 256))
+        .otherwise(F.col("content_sha")),
+    )
+    res = run_suite(
+        files,
+        _suite(),
+        commits=commits,
+        sha_oracle=bad_oracle,
+        stage_dir=str(tmp_path / "stage"),
+    )
+    try:
+        u = res.unified()
+        u.collect()  # AQE only materializes final plans on execution
+        plan = u._jdf.queryExecution().executedPlan().toString()
+    finally:
+        res.unpersist()
+    assert "ExistingRDD" not in plan
+    ops = {
+        m.group(1)
+        for m in re.finditer(r"^[\s:+\-|]*(?:\*\(\d+\)\s+)?(\w+)", plan, re.M)
+    }
+    assert {op for op in ops if re.search("Python|Pandas|Arrow", op)} == {
+        "MapInPandas"
+    }

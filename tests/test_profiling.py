@@ -745,6 +745,68 @@ def test_readability_exact_rational_score(spark):
         readability(df, "nope")
 
 
+def _flesch_6dp(text):
+    """Reference Flesch score of ``text`` in Python integers: the
+    ``readability`` counts, then the rational score truncated toward
+    zero at 6 dp."""
+    import re
+
+    w = sum(1 for x in re.split(r" +", text) if x != "")
+    s = sum(1 for x in re.split(r"[.!?]+", text) if x.strip(" ") != "")
+    y = len(re.findall(r"[aeiouy]+", text.lower()))
+    num = (206835 * s * w - 1015 * w * w - 84600 * y * s) * 1000000
+    den = 1000 * s * w
+    q = abs(num) // den
+    return w, s, (q if num >= 0 else -q)
+
+
+def test_readability_long_documents_do_not_overflow(spark):
+    """Property: ``flesch_6dp`` equals the exact integer score on
+    documents whose s·w exceeds 4.5e7, where a BIGINT numerator
+    (206835·s·w·10^6 > 2^63) overflows and raises under ANSI mode, and
+    on short documents beside them in the same frame."""
+    import random
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from pynomaly_spark.textops import readability
+
+    words = ["a", "The", "cat", "rhythm", "nth", "queue", "strength", "Eye"]
+    ends = [".", "!", "?", "...", "?!"]
+
+    @given(
+        seed=st.integers(min_value=0, max_value=2**32 - 1),
+        n_sent=st.integers(min_value=6800, max_value=9000),
+        per_sent=st.integers(min_value=1, max_value=3),
+    )
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    def prop(seed, n_sent, per_sent):
+        rng = random.Random(seed)
+
+        def doc(n, k):
+            return " ".join(
+                " ".join(rng.choice(words) for _ in range(k)) + rng.choice(ends)
+                for _ in range(n)
+            )
+
+        texts = [doc(n_sent, per_sent), doc(n_sent, 1), doc(3, 4), doc(1, 1)]
+        w, s, _ = _flesch_6dp(texts[1])
+        assert s * w > 45_000_000
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+        got = {
+            r["i"]: (r["n_words"], r["n_sentences"], r["flesch_6dp"])
+            for r in readability(df).collect()
+        }
+        assert got == {i: _flesch_6dp(t) for i, t in enumerate(texts)}
+
+    prop()
+
+
 def test_part_abc_two_level_cumulative(spark, tmp_path):
     """Hand-built revenues 50/30/15/5 (parts 1..4): cumulative shares
     50/80/95/100 -> classes A, A, B, C under the <=80 / <=95
