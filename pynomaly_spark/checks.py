@@ -15,7 +15,8 @@ Every check family has one builder:
   aggregates (metrics only);
 * uniqueness (V8) = hash-candidate prefilter + one ``groupBy(partition,
   keys)`` pass;
-* referential integrity (V9) = broadcast ``left_anti`` join;
+* referential integrity (V9) = ``left_anti`` join onto the key table
+  (the planner broadcasts it or shuffles by its size estimate);
 * row invariant (V11) = order-independent checksums, then a narrow
   candidate join only when they differ;
 * distribution drift (V2-gated LoOP) = :func:`drift_scores` over
@@ -30,6 +31,11 @@ A builder returns an :class:`_Out`: metric rows still to emit, violation
 frames, and the hits the fused violation pass joins back.  A new family
 adds a builder and an entry in ``_FAMILIES``; :func:`run_suite`, the
 executor, owns the job sequence and never changes.
+
+The FD and p-chart decisions are the library's own
+(:mod:`pynomaly_spark.profiling`), and every join on ``partition_id``
+is null-safe (:func:`pynomaly_spark.knn._ns_eq`): a NULL partition id is
+a partition like any other.
 
 Outputs: ``partition_metrics(partition_id, check_name, metric, value,
 threshold, passed)`` and ``violations(partition_id, check_name, row_id,
@@ -51,6 +57,9 @@ from typing import Callable, List, NamedTuple, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
+
+from .knn import _ns_eq
+from .profiling import _check_k, _fd_violating_keys, _non_null, _pooled_flag
 
 __all__ = [
     "NullRate",
@@ -116,6 +125,15 @@ class Cardinality:
 
 @dataclass(frozen=True)
 class Uniqueness:
+    """No two rows of a partition share ``keys``; the metric counts the
+    rows beyond the first of each duplicate group, 0 passes.
+
+    NULL semantics follow embedded uniqueness (*Entity Integrity,
+    Referential Integrity, and Query Optimization with Embedded
+    Uniqueness Constraints*, ICDE 2019): a key with a NULL component is
+    not a key, so such rows are never duplicates.
+    """
+
     keys: tuple = ("repo", "path", "commit")
 
     @property
@@ -125,6 +143,14 @@ class Uniqueness:
 
 @dataclass(frozen=True)
 class ReferentialIntegrity:
+    """Every row's ``keys`` occur in the ``commits`` key table; the
+    metric counts the orphan rows, 0 passes.
+
+    A foreign key with a NULL component is satisfied (SQL simple match,
+    as in embedded uniqueness, ICDE 2019), so such rows are never
+    orphans.
+    """
+
     keys: tuple = ("repo", "commit")
 
     @property
@@ -210,6 +236,11 @@ class ProportionControl:
     in decimal(38,0)); the reported metric value is the partition's
     rate.  Opt-in (not in ``default()``) so the published bench suite
     is unchanged.  Metrics-only.
+
+    NULLs: a NULL partition id is charted like any other partition, and
+    a row whose predicate is NULL counts toward ``n`` as a non-hit (a
+    partition whose predicate is NULL on every row has no rate and
+    passes).
     """
 
     predicate: str = "content IS NULL"
@@ -391,11 +422,11 @@ def _cand_semi_join(
 ) -> DataFrame:
     """Rows of ``enriched`` whose hash key is one of the ``n_cand``
     duplicate candidates (a map-only probe when the set is small)."""
-    return enriched.join(
-        _bounded(cand_hashes, n_cand),
-        on=["partition_id", "row_id"],
-        how="leftsemi",
+    right = cand_hashes.select(
+        F.col("partition_id").alias("_c_pid"), F.col("row_id").alias("_c_rid")
     )
+    cond = _ns_eq(enriched, right, [("partition_id", "_c_pid"), ("row_id", "_c_rid")])
+    return enriched.join(_bounded(right, n_cand), cond, "leftsemi")
 
 
 def default_partition_expr():
@@ -515,13 +546,13 @@ class _Metrics(NamedTuple):
 class _Hit(NamedTuple):
     """Violation rows the fused pass finds by left-joining the small,
     primed ``frame`` (``rows`` long) onto ``enriched`` on ``keys``; a
-    row matches when its keys equal one of ``frame``'s.  ``score`` names
-    the ``frame`` column reported as ``loop_score``."""
+    row matches when its keys equal one of ``frame``'s, NULL equal to
+    NULL.  ``score`` names the ``frame`` column reported as
+    ``loop_score``."""
 
     frame: DataFrame
     rows: int
     keys: tuple
-    null_safe: bool
     check_name: str
     detail: str
     score: Optional[str] = None
@@ -718,7 +749,10 @@ def _metric_rows(
     re-scan of the big relations, and a partition the aggregate skipped
     still gets an explicit verdict row."""
     if universe is not None:
-        frame = universe.join(F.broadcast(frame), on="partition_id", how="left")
+        cond = _ns_eq(universe, frame, [("partition_id", "partition_id")])
+        frame = universe.join(F.broadcast(frame), cond, "left").drop(
+            frame["partition_id"]
+        )
     structs = [
         F.struct(
             F.lit(name).alias("check_name"),
@@ -792,13 +826,7 @@ def _fused_violations(enriched: DataFrame, hits: List[_Hit]) -> DataFrame:
             *[F.col(k).alias(p + k) for k in h.keys],
             (F.col(h.score) if h.score else F.lit(True)).alias(p + "hit"),
         )
-        eqs = [
-            F.col(k).eqNullSafe(F.col(p + k))
-            if h.null_safe
-            else F.col(k) == F.col(p + k)
-            for k in h.keys
-        ]
-        cond = functools.reduce(Column.__and__, eqs)
+        cond = _ns_eq(v, right, [(k, p + k) for k in h.keys])
         v = v.join(_bounded(right, h.rows), cond, "left").drop(
             *[p + k for k in h.keys]
         )
@@ -854,8 +882,7 @@ def _enrich(src: DataFrame, checks: list) -> DataFrame:
         elif isinstance(chk, ProportionControl):
             # predicate references RAW columns -> must run in the heavy
             # pass (enriched drops them); validate its type against src
-            if chk.k_den <= 0 or chk.k_num < 0:
-                raise ValueError("ProportionControl: k must be a ratio >= 0")
+            _check_k("ProportionControl", chk.k_num, chk.k_den)
             try:
                 pc_type = src.select(
                     F.expr(chk.predicate).alias("_pc")
@@ -983,21 +1010,16 @@ def _psi_drift(ctx: _Ctx, chk: PsiDrift) -> _Out:
 
 
 def _functional_dependency(ctx: _Ctx, chk: FunctionalDependency) -> _Out:
-    """Violating lhs keys per partition, over rows with a non-null lhs.
+    """Violating lhs keys per partition: the
+    :func:`~pynomaly_spark.profiling.fd_check` core, counted.
 
-    A partition without a row (no keys at all) vacuously holds: 0.
+    A partition without a violating key holds: 0.
     """
-    keyed = ctx.enriched
-    for c in chk.lhs:
-        keyed = keyed.where(F.col(c).isNotNull())
-    pairs = keyed.groupBy("partition_id", *chk.lhs, *chk.rhs).agg(
-        F.count(F.lit(1)).alias("_fd_pn")
+    viol = _fd_violating_keys(
+        ctx.enriched, list(chk.lhs), list(chk.rhs), by=("partition_id",)
     )
-    keys = pairs.groupBy("partition_id", *chk.lhs).agg(
-        F.count(F.lit(1)).alias("_fd_nrhs")
-    )
-    per_part = keys.groupBy("partition_id").agg(
-        F.sum((F.col("_fd_nrhs") > 1).cast("long")).alias("_fd_nviol")
+    per_part = viol.groupBy("partition_id").agg(
+        F.count(F.lit(1)).alias("_fd_nviol")
     )
     n = F.coalesce(F.col("_fd_nviol"), F.lit(0))
     row = (
@@ -1011,41 +1033,23 @@ def _functional_dependency(ctx: _Ctx, chk: FunctionalDependency) -> _Out:
 
 
 def _proportion_control(ctx: _Ctx, chk: ProportionControl) -> _Out:
-    """Each partition's predicate rate vs the pooled rate, decided in
-    integers: out of control iff
-    ``k_den²·(r·N − R·n)² > k_num²·R·(N−R)·n`` in decimal(38,0)."""
-    dec = "decimal(38,0)"
+    """Each partition's predicate rate vs the pooled rate, flagged by
+    the :func:`~pynomaly_spark.profiling.p_chart` test.  Unlike
+    ``p_chart``, every partition (NULL included) and every row (a NULL
+    predicate is a non-hit) is counted."""
     per = ctx.enriched.groupBy("partition_id").agg(
-        F.count(F.lit(1)).cast("long").alias("_pc_n"),
-        F.sum(F.col(_pc_alias(chk)).cast("long")).cast("long").alias("_pc_r"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.col(_pc_alias(chk)).cast("long")).cast("long").alias("hits"),
     )
-    tot = per.agg(
-        F.sum("_pc_n").cast("long").alias("_pc_tn"),
-        F.sum("_pc_r").cast("long").alias("_pc_tr"),
-    )
-    diff = (
-        F.col("_pc_r").cast(dec) * F.col("_pc_tn").cast(dec)
-        - F.col("_pc_tr").cast(dec) * F.col("_pc_n").cast(dec)
-    )
-    lhs = F.lit(chk.k_den * chk.k_den).cast(dec) * diff * diff
-    rhs = (
-        F.lit(chk.k_num * chk.k_num).cast(dec)
-        * F.col("_pc_tr").cast(dec)
-        * (F.col("_pc_tn").cast(dec) - F.col("_pc_tr").cast(dec))
-        * F.col("_pc_n").cast(dec)
-    )
-    flagged = per.crossJoin(F.broadcast(tot)).select(
-        "partition_id",
-        (F.col("_pc_r").cast("double") / F.col("_pc_n")).alias("_pc_rate"),
-        (lhs > rhs).alias("_pc_out"),
-    )
-    passed = ~F.coalesce(F.col("_pc_out"), F.lit(False))
-    row = (chk.name, "hit_rate", F.col("_pc_rate"), None, passed)
-    return _Out(metrics=(_Metrics(flagged, [row]),))
+    rate = F.col("hits").cast("double") / F.col("n")
+    passed = ~F.coalesce(F.col("_out"), F.lit(False))
+    row = (chk.name, "hit_rate", rate, None, passed)
+    return _Out(metrics=(_Metrics(_pooled_flag(per, chk.k_num, chk.k_den), [row]),))
 
 
 def _uniqueness(ctx: _Ctx, chk: Uniqueness):
-    """Duplicate key groups per partition.
+    """Duplicate key groups per partition, over rows whose keys are all
+    non-null.
 
     For the engine key tuple the dup-group plan hangs off the
     hash-candidate semi-join, whose broadcast-vs-shuffle decision needs
@@ -1056,11 +1060,11 @@ def _uniqueness(ctx: _Ctx, chk: Uniqueness):
     counted by job 2 (the count sizes the fused join-back).
     """
     keys = list(chk.keys)
-    rows = ctx.enriched
+    rows = _non_null(ctx.enriched, keys)
     if tuple(keys) == _ENGINE_KEYS:
-        cand_hashes = ctx.persist(_dup_candidate_hashes(ctx.enriched))
+        cand_hashes = ctx.persist(_dup_candidate_hashes(rows))
         (n_cand,) = yield [cand_hashes]
-        rows = _cand_semi_join(ctx.enriched, cand_hashes, n_cand)
+        rows = _cand_semi_join(rows, cand_hashes, n_cand)
     else:
         yield []
     dup_groups = ctx.persist(
@@ -1072,14 +1076,10 @@ def _uniqueness(ctx: _Ctx, chk: Uniqueness):
     counts = dup_groups.groupBy("partition_id").agg(
         F.sum(F.col("_cnt") - 1).cast("double").alias("value")
     )
-    # null-SAFE join-back: dup_groups groups null keys together, so a
-    # null-unsafe join silently dropped null-key duplicates from the
-    # violation list even though the metric counted them
     hit = _Hit(
         dup_groups,
         n_groups,
         ("partition_id", *keys),
-        True,
         chk.name,
         f"duplicate ({','.join(keys)})",
     )
@@ -1090,11 +1090,14 @@ def _uniqueness(ctx: _Ctx, chk: Uniqueness):
 
 
 def _referential_integrity(ctx: _Ctx, chk: ReferentialIntegrity):
-    """Rows whose keys are missing from ``commits`` (broadcast anti-join)."""
+    """Rows with non-null keys missing from ``commits`` (an anti-join;
+    the planner broadcasts ``commits`` when its size estimate is small,
+    and shuffles it otherwise)."""
     if ctx.commits is None:
         return _Out()
+    keys = list(chk.keys)
     orphans = ctx.persist(
-        ctx.enriched.join(F.broadcast(ctx.commits), on=list(chk.keys), how="left_anti")
+        _non_null(ctx.enriched, keys).join(ctx.commits, on=keys, how="left_anti")
     )
     yield [orphans]
     return _flagged_rows(
@@ -1264,7 +1267,6 @@ def _drift(ctx: _Ctx, chk: Drift):
         violators,
         n_viol,
         ("partition_id", "row_id"),
-        False,
         chk.name,
         "LoOP drift score above threshold",
         score="loop_score",
@@ -1297,9 +1299,9 @@ def run_suite(
 ) -> SuiteResult:
     """Evaluate the suite; returns lazy metrics + violations DataFrames.
 
-    ``df`` is the code table.  ``commits`` is the RI dimension (small ->
-    broadcast).  ``sha_oracle`` carries per-key expected content sha.
-    With ``stage_dir`` the heavy-column pass is staged as parquet there,
+    ``df`` is the code table.  ``commits`` is the RI dimension.
+    ``sha_oracle`` carries per-key expected content sha.  With
+    ``stage_dir`` the heavy-column pass is staged as parquet there,
     otherwise it is persisted.
 
     The executor runs, in order:

@@ -47,7 +47,7 @@ from __future__ import annotations
 import functools
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -85,6 +85,8 @@ __all__ = [
 
 _KMV_BITS = 48  # md5-prefix hash width: 12 hex chars = 48 bits, exact in
 # BIGINT on both engines and parseable by DuckDB as CAST('0x'||s AS BIGINT).
+
+_DEC = "decimal(38,0)"
 
 
 def kmv_distinct(
@@ -1495,6 +1497,54 @@ def qhist_estimate(
     )
 
 
+def _non_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """The rows of ``df`` whose ``cols`` are all non-null: the rows a key
+    constraint over ``cols`` holds on (embedded uniqueness, ICDE 2019)."""
+    for c in cols:
+        df = df.where(F.col(c).isNotNull())
+    return df
+
+
+def _fd_sides(name: str, df: DataFrame, lhs_cols, rhs_cols) -> tuple:
+    """``(lhs, rhs)`` as lists; raises unless both are non-empty and
+    name columns of ``df``."""
+    lhs, rhs = list(lhs_cols), list(rhs_cols)
+    missing = [c for c in lhs + rhs if c not in df.columns]
+    if missing:
+        raise ValueError(f"{name}: unknown columns {missing}")
+    if not lhs or not rhs:
+        raise ValueError(f"{name}: lhs and rhs must be non-empty")
+    return lhs, rhs
+
+
+def _fd_violating_keys(
+    df: DataFrame, lhs: list, rhs: list, by: Sequence[str] = (), aggs=()
+) -> DataFrame:
+    """The one functional-dependency core: a row per (``by``, lhs) key
+    that maps to more than one distinct rhs tuple, with
+    ``n_distinct_rhs`` and the ``aggs`` over the key's (lhs, rhs)
+    pairs (columns ``_pair_n``, the pair's row count, and ``_rhs_s``,
+    the rendered rhs tuple).
+
+    Rows with a NULL lhs component are dropped first (a NULL lhs is not
+    a key); a NULL rhs is a value like any other.  The (lhs, rhs)
+    collapse is map-side combined, so agreeing duplicates never
+    shuffle."""
+    pairs = (
+        _non_null(df, lhs)
+        .groupBy(*by, *lhs, *rhs)
+        .agg(F.count(F.lit(1)).alias("_pair_n"))
+        .withColumn(
+            "_rhs_s", F.concat_ws("\x1f", *[F.col(c).cast("string") for c in rhs])
+        )
+    )
+    return (
+        pairs.groupBy(*by, *lhs)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_distinct_rhs"), *aggs)
+        .where(F.col("n_distinct_rhs") > 1)
+    )
+
+
 def fd_check(
     df: DataFrame,
     lhs_cols: Sequence[str],
@@ -1521,31 +1571,16 @@ def fd_check(
     engine addition (constraint family with checks.Uniqueness /
     ReferentialIntegrity).
     """
-    lhs, rhs = list(lhs_cols), list(rhs_cols)
-    missing = [c for c in lhs + rhs if c not in df.columns]
-    if missing:
-        raise ValueError(f"fd_check: unknown columns {missing}")
-    if not lhs or not rhs:
-        raise ValueError("fd_check: lhs and rhs must be non-empty")
-    base = df
-    for c in lhs:
-        base = base.where(F.col(c).isNotNull())
-    pairs = base.groupBy(*lhs, *rhs).agg(
-        F.count(F.lit(1)).alias("_pair_n")
-    )
-    rhs_str = F.concat_ws(
-        "\x1f", *[F.col(c).cast("string") for c in rhs]
-    )
-    per_key = (
-        pairs.withColumn("_rhs_s", rhs_str)
-        .groupBy(*lhs)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_distinct_rhs"),
+    lhs, rhs = _fd_sides("fd_check", df, lhs_cols, rhs_cols)
+    per_key = _fd_violating_keys(
+        df,
+        lhs,
+        rhs,
+        aggs=(
             F.sum("_pair_n").cast("long").alias("n_rows"),
             F.min("_rhs_s").alias("rhs_min"),
             F.max("_rhs_s").alias("rhs_max"),
-        )
-        .where(F.col("n_distinct_rhs") > 1)
+        ),
     )
     from .similarity import two_phase_topk
 
@@ -1974,9 +2009,7 @@ def p_chart(
     for c in (bucket_col, hit_col):
         if c not in df.columns:
             raise ValueError(f"p_chart: unknown column {c!r}")
-    if k_den <= 0 or k_num < 0:
-        raise ValueError("p_chart: k must be a ratio >= 0")
-    dec = "decimal(38,0)"
+    _check_k("p_chart", k_num, k_den)
     per = (
         df.where(F.col(bucket_col).isNotNull() & F.col(hit_col).isNotNull())
         .groupBy(F.col(bucket_col).alias("bucket"))
@@ -1985,32 +2018,50 @@ def p_chart(
             F.sum(F.col(hit_col).cast("long")).cast("long").alias("hits"),
         )
     )
-    tot = per.agg(
-        F.sum("n").cast("long").alias("_tn"),
-        F.sum("hits").cast("long").alias("_tr"),
-    )
-    j = per.crossJoin(F.broadcast(tot))
-    diff = (
-        F.col("hits").cast(dec) * F.col("_tn").cast(dec)
-        - F.col("_tr").cast(dec) * F.col("n").cast(dec)
-    )
-    lhs = F.lit(int(k_den) * int(k_den)).cast(dec) * diff * diff
-    rhs = (
-        F.lit(int(k_num) * int(k_num)).cast(dec)
-        * F.col("_tr").cast(dec)
-        * (F.col("_tn").cast(dec) - F.col("_tr").cast(dec))
-        * F.col("n").cast(dec)
-    )
-    return j.select(
+    return _pooled_flag(per, k_num, k_den).select(
         "bucket",
         "n",
         "hits",
         F.expr("(hits * 1000000L) div n").cast("long").alias("rate_6dp"),
-        (lhs > rhs).cast("long").alias("flag"),
+        F.col("_out").cast("long").alias("flag"),
         F.expr("(_tr * 1000000L) div _tn")
         .cast("long")
         .alias("pooled_rate_6dp"),
     )
+
+
+def _check_k(name: str, k_num: int, k_den: int) -> None:
+    """Raise unless ``k = k_num/k_den`` is a ratio >= 0."""
+    if k_den <= 0 or k_num < 0:
+        raise ValueError(f"{name}: k must be a ratio >= 0")
+
+
+def _k_sigma_sides(diff: Column, spread: Column, n: Column, k_num: int, k_den: int):
+    """The two sides of the integer-decided k-sigma test: ``|diff| >
+    k·√(spread·n)`` with ``k = k_num/k_den``, squared and
+    cross-multiplied, is ``lhs > rhs`` for ``lhs = k_den²·diff²`` and
+    ``rhs = k_num²·spread·n``.  ``diff`` and ``spread`` are
+    decimal(38,0) columns; both sides are decimal(38,0) — no sqrt, no
+    float, so the verdict is bit-identical on any engine and
+    partitioning."""
+    lhs = F.lit(int(k_den) * int(k_den)).cast(_DEC) * diff * diff
+    rhs = F.lit(int(k_num) * int(k_num)).cast(_DEC) * spread * n.cast(_DEC)
+    return lhs, rhs
+
+
+def _pooled_flag(per: DataFrame, k_num: int, k_den: int) -> DataFrame:
+    """``per`` — one row per bucket with counts ``n`` and ``hits`` —
+    with the pooled totals ``_tn``/``_tr`` (a 1-row aggregate of
+    ``per``, broadcast back) and the p-chart flag ``_out``:
+    ``k_den²·(hits·_tn − _tr·n)² > k_num²·_tr·(_tn − _tr)·n``."""
+    tot = per.agg(
+        F.sum("n").cast("long").alias("_tn"),
+        F.sum("hits").cast("long").alias("_tr"),
+    )
+    n, hits = F.col("n").cast(_DEC), F.col("hits").cast(_DEC)
+    tn, tr = F.col("_tn").cast(_DEC), F.col("_tr").cast(_DEC)
+    lhs, rhs = _k_sigma_sides(hits * tn - tr * n, tr * (tn - tr), n, k_num, k_den)
+    return per.crossJoin(F.broadcast(tot)).withColumn("_out", lhs > rhs)
 
 
 def fd_repair(
@@ -2044,36 +2095,24 @@ def fd_repair(
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (constraint-repair family).
     """
-    lhs, rhs = list(lhs_cols), list(rhs_cols)
-    missing = [c for c in lhs + rhs if c not in df.columns]
-    if missing:
-        raise ValueError(f"fd_repair: unknown columns {missing}")
-    if not lhs or not rhs:
-        raise ValueError("fd_repair: lhs and rhs must be non-empty")
-    base = df
-    for c in lhs:
-        base = base.where(F.col(c).isNotNull())
-    pairs = base.groupBy(*lhs, *rhs).agg(
-        F.count(F.lit(1)).cast("long").alias("_pair_n")
-    )
-    rhs_str = F.concat_ws(
-        "\x1f", *[F.col(c).cast("string") for c in rhs]
-    )
-    sel = F.struct((-F.col("_pair_n")).alias("_neg"), rhs_str.alias("_s"))
-    per_key = (
-        pairs.withColumn("_rhs_s", rhs_str)
-        .groupBy(*lhs)
-        .agg(
+    lhs, rhs = _fd_sides("fd_repair", df, lhs_cols, rhs_cols)
+    sel = F.struct((-F.col("_pair_n")).alias("_neg"), F.col("_rhs_s").alias("_s"))
+    per_key = _fd_violating_keys(
+        df,
+        lhs,
+        rhs,
+        aggs=(
             F.min_by(F.col("_rhs_s"), sel).alias("suggested_rhs"),
             F.min_by(F.col("_pair_n"), sel).cast("long").alias("votes"),
             F.sum("_pair_n").cast("long").alias("n_rows"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct_rhs"),
-        )
-        .where(F.col("n_distinct_rhs") > 1)
-        .withColumn(
-            "confidence_6dp",
-            F.expr("(votes * 1000000L) div n_rows").cast("long"),
-        )
+        ),
+    ).select(
+        *lhs,
+        "suggested_rhs",
+        "votes",
+        "n_rows",
+        "n_distinct_rhs",
+        F.expr("(votes * 1000000L) div n_rows").cast("long").alias("confidence_6dp"),
     )
     from .similarity import two_phase_topk
 

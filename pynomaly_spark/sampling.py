@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .profiling import _check_k, _k_sigma_sides
+
 __all__ = [
     "sample_key",
     "deterministic_sample",
@@ -518,8 +520,7 @@ def sample_bias_audit(
     for c in (group_col, value_col, id_col):
         if c not in df.columns:
             raise ValueError(f"sample_bias_audit: unknown column {c!r}")
-    if k_den <= 0 or k_num < 0:
-        raise ValueError("sample_bias_audit: k must be a ratio >= 0")
+    _check_k("sample_bias_audit", k_num, k_den)
     keep = deterministic_sample(df, rate, id_col)
     dec = "decimal(38,0)"
     v = F.col(value_col).cast("long")
@@ -548,15 +549,11 @@ def sample_bias_audit(
         F.col("_sum_samp").cast(dec) * F.col("n_full").cast(dec)
         - F.col("_sum_full").cast(dec) * F.col("n_sample").cast(dec)
     )
-    lhs = F.lit(int(k_den) * int(k_den)).cast(dec) * diff * diff
-    rhs = (
-        F.lit(int(k_num) * int(k_num)).cast(dec)
-        * (
-            F.col("n_full").cast(dec) * F.col("_SS")
-            - F.col("_sum_full").cast(dec) * F.col("_sum_full").cast(dec)
-        )
-        * F.col("n_sample").cast(dec)
+    spread = (
+        F.col("n_full").cast(dec) * F.col("_SS")
+        - F.col("_sum_full").cast(dec) * F.col("_sum_full").cast(dec)
     )
+    lhs, rhs = _k_sigma_sides(diff, spread, F.col("n_sample"), k_num, k_den)
     return agg.select(
         "group",
         "n_full",

@@ -1,29 +1,21 @@
-"""Canonical schemas and deterministic row identity.
+"""The canonical schema of the engine's source table.
 
-The engine's source table is the Iceberg-style code-repository table
+The source is the Iceberg-style code-repository table
 (``BASELINE.json`` input_hint)::
 
     repo:string, path:string, commit:string, lang:string, content:string
 
 The reference's row identity is an implicit positional index
 (``loop.py:627-628``); at Spark scale positional ids are unstable across
-shuffles, so the engine derives a deterministic 64-bit ``row_id`` from the
-natural key with ``xxhash64(repo, path, commit)``.  Within a drift group
-the kernel only needs ids that are unique and stable — both hold.
+shuffles, so :func:`pynomaly_spark.checks.run_suite` derives a
+deterministic 64-bit ``row_id`` from the natural key with
+``xxhash64(repo, path, commit)``.  Within a drift group the kernel only
+needs ids that are unique and stable — both hold.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 CODE_TABLE_SCHEMA = StructType(
     [
@@ -34,54 +26,3 @@ CODE_TABLE_SCHEMA = StructType(
         StructField("content", StringType(), True),
     ]
 )
-
-COMMITS_SCHEMA = StructType(
-    [
-        StructField("repo", StringType(), False),
-        StructField("commit", StringType(), False),
-    ]
-)
-
-# Verdict/metric row: one per (partition, check, metric).
-PARTITION_METRICS_SCHEMA = StructType(
-    [
-        StructField("partition_id", StringType(), False),
-        StructField("check_name", StringType(), False),
-        StructField("metric", StringType(), False),
-        StructField("value", DoubleType(), True),
-        StructField("threshold", DoubleType(), True),
-        StructField("passed", BooleanType(), True),
-    ]
-)
-
-# Violation row: one per offending source row per check.
-VIOLATIONS_SCHEMA = StructType(
-    [
-        StructField("partition_id", StringType(), False),
-        StructField("check_name", StringType(), False),
-        StructField("row_id", LongType(), True),
-        StructField("repo", StringType(), True),
-        StructField("path", StringType(), True),
-        StructField("commit", StringType(), True),
-        StructField("detail", StringType(), True),
-        StructField("loop_score", DoubleType(), True),
-    ]
-)
-
-# Precomputed-kNN entry point (the custom-metric surface): a table already
-# carrying per-row neighbor arrays.
-KNN_TABLE_FIELDS = [
-    StructField("row_id", LongType(), False),
-    StructField("knn_dists", ArrayType(DoubleType()), False),
-    StructField("knn_ids", ArrayType(LongType()), False),
-]
-
-
-def with_row_id(df, cols=("repo", "path", "commit")):
-    """Attach the deterministic 64-bit row id (stable across shuffles)."""
-    return df.withColumn("row_id", F.xxhash64(*[F.col(c) for c in cols]))
-
-
-def with_content_sha(df, col: str = "content"):
-    """The per-row invariant column: sha256 of content (hex)."""
-    return df.withColumn("content_sha", F.sha2(F.col(col), 256))

@@ -12,6 +12,7 @@ from pynomaly_spark.checks import (
     Drift,
     LengthQuantiles,
     NullRate,
+    ProportionControl,
     ReferentialIntegrity,
     RowInvariant,
     Uniqueness,
@@ -786,3 +787,139 @@ def test_final_pass_starts_no_python_scan(spark, code_tables, tmp_path):
     assert {op for op in ops if re.search("Python|Pandas|Arrow", op)} == {
         "MapInPandas"
     }
+
+
+# ---- NULL semantics under a partition expression that yields NULL ------
+
+_CODE_DDL = "repo string, path string, commit string, lang string, content string"
+_LANGS = ("python", "go", None)
+
+
+def _lang_rows():
+    """42 rows with unique non-null keys, a third each under lang
+    python, go and NULL; content lengths 10..51."""
+    return [
+        (f"r{i % 3}", f"p{i}.py", f"c{i}", _LANGS[i % 3], "x" * (10 + i))
+        for i in range(42)
+    ]
+
+
+def _by_lang(spark, rows, checks, commits=None):
+    """Metrics and violations (pandas) of ``checks`` partitioned by the
+    raw ``lang`` column, so NULL-lang rows form a NULL partition."""
+    files = spark.createDataFrame(rows, _CODE_DDL)
+    res = run_suite(
+        files, CheckSuite(checks=checks), commits=commits, partition_expr=F.col("lang")
+    )
+    try:
+        return res.metrics.toPandas(), res.violations.toPandas()
+    finally:
+        res.unpersist()
+
+
+def test_null_partition_duplicate_fails_with_its_violation_rows(spark):
+    """A path that appears twice under a NULL lang is a duplicate of the
+    NULL partition: its metric is 1 and fails, and both rows are
+    reported."""
+    dup = [("r9", "dup.py", "c1", None, "a"), ("r9", "dup.py", "c1", None, "b")]
+    rows = _lang_rows() + dup
+    m, v = _by_lang(spark, rows, [Uniqueness()])
+    null = m[m.partition_id.isna()]
+    assert len(null) == 1
+    assert null.iloc[0].value == 1.0 and not null.iloc[0].passed
+    assert (m[m.partition_id.notna()].value == 0.0).all()
+    assert len(v) == 2
+    assert v.partition_id.isna().all() and (v.path == "dup.py").all()
+
+
+def test_null_partition_p_chart_rate_is_its_own(spark):
+    """The NULL partition's p-chart row carries its real hit rate."""
+    rows = _lang_rows()
+    m, _ = _by_lang(spark, rows, [ProportionControl("length(content) > 30")])
+    assert len(m) == 3
+    for r in m.itertuples():
+        part = [row for row in rows if row[3] == r.partition_id]
+        want = sum(len(row[4]) > 30 for row in part) / len(part)
+        assert abs(r.value - want) < 1e-12, r.partition_id
+
+
+def test_null_key_rows_are_neither_duplicates_nor_orphans(spark):
+    """A key with a NULL component is not a key: two rows with a NULL
+    repo, or with a NULL commit, and otherwise equal keys are not
+    duplicates, and they are not orphans of the key table."""
+    base = _lang_rows()
+    rows = base + [
+        (None, "nk.py", "c3", "go", "a"),
+        (None, "nk.py", "c3", "go", "b"),
+        ("r0", "nk2.py", None, "python", "a"),
+        ("r0", "nk2.py", None, "python", "b"),
+    ]
+    commits = spark.createDataFrame(
+        [(r[0], r[2]) for r in base], "repo string, commit string"
+    )
+    m, v = _by_lang(spark, rows, [Uniqueness(), ReferentialIntegrity()], commits)
+    assert len(m) == 6
+    assert (m.value == 0.0).all() and m.passed.all()
+    assert v.empty
+
+
+def test_proportion_control_matches_p_chart(spark):
+    """Parity with the library: on rows with no NULL predicate and no
+    NULL partition, each partition passes exactly when
+    ``profiling.p_chart`` does not flag its bucket, at the same k, and
+    its metric is the bucket's hit rate."""
+    from pynomaly_spark.profiling import p_chart
+
+    rows = []
+    for part, n_hits in (("lo", 5), ("m1", 20), ("m2", 22), ("m3", 18), ("hi", 50)):
+        for i in range(100):
+            content = "x" * (40 if i < n_hits else 10)
+            rows.append((f"r_{part}", f"f{i}.py", f"c{i}", part, content))
+    files = spark.createDataFrame(rows, _CODE_DDL)
+    chk = ProportionControl("length(content) > 30", k_num=2, k_den=1)
+    res = run_suite(files, CheckSuite(checks=[chk]), partition_expr=F.col("lang"))
+    try:
+        m = res.metrics.toPandas().set_index("partition_id")
+    finally:
+        res.unpersist()
+    chart = p_chart(
+        files.withColumn("_hit", F.expr(chk.predicate)),
+        "lang",
+        "_hit",
+        k_num=2,
+        k_den=1,
+    ).collect()
+    assert {r.flag for r in chart} == {0, 1}
+    assert {p: bool(m.loc[p].passed) for p in m.index} == {
+        r.bucket: not r.flag for r in chart
+    }
+    for r in chart:
+        assert m.loc[r.bucket].value == r.hits / r.n
+
+
+def test_ri_join_is_left_to_the_planner(spark, tmp_path):
+    """The RI anti-join carries no broadcast hint: a small key table read
+    from parquet is broadcast by its size estimate, and with
+    ``autoBroadcastJoinThreshold=-1`` the join shuffles instead."""
+    path = str(tmp_path / "commits.parquet")
+    key_table = spark.createDataFrame([("r0", "c0")], "repo string, commit string")
+    key_table.write.parquet(path)
+    commits = spark.read.parquet(path)
+    files = spark.createDataFrame(_lang_rows(), _CODE_DDL)
+
+    def anti_join():
+        suite = CheckSuite(checks=[ReferentialIntegrity()])
+        res = run_suite(files, suite, commits=commits)
+        try:
+            plan = res.violations._jdf.queryExecution().executedPlan().toString()
+        finally:
+            res.unpersist()
+        return set(re.findall(r"(\w+Join) .*LeftAnti", plan))
+
+    assert anti_join() == {"BroadcastHashJoin"}
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert anti_join() == {"SortMergeJoin"}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -5,6 +5,8 @@ regression that silently reintroduces a row-grain window or an
 all-pairs join flips these, not just a benchmark.
 """
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -86,3 +88,44 @@ def test_link_prediction_guard_survives_column_pruning(spark):
     )
     plan = _plan(link_prediction(df, k=3, max_degree=100))
     assert "raise_error" in plan
+
+
+def _user_repartitions(plan: str) -> set:
+    """(keys, partition count) of every user-specified hash repartition
+    in ``plan``, attribute ids stripped."""
+    return {
+        (re.sub(r"#\d+L?", "", keys), int(n))
+        for keys, n in re.findall(
+            r"Exchange hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan
+        )
+    }
+
+
+def test_ssjoin_prefix_window_pin_is_a_user_repartition(spark):
+    """The per-set prefix window of ``prefix_jaccard_join`` reads a user
+    repartition on ``_id`` at the session's parallelism, which AQE never
+    coalesces (the pin against byte-based coalescing of its small
+    exchange)."""
+    from pynomaly_spark.dedup import prefix_jaccard_join
+
+    toks = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "a"), (2, "b")], "doc_id long, tok string"
+    )
+    plan = _plan(prefix_jaccard_join(toks))
+    dp = spark.sparkContext.defaultParallelism
+    assert _user_repartitions(plan) == {("_id", dp)}, plan
+
+
+def test_corpus_overlap_distinct_pin_is_a_user_repartition(spark):
+    """The (group, shingle) distinct of ``corpus_overlap`` reads a user
+    repartition on its own keys at the session's parallelism, so the
+    md5 signature stage runs on every core."""
+    from pynomaly_spark.dedup import corpus_overlap
+
+    df = spark.createDataFrame(
+        [("s1", "the quick brown fox"), ("s2", "the quick brown dog")],
+        "source string, text string",
+    )
+    plan = _plan(corpus_overlap(df, "source", "text", num_perm=4))
+    dp = spark.sparkContext.defaultParallelism
+    assert _user_repartitions(plan) == {("_g, _sh", dp)}, plan
