@@ -1121,9 +1121,9 @@ def _sha_side_sums(df: DataFrame, sha_col: Column, prefix: str) -> DataFrame:
 def _row_invariant(ctx: _Ctx, chk: RowInvariant):
     """Rows whose content sha256 differs from the oracle's.
 
-    The engine-key path is THREE-PHASE (round-5 shuffle audits,
-    tools/profile_shuffles.py + the event-log pass recorded in
-    BENCH/SCALING_ANALYSIS.md):
+    The engine-key path is THREE-PHASE (round-5 shuffle audits; the
+    per-stage event-log table is ``perfbench.tracing.parse_event_log``,
+    or ``perfbench/run.py --trace 1``):
 
     * Phase 0 — order-independent checksum, NO SHUFFLE AT ALL: each side
       reduces map-side to (row count, two independent decimal-summed

@@ -823,6 +823,39 @@ def line_dedup(
     )
 
 
+def _band_pairs(
+    src: DataFrame, id_col: str, hash_col: str, slices
+) -> DataFrame:
+    """Distinct ``(id_a, id_b, _ha, _hb)`` candidate pairs, ``id_a <
+    id_b``, whose hashes agree exactly on at least one band slice: the
+    band explode and the hash equi-join on ``(band, slice)`` shared by
+    :func:`phash_near_dups` and :func:`bitstring_near_dups`."""
+    it = src.select(
+        F.col(id_col).alias("_id"),
+        F.col(hash_col).alias("_h"),
+        F.posexplode(slices).alias("_band", "_bv"),
+    )
+    left = it.select(
+        F.col("_id").alias("id_a"), F.col("_h").alias("_ha"), "_band", "_bv"
+    )
+    right = it.select(
+        F.col("_id").alias("id_b"),
+        F.col("_h").alias("_hb"),
+        F.col("_band").alias("_rband"),
+        F.col("_bv").alias("_rbv"),
+    )
+    return (
+        left.join(
+            right,
+            (F.col("_band") == F.col("_rband"))
+            & (F.col("_bv") == F.col("_rbv"))
+            & (F.col("id_a") < F.col("id_b")),
+        )
+        .select("id_a", "id_b", "_ha", "_hb")
+        .distinct()
+    )
+
+
 def phash_near_dups(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -868,32 +901,13 @@ def phash_near_dups(
             for b in range(n_bands)
         ]
     )
-    it = hashes.where(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("_id"),
-        F.col(hash_col).alias("_h"),
-        F.posexplode(slices).alias("_band", "_bv"),
-    )
-    left = it.select(
-        F.col("_id").alias("id_a"),
-        F.col("_h").alias("phash_a"),
-        "_band",
-        "_bv",
-    )
-    right = it.select(
-        F.col("_id").alias("id_b"),
-        F.col("_h").alias("phash_b"),
-        F.col("_band").alias("_rband"),
-        F.col("_bv").alias("_rbv"),
-    )
-    pairs = (
-        left.join(
-            right,
-            (F.col("_band") == F.col("_rband"))
-            & (F.col("_bv") == F.col("_rbv"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", "phash_a", "phash_b")
-        .distinct()
+    pairs = _band_pairs(
+        hashes.where(F.col(hash_col).isNotNull()), id_col, hash_col, slices
+    ).select(
+        "id_a",
+        "id_b",
+        F.col("_ha").alias("phash_a"),
+        F.col("_hb").alias("phash_b"),
     )
     ham = F.bit_count(
         F.col("phash_a").bitwiseXOR(F.col("phash_b"))
@@ -941,37 +955,11 @@ def bitstring_near_dups(
     slices = F.array(
         *[F.substring(F.col(bits_col), b * w + 1, w) for b in range(n_bands)]
     )
-    it = src.select(
-        F.col(id_col).alias("_id"),
-        F.col(bits_col).alias("_h"),
-        F.posexplode(slices).alias("_band", "_bv"),
-    )
-    left = it.select(
-        F.col("_id").alias("id_a"),
-        F.col("_h").alias("_ba"),
-        "_band",
-        "_bv",
-    )
-    right = it.select(
-        F.col("_id").alias("id_b"),
-        F.col("_h").alias("_bb"),
-        F.col("_band").alias("_rband"),
-        F.col("_bv").alias("_rbv"),
-    )
-    pairs = (
-        left.join(
-            right,
-            (F.col("_band") == F.col("_rband"))
-            & (F.col("_bv") == F.col("_rbv"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", "_ba", "_bb")
-        .distinct()
-    )
+    pairs = _band_pairs(src, id_col, bits_col, slices)
     ham = F.lit(0).cast("long")
     for i in range(1, n_bits + 1):
         ham = ham + (
-            F.substring("_ba", i, 1) != F.substring("_bb", i, 1)
+            F.substring("_ha", i, 1) != F.substring("_hb", i, 1)
         ).cast("long")
     return (
         pairs.withColumn("hamming", ham)
@@ -1155,7 +1143,10 @@ def prefix_jaccard_join(
     # keyed repartition carries the exact distribution the window
     # needs, costs the same bytes as the ENSURE_REQUIREMENTS exchange
     # it replaces, and is exempt from coalescing.  Count derives from
-    # the session's parallelism, never a constant.
+    # the session's parallelism, never a constant.  The pin assumes a
+    # vocabulary small enough to broadcast: once ``freq`` outgrows the
+    # broadcast threshold, the attaches plan as sort-merge joins with
+    # their own exchanges, and the pin is one extra shuffle of ``toks``.
     prefix = (
         toks.repartition(
             tokens.sparkSession.sparkContext.defaultParallelism, "_id"

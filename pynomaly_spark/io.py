@@ -476,37 +476,16 @@ def zone_bloom(
     (1-e^(-kn/m))^k); an undersized filter saturates and prunes
     nothing, which the probe's audit columns expose.
     """
-    from .profiling import _bloom_pos
+    from .profiling import _bloom_words
 
-    if m_bits < 32 or m_bits % 32 != 0:
-        raise ValueError("zone_bloom: m_bits must be a multiple of 32")
-    if k_hashes < 1:
-        raise ValueError("zone_bloom: k_hashes must be >= 1")
-    if key_col not in df.columns:
-        raise ValueError(f"zone_bloom: unknown column {key_col}")
-    zone = zone if not isinstance(zone, str) else F.col(zone)
-    pos = (
-        df.where(F.col(key_col).isNotNull() & zone.isNotNull())
-        .select(
-            zone.alias("zone"),
-            F.explode(
-                F.array(
-                    *[
-                        _bloom_pos(F.col(key_col), j, m_bits)
-                        for j in range(k_hashes)
-                    ]
-                )
-            ).alias("pos"),
-        )
-    )
-    return (
-        pos.select(
-            "zone",
-            F.expr("pos div 32").alias("word"),
-            F.expr("shiftleft(1L, cast(pos % 32 as int))").alias("_m"),
-        )
-        .groupBy("zone", "word")
-        .agg(F.bit_or("_m").alias("bits"))
+    zone = F.col(zone) if isinstance(zone, str) else zone
+    return _bloom_words(
+        "zone_bloom",
+        df.withColumn("zone", zone),
+        key_col,
+        m_bits,
+        k_hashes,
+        by=("zone",),
     )
 
 
@@ -522,7 +501,7 @@ def zone_bloom_probe(
     ``maybe = 0`` is a DEFINITE skip (the key cannot be in the zone),
     ``maybe = 1`` schedules the zone for scanning.  The probe list
     broadcasts; the join runs on the index rows, never the data."""
-    from .profiling import _bloom_pos
+    from .profiling import _bloom_mask, _bloom_positions
 
     if key_col not in probes.columns:
         raise ValueError(f"zone_bloom_probe: unknown column {key_col}")
@@ -531,14 +510,7 @@ def zone_bloom_probe(
     expanded = zones.crossJoin(F.broadcast(keys)).select(
         "zone",
         key_col,
-        F.explode(
-            F.array(
-                *[
-                    _bloom_pos(F.col(key_col), j, m_bits)
-                    for j in range(k_hashes)
-                ]
-            )
-        ).alias("pos"),
+        _bloom_positions(F.col(key_col), m_bits, k_hashes).alias("pos"),
     )
     j = expanded.join(
         zbloom.select(
@@ -550,7 +522,7 @@ def zone_bloom_probe(
         & (F.expr("pos div 32") == F.col("_w")),
         "left",
     )
-    mask = F.expr("shiftleft(1L, cast(pos % 32 as int))")
+    mask = _bloom_mask()
     hit = (
         F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(mask) == mask
     ).cast("long")

@@ -756,6 +756,43 @@ def _bloom_pos(key_col, j: int, m_bits: int):
     return F.pmod(h, F.lit(m_bits))
 
 
+def _bloom_positions(key_col, m_bits: int, k_hashes: int):
+    """``explode`` of a key's ``k_hashes`` bit positions."""
+    return F.explode(
+        F.array(*[_bloom_pos(key_col, j, m_bits) for j in range(k_hashes)])
+    )
+
+
+def _bloom_mask():
+    """The 32-bit-word mask of bit position ``pos``."""
+    return F.expr("shiftleft(1L, cast(pos % 32 as int))")
+
+
+def _bloom_words(
+    name: str, df: DataFrame, key_col: str, m_bits: int, k_hashes: int, by=()
+) -> DataFrame:
+    """``(*by, word, bits)``: the Bloom filter words of ``key_col`` per
+    ``by`` group, shared by :func:`bloom_build` (no group) and
+    ``io.zone_bloom`` (per zone).  Rows with a NULL key or group are
+    dropped; ``bit_or`` merges map-side."""
+    if m_bits < 32 or m_bits % 32 != 0:
+        raise ValueError(f"{name}: m_bits must be a multiple of 32")
+    if k_hashes < 1:
+        raise ValueError(f"{name}: k_hashes must be >= 1")
+    if key_col not in df.columns:
+        raise ValueError(f"{name}: unknown column {key_col}")
+    pos = _non_null(df, [key_col, *by]).select(
+        *by, _bloom_positions(F.col(key_col), m_bits, k_hashes).alias("pos")
+    )
+    return (
+        pos.select(
+            *by, F.expr("pos div 32").alias("word"), _bloom_mask().alias("_m")
+        )
+        .groupBy(*by, "word")
+        .agg(F.bit_or("_m").alias("bits"))
+    )
+
+
 def bloom_build(
     df: DataFrame,
     key_col: str,
@@ -789,33 +826,7 @@ def bloom_build(
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (join pruning / profiling family).
     """
-    if m_bits < 32 or m_bits % 32 != 0:
-        raise ValueError(f"bloom_build: m_bits must be a multiple of 32")
-    if k_hashes < 1:
-        raise ValueError(f"bloom_build: k_hashes must be >= 1")
-    if key_col not in df.columns:
-        raise ValueError(f"bloom_build: unknown column {key_col}")
-    pos = (
-        df.where(F.col(key_col).isNotNull())
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        _bloom_pos(F.col(key_col), j, m_bits)
-                        for j in range(k_hashes)
-                    ]
-                )
-            ).alias("pos")
-        )
-    )
-    return (
-        pos.select(
-            F.expr("pos div 32").alias("word"),
-            F.expr("shiftleft(1L, cast(pos % 32 as int))").alias("_m"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("_m").alias("bits"))
-    )
+    return _bloom_words("bloom_build", df, key_col, m_bits, k_hashes)
 
 
 def bloom_probe(
@@ -838,18 +849,9 @@ def bloom_probe(
         raise ValueError(f"bloom_probe: unknown column {key_col}")
     probed = probes.select(
         F.col(key_col),
-        F.explode(
-            F.array(
-                *[
-                    _bloom_pos(F.col(key_col), j, m_bits)
-                    for j in range(k_hashes)
-                ]
-            )
-        ).alias("pos"),
+        _bloom_positions(F.col(key_col), m_bits, k_hashes).alias("pos"),
     ).select(
-        key_col,
-        F.expr("pos div 32").alias("word"),
-        F.expr("shiftleft(1L, cast(pos % 32 as int))").alias("_m"),
+        key_col, F.expr("pos div 32").alias("word"), _bloom_mask().alias("_m")
     )
     joined = probed.join(
         F.broadcast(sketch.limit(m_bits // 32)), ["word"], "left"
@@ -1596,6 +1598,77 @@ def fd_check(
     ).drop("_fd_rn")
 
 
+def _two_sample_cum(
+    name: str,
+    df_a: DataFrame,
+    df_b: DataFrame,
+    value_col: str,
+    coarse_width: int,
+) -> DataFrame:
+    """The exact two-sample scan shared by :func:`ks_exact` and
+    :func:`rank_sum_u`: one row per distinct non-NULL value ``_v`` with
+    its per-side counts ``_c1``/``_c2``, the INCLUSIVE cumulative counts
+    ``_cum1``/``_cum2`` (#values <= v per side) and the side totals
+    ``_n1``/``_n2``.
+
+    Both samples collapse to per-distinct-value counts first (map-side
+    combine), then the cumulative counts run as the TWO-LEVEL scan
+    (quantile_bins/pack_chunks shape): a local window inside monotone
+    value buckets (``value div coarse_width``) plus a broadcast
+    exclusive prefix over the per-bucket totals — never a global
+    single-reducer window over the value order.
+    """
+    from pyspark.sql import Window
+
+    if coarse_width < 1:
+        raise ValueError(f"{name}: coarse_width must be >= 1")
+    for side, frame in (("a", df_a), ("b", df_b)):
+        if value_col not in frame.columns:
+            raise ValueError(
+                f"{name}: column {value_col!r} missing from df_{side}"
+            )
+
+    def tag(frame, c1, c2):
+        return frame.where(F.col(value_col).isNotNull()).select(
+            F.col(value_col).alias("_v"),
+            F.lit(c1).alias("_c1"),
+            F.lit(c2).alias("_c2"),
+        )
+
+    tagged = tag(df_a, 1, 0).unionAll(tag(df_b, 0, 1))
+    per_v = tagged.groupBy("_v").agg(
+        F.sum("_c1").alias("_c1"), F.sum("_c2").alias("_c2")
+    ).withColumn("_bkt", F.expr(f"_v div {int(coarse_width)}"))
+    w_loc = (
+        Window.partitionBy("_bkt")
+        .orderBy("_v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = per_v.groupBy("_bkt").agg(
+        F.sum("_c1").alias("_t1"), F.sum("_c2").alias("_t2")
+    ).select(
+        F.col("_bkt").alias("_ob"),
+        F.coalesce(F.sum("_t1").over(w_off), F.lit(0)).alias("_o1"),
+        F.coalesce(F.sum("_t2").over(w_off), F.lit(0)).alias("_o2"),
+    )
+    n = tagged.agg(
+        F.sum("_c1").cast("long").alias("_n1"),
+        F.sum("_c2").cast("long").alias("_n2"),
+    )
+    return (
+        per_v.join(F.broadcast(offsets), F.col("_bkt") == F.col("_ob"))
+        .select(
+            "_v",
+            "_c1",
+            "_c2",
+            (F.col("_o1") + F.sum("_c1").over(w_loc)).alias("_cum1"),
+            (F.col("_o2") + F.sum("_c2").over(w_loc)).alias("_cum2"),
+        )
+        .crossJoin(F.broadcast(n))
+    )
+
+
 def ks_exact(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -1626,60 +1699,10 @@ def ks_exact(
     (LoOP scores; psi.histogram_ks) with an exact test — engine
     addition.
     """
-    from pyspark.sql import Window
-
-    if coarse_width < 1:
-        raise ValueError("ks_exact: coarse_width must be >= 1")
-    for side, frame in (("a", df_a), ("b", df_b)):
-        if value_col not in frame.columns:
-            raise ValueError(
-                f"ks_exact: column {value_col!r} missing from df_{side}"
-            )
-    tagged = df_a.where(F.col(value_col).isNotNull()).select(
-        F.col(value_col).alias("_v"),
-        F.lit(1).alias("_c1"),
-        F.lit(0).alias("_c2"),
-    ).unionAll(
-        df_b.where(F.col(value_col).isNotNull()).select(
-            F.col(value_col).alias("_v"),
-            F.lit(0).alias("_c1"),
-            F.lit(1).alias("_c2"),
-        )
-    )
-    per_v = tagged.groupBy("_v").agg(
-        F.sum("_c1").alias("_c1"), F.sum("_c2").alias("_c2")
-    ).withColumn("_bkt", F.expr(f"_v div {int(coarse_width)}"))
-    w_loc = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = per_v.withColumn("_l1", F.sum("_c1").over(w_loc)).withColumn(
-        "_l2", F.sum("_c2").over(w_loc)
-    )
-    totals = per_v.groupBy("_bkt").agg(
-        F.sum("_c1").alias("_t1"), F.sum("_c2").alias("_t2")
-    )
-    w_off = Window.orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        F.col("_bkt").alias("_ob"),
-        F.coalesce(F.sum("_t1").over(w_off), F.lit(0)).alias("_o1"),
-        F.coalesce(F.sum("_t2").over(w_off), F.lit(0)).alias("_o2"),
-    )
-    cum = local.join(F.broadcast(offsets), F.col("_bkt") == F.col("_ob"))
-    n = tagged.agg(
-        F.sum("_c1").cast("long").alias("_n1"),
-        F.sum("_c2").cast("long").alias("_n2"),
-    )
-    gap = F.abs(
-        F.col("_n2") * (F.col("_o1") + F.col("_l1"))
-        - F.col("_n1") * (F.col("_o2") + F.col("_l2"))
-    )
+    cum = _two_sample_cum("ks_exact", df_a, df_b, value_col, coarse_width)
+    gap = F.abs(F.col("_n2") * F.col("_cum1") - F.col("_n1") * F.col("_cum2"))
     return (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
+        cum.agg(
             F.max("_n1").alias("n_a"),
             F.max("_n2").alias("n_b"),
             F.max(gap).cast("long").alias("d_num"),
@@ -1719,58 +1742,11 @@ def rank_sum_u(
     one final aggregate.  ``u2 ≤ 2·nA·nB``: promote to decimal(38,0)
     beyond ~2·10⁹ rows per side.
     """
-    from pyspark.sql import Window
-
-    if coarse_width < 1:
-        raise ValueError("rank_sum_u: coarse_width must be >= 1")
-    for side, frame in (("a", df_a), ("b", df_b)):
-        if value_col not in frame.columns:
-            raise ValueError(
-                f"rank_sum_u: column {value_col!r} missing from df_{side}"
-            )
-    tagged = df_a.where(F.col(value_col).isNotNull()).select(
-        F.col(value_col).alias("_v"),
-        F.lit(1).alias("_c1"),
-        F.lit(0).alias("_c2"),
-    ).unionAll(
-        df_b.where(F.col(value_col).isNotNull()).select(
-            F.col(value_col).alias("_v"),
-            F.lit(0).alias("_c1"),
-            F.lit(1).alias("_c2"),
-        )
-    )
-    per_v = tagged.groupBy("_v").agg(
-        F.sum("_c1").alias("_c1"), F.sum("_c2").alias("_c2")
-    ).withColumn("_bkt", F.expr(f"_v div {int(coarse_width)}"))
-    w_loc = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = per_v.withColumn(
-        "_lb", F.coalesce(F.sum("_c2").over(w_loc), F.lit(0))
-    )
-    totals = per_v.groupBy("_bkt").agg(F.sum("_c2").alias("_t2"))
-    w_off = Window.orderBy("_bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        F.col("_bkt").alias("_ob"),
-        F.coalesce(F.sum("_t2").over(w_off), F.lit(0)).alias("_o2"),
-    )
-    cum = per_v.join(
-        local.select("_v", "_lb"), "_v"
-    ).join(F.broadcast(offsets), F.col("_bkt") == F.col("_ob"))
-    n = tagged.agg(
-        F.sum("_c1").cast("long").alias("_n1"),
-        F.sum("_c2").cast("long").alias("_n2"),
-    )
-    term = F.col("_c1") * (
-        F.lit(2) * (F.col("_o2") + F.col("_lb")) + F.col("_c2")
-    )
+    cum = _two_sample_cum("rank_sum_u", df_a, df_b, value_col, coarse_width)
+    # 2·cumB(v⁻) + cB(v) = 2·cumB(v) − cB(v): exact in integers
+    term = F.col("_c1") * (F.lit(2) * F.col("_cum2") - F.col("_c2"))
     return (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
+        cum.agg(
             F.max("_n1").alias("n_a"),
             F.max("_n2").alias("n_b"),
             F.sum(term).cast("long").alias("u2"),

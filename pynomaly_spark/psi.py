@@ -14,6 +14,12 @@ same aggregate without keys (one row, broadcast by the cross join), and
 the PSI fold is a ``zip_with`` + ``aggregate`` over two 16-slot arrays —
 all JVM expressions, zero Python.
 
+Every grid operator here and the two streaming drift monitors
+(``streaming.streaming_psi_drift`` / ``streaming_w1_drift``) read their
+input through :func:`_binned` — the one place that validates the grid,
+drops NULL and NaN values and bins — and count through
+:func:`_bin_counts` / :func:`_cum_counts`.
+
 Definition: with additive smoothing ``eps`` per bin (so empty bins never
 divide by zero and both engines share the exact formula),
 
@@ -35,11 +41,119 @@ __all__ = [
     "baseline_cumulative",
 ]
 
+_DEC = "decimal(38,0)"
+
 
 def _bin(x: Column, n_bins: int, bin_width: float) -> Column:
     return F.greatest(
         F.lit(0),
         F.least(F.lit(n_bins - 1), F.floor(x / F.lit(bin_width)).cast("int")),
+    )
+
+
+def _binned(
+    df: DataFrame, value_col: str, n_bins: int, bin_width: float
+) -> DataFrame:
+    """``df`` with a clamped ``_bin`` column, NULL and NaN values dropped.
+
+    NaN is dropped, not binned: Spark casts ``floor(NaN)`` to int 0, which
+    would silently count NaN in bin 0 while DuckDB errors on the same
+    cast.  Values outside ``[0, n_bins * bin_width)`` clamp into the edge
+    bins.
+    """
+    if n_bins < 2:
+        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
+    if bin_width <= 0:
+        raise ValueError("bin_width must be > 0")
+    x = F.col(value_col).cast("double")
+    return df.filter(x.isNotNull() & ~F.isnan(x)).withColumn(
+        "_bin", _bin(x, n_bins, bin_width)
+    )
+
+
+def _bin_counts(n_bins: int) -> Column:
+    """Aggregate: the array of per-bin counts, as doubles."""
+    return F.array(
+        *[
+            F.sum(F.when(F.col("_bin") == i, 1).otherwise(0)).cast("double")
+            for i in range(n_bins)
+        ]
+    )
+
+
+def _cum_counts(n_bins: int, cast: str) -> Column:
+    """Aggregate: the array of cumulative counts ``#(bin <= i)``; the last
+    slot is every row (bins are clamped)."""
+    return F.array(
+        *[
+            F.sum(F.when(F.col("_bin") <= i, 1).otherwise(0)).cast(cast)
+            for i in range(n_bins)
+        ]
+    )
+
+
+def _part_vs_pooled(
+    obs: DataFrame, partition_col: str, counts: Column
+) -> DataFrame:
+    """Per-partition ``counts`` as ``_p`` beside the keyless pooled twin
+    ``_q``, broadcast through a cross join (one row)."""
+    part = obs.groupBy(partition_col).agg(counts.alias("_p"))
+    glob = obs.agg(counts.alias("_q"))
+    return part.crossJoin(F.broadcast(glob))
+
+
+def _total(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda a, c: a + c)
+
+
+def _psi(
+    p: Column, n: Column, q: Column, gn: Column, eps: float, n_bins: int
+) -> Column:
+    """PSI of per-bin counts ``p`` (total ``n``) against ``q`` (total
+    ``gn``) under ``eps`` smoothing, rounded to 6 dp."""
+    b = float(n_bins)
+
+    def frac(c, tot):
+        return (c + F.lit(eps)) / (tot + F.lit(eps) * F.lit(b))
+
+    terms = F.zip_with(
+        p,
+        q,
+        lambda c, g: (frac(c, n) - frac(g, gn))
+        * F.log(frac(c, n) / frac(g, gn)),
+    )
+    return F.round(F.aggregate(terms, F.lit(0.0), lambda a, t: a + t), 6)
+
+
+def _w1(
+    frame: DataFrame, keys: list, p: Column, pt: Column, q: Column, qt: Column
+) -> DataFrame:
+    """``(*keys, n_rows, w1_num, w1_bins_6dp)`` from cumulative counts
+    ``p`` (total ``pt``) against ``q`` (total ``qt``): the integer
+    numerator ``Σ_i |p_i·qt − q_i·pt|`` in decimal(38,0) and one
+    truncating 6-dp ``div``.  The last slot is zero by construction
+    (both CDFs hit their totals) — harmless to include."""
+    diffs = F.zip_with(
+        p,
+        q,
+        lambda c, g: F.abs(
+            c.cast(_DEC) * qt.cast(_DEC) - g.cast(_DEC) * pt.cast(_DEC)
+        ),
+    )
+    num = F.aggregate(diffs, F.lit(0).cast(_DEC), lambda acc, v: acc + v)
+    out = frame.select(
+        *keys,
+        pt.cast("long").alias("n_rows"),
+        num.cast(_DEC).alias("_num"),
+        (pt.cast(_DEC) * qt.cast(_DEC)).alias("_den"),
+    )
+    return out.select(
+        *out.columns[: len(keys)],
+        "n_rows",
+        F.col("_num").cast("long").alias("w1_num"),
+        F.expr("(_num * 1000000) div _den")
+        .cast("long")
+        .alias("w1_bins_6dp"),
     )
 
 
@@ -53,59 +167,20 @@ def histogram_psi(
 ) -> DataFrame:
     """Per-partition PSI of ``value_col``'s histogram vs the global
     (all-partitions) baseline.  Nulls and NaNs in ``value_col`` are
-    excluded (Spark casts ``floor(NaN)`` to int 0, which would silently
-    bin NaN into bin 0 while DuckDB errors on the same cast);
-    values outside ``[0, n_bins * bin_width)`` clamp into the edge bins.
+    excluded (:func:`_binned`); values outside
+    ``[0, n_bins * bin_width)`` clamp into the edge bins.
 
     Returns ``(partition_col, n_rows, psi)`` — psi rounded to 6 dp.
     """
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if bin_width <= 0 or eps <= 0:
-        raise ValueError("bin_width and eps must be > 0")
-
-    x = F.col(value_col).cast("double")
-    obs = df.filter(x.isNotNull() & ~F.isnan(x)).select(
-        F.col(partition_col), _bin(x, n_bins, bin_width).alias("_bin")
-    )
-    hist_cols = [
-        F.sum(F.when(F.col("_bin") == i, 1).otherwise(0)).cast("double").alias(f"_h{i}")
-        for i in range(n_bins)
-    ]
-    part_h = obs.groupBy(partition_col).agg(*hist_cols)
-    glob_h = obs.agg(*hist_cols)
-
-    arr = F.array(*[F.col(f"_h{i}") for i in range(n_bins)])
-    part = part_h.select(
-        partition_col,
-        arr.alias("_p"),
-        F.aggregate(arr, F.lit(0.0), lambda a, c: a + c).alias("_n"),
-    )
-    glob = glob_h.select(
-        arr.alias("_q"),
-        F.aggregate(arr, F.lit(0.0), lambda a, c: a + c).alias("_gn"),
-    )
-
-    joined = part.crossJoin(F.broadcast(glob))
-    b = float(n_bins)
-    terms = F.zip_with(
-        F.col("_p"),
-        F.col("_q"),
-        lambda c, g: (
-            (c + F.lit(eps)) / (F.col("_n") + F.lit(eps) * F.lit(b))
-            - (g + F.lit(eps)) / (F.col("_gn") + F.lit(eps) * F.lit(b))
-        )
-        * F.log(
-            ((c + F.lit(eps)) / (F.col("_n") + F.lit(eps) * F.lit(b)))
-            / ((g + F.lit(eps)) / (F.col("_gn") + F.lit(eps) * F.lit(b)))
-        ),
-    )
+    if eps <= 0:
+        raise ValueError("eps must be > 0")
+    obs = _binned(df, value_col, n_bins, bin_width)
+    joined = _part_vs_pooled(obs, partition_col, _bin_counts(n_bins))
+    n, gn = _total(F.col("_p")), _total(F.col("_q"))
     return joined.select(
         partition_col,
-        F.col("_n").cast("long").alias("n_rows"),
-        F.round(
-            F.aggregate(terms, F.lit(0.0), lambda a, t: a + t), 6
-        ).alias("psi"),
+        n.cast("long").alias("n_rows"),
+        _psi(F.col("_p"), n, F.col("_q"), gn, eps, n_bins).alias("psi"),
     )
 
 
@@ -121,23 +196,9 @@ def baseline_histogram(
     at fit time, never updated by the stream it judges).  One aggregate
     row of ``n_bins`` counters — control-plane sized, not row data.
     """
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-    x = F.col(value_col).cast("double")
-    obs = df.filter(x.isNotNull() & ~F.isnan(x)).select(
-        _bin(x, n_bins, bin_width).alias("_bin")
-    )
-    row = obs.agg(
-        *[
-            F.sum(F.when(F.col("_bin") == i, 1).otherwise(0))
-            .cast("double")
-            .alias(f"_h{i}")
-            for i in range(n_bins)
-        ]
-    ).first()
-    return [float(row[i] or 0.0) for i in range(n_bins)]
+    obs = _binned(df, value_col, n_bins, bin_width)
+    row = obs.agg(_bin_counts(n_bins)).first()
+    return [float(v or 0.0) for v in row[0]]
 
 
 def histogram_ks(
@@ -170,39 +231,17 @@ def histogram_ks(
 
     Returns ``(partition_col, n_rows, ks)`` — ks rounded to 6 dp.
     """
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-
-    x = F.col(value_col).cast("double")
-    obs = df.filter(x.isNotNull() & ~F.isnan(x)).select(
-        F.col(partition_col), _bin(x, n_bins, bin_width).alias("_bin")
+    obs = _binned(df, value_col, n_bins, bin_width)
+    joined = _part_vs_pooled(
+        obs, partition_col, _cum_counts(n_bins, "double")
     )
-    cum_cols = [
-        F.sum(F.when(F.col("_bin") <= i, 1).otherwise(0))
-        .cast("double")
-        .alias(f"_c{i}")
-        for i in range(n_bins)
-    ]
-    arr = F.array(*[F.col(f"_c{i}") for i in range(n_bins)])
-    # the last slot counts bin <= n_bins-1 == every row (bins are clamped)
-    part = obs.groupBy(partition_col).agg(*cum_cols).select(
-        partition_col, arr.alias("_p"), F.element_at(arr, n_bins).alias("_pt")
-    )
-    glob = obs.agg(*cum_cols).select(
-        arr.alias("_q"), F.element_at(arr, n_bins).alias("_qt")
-    )
-
-    joined = part.crossJoin(F.broadcast(glob))
+    pt, qt = F.element_at("_p", n_bins), F.element_at("_q", n_bins)
     diffs = F.zip_with(
-        F.col("_p"),
-        F.col("_q"),
-        lambda c, g: F.abs(c / F.col("_pt") - g / F.col("_qt")),
+        F.col("_p"), F.col("_q"), lambda c, g: F.abs(c / pt - g / qt)
     )
     return joined.select(
         partition_col,
-        F.col("_pt").cast("long").alias("n_rows"),
+        pt.cast("long").alias("n_rows"),
         F.round(F.array_max(diffs), 6).alias("ks"),
     )
 
@@ -241,55 +280,11 @@ def histogram_w1(
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (drift family).
     """
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-    x = F.col(value_col).cast("double")
-    obs = df.filter(x.isNotNull() & ~F.isnan(x)).select(
-        F.col(partition_col), _bin(x, n_bins, bin_width).alias("_bin")
-    )
-    cum_cols = [
-        F.sum(F.when(F.col("_bin") <= i, 1).otherwise(0))
-        .cast("long")
-        .alias(f"_c{i}")
-        for i in range(n_bins)
-    ]
-    arr = F.array(*[F.col(f"_c{i}") for i in range(n_bins)])
-    part = obs.groupBy(partition_col).agg(*cum_cols).select(
-        partition_col, arr.alias("_p"), F.element_at(arr, n_bins).alias("_pt")
-    )
-    glob = obs.agg(*cum_cols).select(
-        arr.alias("_q"), F.element_at(arr, n_bins).alias("_qt")
-    )
-    dec = "decimal(38,0)"
-    joined = part.crossJoin(F.broadcast(glob))
-    # |c_i·N − g_i·n| summed in decimal(38,0); the last slot is zero by
-    # construction (both CDFs hit their totals) — harmless to include.
-    diffs = F.zip_with(
-        F.col("_p"),
-        F.col("_q"),
-        lambda c, g: F.abs(
-            c.cast(dec) * F.col("_qt").cast(dec)
-            - g.cast(dec) * F.col("_pt").cast(dec)
-        ),
-    )
-    num = F.aggregate(
-        diffs, F.lit(0).cast(dec), lambda acc, v: acc + v
-    )
-    return joined.select(
-        partition_col,
-        F.col("_pt").cast("long").alias("n_rows"),
-        num.cast(dec).alias("_num"),
-        (F.col("_pt").cast(dec) * F.col("_qt").cast(dec)).alias("_den"),
-    ).select(
-        partition_col,
-        "n_rows",
-        F.col("_num").cast("long").alias("w1_num"),
-        F.expr("(_num * 1000000) div _den").cast("long").alias(
-            "w1_bins_6dp"
-        ),
-    )
+    obs = _binned(df, value_col, n_bins, bin_width)
+    joined = _part_vs_pooled(obs, partition_col, _cum_counts(n_bins, "long"))
+    p, q = F.col("_p"), F.col("_q")
+    pt, qt = F.element_at(p, n_bins), F.element_at(q, n_bins)
+    return _w1(joined, [partition_col], p, pt, q, qt)
 
 
 def baseline_cumulative(
@@ -305,20 +300,6 @@ def baseline_cumulative(
     aggregate row of ``n_bins`` cumulative counters — control-plane
     sized, not row data.
     """
-    if n_bins < 2:
-        raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
-    x = F.col(value_col).cast("double")
-    obs = df.filter(x.isNotNull() & ~F.isnan(x)).select(
-        _bin(x, n_bins, bin_width).alias("_bin")
-    )
-    row = obs.agg(
-        *[
-            F.sum(F.when(F.col("_bin") <= i, 1).otherwise(0))
-            .cast("long")
-            .alias(f"_c{i}")
-            for i in range(n_bins)
-        ]
-    ).first()
-    return [int(row[i] or 0) for i in range(n_bins)]
+    obs = _binned(df, value_col, n_bins, bin_width)
+    row = obs.agg(_cum_counts(n_bins, "long")).first()
+    return [int(v or 0) for v in row[0]]

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 import stat
-from typing import Callable, Dict
+from typing import Callable, Dict, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -6171,6 +6171,23 @@ FROM m
 """
 
 
+def _co_order_edges(spark, sf_dir):
+    """The co-order part graph of ``part_triangles``,
+    ``part_link_prediction`` and ``part_assortativity``: one
+    ``(src, dst)`` edge, ``src < dst``, per pair of parts that appear in
+    the same order."""
+    op = (
+        _tbl(spark, sf_dir, "lineitem")
+        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+        .distinct()
+    )
+    x = op.select(F.col("o"), F.col("p").alias("pa"))
+    y = op.select(F.col("o").alias("o2"), F.col("p").alias("pb"))
+    return x.join(
+        y, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb"))
+    ).select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+
+
 def q_part_triangles(spark, sf_dir):
     """Per-part triangle counts (``graph.triangle_count``) over the
     market-basket co-occurrence graph: parts are connected when they
@@ -6180,16 +6197,7 @@ def q_part_triangles(spark, sf_dir):
     arithmetic — bit-identical cross-engine."""
     from pynomaly_spark.graph import triangle_count
 
-    op = (
-        _tbl(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    x = op.select(F.col("o"), F.col("p").alias("pa"))
-    y = op.select(F.col("o").alias("o2"), F.col("p").alias("pb"))
-    pairs = x.join(
-        y, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb"))
-    ).select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+    pairs = _co_order_edges(spark, sf_dir)
     # pack_ids=True: p_partkey is positive and < 2^31 at any reachable
     # datagen scale (in-plan guard raises loudly otherwise) — the
     # closing join then carries one 8-byte packed key per wedge row
@@ -11004,16 +11012,7 @@ def q_part_link_prediction(spark, sf_dir):
     is the salted two-phase device under a total order."""
     from pynomaly_spark.graph import link_prediction
 
-    op = (
-        _tbl(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    x = op.select(F.col("o"), F.col("p").alias("pa"))
-    y = op.select(F.col("o").alias("o2"), F.col("p").alias("pb"))
-    pairs = x.join(
-        y, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb"))
-    ).select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+    pairs = _co_order_edges(spark, sf_dir)
     # pack_ids=True: p_partkey is positive and < 2^31 at any datagen
     # scale this engine can reach (the in-plan guard raises loudly if
     # that ever stops holding) — the wedge aggregate and anti-join then
@@ -11683,17 +11682,7 @@ def q_part_assortativity(spark, sf_dir):
     mirrored IEEE division, 6-dp truncation."""
     from pynomaly_spark.graph import degree_assortativity
 
-    op = (
-        _tbl(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    x = op.select(F.col("o"), F.col("p").alias("pa"))
-    y = op.select(F.col("o").alias("o2"), F.col("p").alias("pb"))
-    pairs = x.join(
-        y, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb"))
-    ).select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    return degree_assortativity(pairs)
+    return degree_assortativity(_co_order_edges(spark, sf_dir))
 
 
 SQL_PART_ASSORTATIVITY = """
@@ -13045,286 +13034,40 @@ FROM m
 # registry
 # --------------------------------------------------------------------------
 
-QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "doc_null_rate": q_doc_null_rate,
-    "doc_length_quantiles": q_doc_length_quantiles,
-    "doc_lang_cardinality": q_doc_lang_cardinality,
-    "lineitem_uniqueness": q_lineitem_uniqueness,
-    "orders_ri_orphans": q_orders_ri_orphans,
-    "lineitem_ri_orphans": q_lineitem_ri_orphans,
-    "doc_sha256": q_doc_sha256,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "doc_minhash": q_doc_minhash,
-    "doc_token_stats": q_doc_token_stats,
-    "doc_token_entropy": q_doc_token_entropy,
-    "doc_quality": q_doc_quality,
-    "events_hourly": q_events_hourly,
-    "events_retention": q_events_retention,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "lineitem_pricing": q_lineitem_pricing,
-    "doc_drift_loop": q_doc_drift_loop,
-    "emb_drift_loop": q_emb_drift_loop,
-    "emb_loop_stages": q_emb_loop_stages,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_near_dups": q_doc_near_dups,
-    "doc_simhash": q_doc_simhash,
-    "doc_simhash_pairs": q_doc_simhash_pairs,
-    "doc_lang_guess": q_doc_lang_guess,
-    "doc_jaccard_pairs": q_doc_jaccard_pairs,
-    "emb_ann_lsh": q_emb_ann_lsh,
-    "emb_ann_ivf": q_emb_ann_ivf,
-    "emb_ann_recall": q_emb_ann_recall,
-    "emb_near_dups": q_emb_near_dups,
-    "doc_bpe_tokens": q_doc_bpe_tokens,
-    "doc_media_features": q_doc_media_features,
-    "doc_media_wav": q_doc_media_wav,
-    "doc_media_phash": q_doc_media_phash,
-    "doc_media_qoi": q_doc_media_qoi,
-    "doc_media_y4m": q_doc_media_y4m,
-    "doc_media_thumbs": q_doc_media_thumbs,
-    "doc_decontam": q_doc_decontam,
-    "doc_sample": q_doc_sample,
-    "doc_domain_cap": q_doc_domain_cap,
-    "doc_dup_clusters": q_doc_dup_clusters,
-    "doc_repetition": q_doc_repetition,
-    "doc_pii": q_doc_pii,
-    "events_sessions": q_events_sessions,
-    "events_props": q_events_props,
-    "events_asof": q_events_asof,
-    "events_asof_fwd": q_events_asof_fwd,
-    "events_funnel": q_events_funnel,
-    "doc_psi_drift": q_doc_psi_drift,
-    "doc_ks_drift": q_doc_ks_drift,
-    "doc_temp_resample": q_doc_temp_resample,
-    "emb_pq_adc": q_emb_pq_adc,
-    "emb_pq_codes": q_emb_pq_codes,
-    "emb_quantize": q_emb_quantize,
-    "events_window_psi": q_events_window_psi,
-    "doc_pack_chunks": q_doc_pack_chunks,
-    "doc_rag_chunks": q_doc_rag_chunks,
-    "doc_lm_quality": q_doc_lm_quality,
-    "doc_split": q_doc_split,
-    "doc_bm25": q_doc_bm25,
-    "doc_dup_ngrams": q_doc_dup_ngrams,
-    "doc_line_dedup": q_doc_line_dedup,
-    "doc_dsir": q_doc_dsir,
-    "doc_shuffle_order": q_doc_shuffle_order,
-    "events_interval_join": q_events_interval_join,
-    "doc_funnel": q_doc_funnel,
-    "emb_centroid_drift": q_emb_centroid_drift,
-    "emb_kmeans": q_emb_kmeans,
-    "doc_lm_stream": q_doc_lm_stream,
-    "doc_incremental_dedup": q_doc_incremental_dedup,
-    "lineitem_rollup": q_lineitem_rollup,
-    "nation_revenue": q_nation_revenue,
-    "doc_tfidf_terms": q_doc_tfidf_terms,
-    "events_key_skew": q_events_key_skew,
-    "orders_join_profile": q_orders_join_profile,
-    "part_fuzzy_pairs": q_part_fuzzy_pairs,
-    "events_latest_state": q_events_latest_state,
-    "events_scd2": q_events_scd2,
-    "events_rolling": q_events_rolling,
-    "doc_postings": q_doc_postings,
-    "doc_robust_len": q_doc_robust_len,
-    "doc_snapshot_diff": q_doc_snapshot_diff,
-    "doc_len_bins": q_doc_len_bins,
-    "doc_source_overlap": q_doc_source_overlap,
-    "orders_topk_revenue": q_orders_topk_revenue,
-    "events_gapfill": q_events_gapfill,
-    "events_decay": q_events_decay,
-    "doc_profile": q_doc_profile,
-    "doc_kmv_distinct": q_doc_kmv,
-    "events_user_pivot": q_events_user_pivot,
-    "orders_late_semi": q_orders_late_semi,
-    "events_transitions": q_events_transitions,
-    "events_cusum": q_events_cusum,
-    "events_rolling_distinct": q_events_rolling_distinct,
-    "events_cms": q_events_cms,
-    "part_supplier_variety": q_part_supplier_variety,
-    "graph_pagerank": q_graph_pagerank,
-    "doc_ssjoin": q_doc_ssjoin,
-    "doc_collocations": q_doc_collocations,
-    "events_benford": q_events_benford,
-    "doc_weighted_sample": q_doc_weighted_sample,
-    "orders_rfm": q_orders_rfm,
-    "orders_join_card": q_orders_join_card,
-    "events_paths": q_events_paths,
-    "events_ivm": q_events_ivm,
-    "events_zorder": q_events_zorder,
-    "part_linkage": q_part_linkage,
-    "doc_ols": q_doc_ols,
-    "doc_chi2_terms": q_doc_chi2_terms,
-    "lineitem_corr": q_lineitem_corr,
-    "events_acf": q_events_acf,
-    "part_triangles": q_part_triangles,
-    "doc_nb_confusion": q_doc_nb_confusion,
-    "doc_ols_by_lang": q_doc_ols_by_lang,
-    "emb_rrf_fusion": q_emb_rrf_fusion,
-    "part_skyline": q_part_skyline,
-    "orders_bloom": q_orders_bloom,
-    "lineitem_zonemap": q_lineitem_zonemap,
-    "events_ab": q_events_ab,
-    "events_hll": q_events_hll,
-    "orders_ivm_join": q_orders_ivm_join,
-    "events_state_time": q_events_state_time,
-    "events_cube": q_events_cube,
-    "events_pivot": q_events_pivot,
-    "events_seasonality": q_events_seasonality,
-    "doc_compaction": q_doc_compaction,
-    "doc_corpus_overlap": q_doc_corpus_overlap,
-    "customer_order_dist": q_customer_order_dist,
-    "customer_big_orders": q_customer_big_orders,
-    "supplier_blame": q_supplier_blame,
-    "doc_linear_score": q_doc_linear_score,
-    "events_target_encode": q_events_target_encode,
-    "part_basket_pairs": q_part_basket_pairs,
-    "events_concurrency": q_events_concurrency,
-    "supplier_top_revenue": q_supplier_top_revenue,
-    "events_residual_outliers": q_events_residual_outliers,
-    "orders_retract_aggs": q_orders_retract_aggs,
-    "lineitem_winsor": q_lineitem_winsor,
-    "emb_pca_top": q_emb_pca_top,
-    "doc_golden": q_doc_golden,
-    "orders_trend": q_orders_trend,
-    "lineitem_qhist": q_lineitem_qhist,
-    "lineitem_fd": q_lineitem_fd,
-    "customer_ltv": q_customer_ltv,
-    "customer_kanon": q_customer_kanon,
-    "events_rapid_repeat": q_events_rapid_repeat,
-    "lineitem_qhist_audit": q_lineitem_qhist_audit,
-    "doc_lm_bigram": q_doc_lm_bigram,
-    "events_funnel_latency": q_events_funnel_latency,
-    "customer_repeat_gaps": q_customer_repeat_gaps,
-    "emb_dist_profile": q_emb_dist_profile,
-    "part_kcore": q_part_kcore,
-    "doc_ols_cv": q_doc_ols_cv,
-    "nation_market_share": q_nation_market_share,
-    "emb_pca_top2": q_emb_pca_top2,
-    "events_session_funnel": q_events_session_funnel,
-    "events_stl": q_events_stl,
-    "emb_hard_negatives": q_emb_hard_negatives,
-    "emb_knn_classifier": q_emb_knn_classifier,
-    "customer_lorenz": q_customer_lorenz,
-    "lineitem_q6": q_lineitem_q6,
-    "nation_profit": q_nation_profit,
-    "part_bracket_revenue": q_part_bracket_revenue,
-    "nation_trade": q_nation_trade,
-    "events_asof_staleness": q_events_asof_staleness,
-    "events_active_users": q_events_active_users,
-    "lineitem_ks_exact": q_lineitem_ks_exact,
-    "lineitem_mwu": q_lineitem_mwu,
-    "doc_simhash_profile": q_doc_simhash_profile,
-    "orders_theilsen": q_orders_theilsen,
-    "events_changepoint": q_events_changepoint,
-    "events_trending": q_events_trending,
-    "customer_survival": q_customer_survival,
-    "events_attribution": q_events_attribution,
-    "part_link_prediction": q_part_link_prediction,
-    "events_hour_bitmap": q_events_hour_bitmap,
-    "lineitem_spearman": q_lineitem_spearman,
-    "emb_mrl_recall": q_emb_mrl_recall,
-    "lineitem_pchart": q_lineitem_pchart,
-    "events_markov_acc": q_events_markov_acc,
-    "doc_w1_drift": q_doc_w1_drift,
-    "lineitem_fd_repair": q_lineitem_fd_repair,
-    "doc_minhash_fidelity": q_doc_minhash_fidelity,
-    "part_assortativity": q_part_assortativity,
-    "customer_gap_forecast": q_customer_gap_forecast,
-    "doc_sample_audit": q_doc_sample_audit,
-    "events_haar": q_events_haar,
-    "doc_readability": q_doc_readability,
-    "doc_containment": q_doc_containment,
-    "events_conformance": q_events_conformance,
-    "orders_aging": q_orders_aging,
-    "part_abc": q_part_abc,
-    "nation_hhi": q_nation_hhi,
-    "events_window_w1": q_events_window_w1,
-    "doc_shard_manifest": q_doc_shard_manifest,
-    "customer_segment_migration": q_customer_segment_migration,
-    "doc_winnowing": q_doc_winnowing,
-    "lineitem_moments": q_lineitem_moments,
-    "part_return_lift": q_part_return_lift,
-    "events_entropy": q_events_entropy,
-    "events_fano": q_events_fano,
-    "customer_returns": q_customer_returns,
-    "part_promo_share": q_part_promo_share,
-    "part_small_qty_revenue": q_part_small_qty_revenue,
-    "customer_idle_rich": q_customer_idle_rich,
-    "doc_vocab": q_doc_vocab,
-    "lineitem_wquantiles": q_lineitem_wquantiles,
-    "doc_bool_search": q_doc_bool_search,
-    "doc_feature_hash": q_doc_feature_hash,
-    "lineitem_zonebloom": q_lineitem_zonebloom,
-}
-
-ORACLES: Dict[str, str] = {
-    "doc_null_rate": SQL_DOC_NULL_RATE,
-    "doc_length_quantiles": SQL_DOC_LENGTH_QUANTILES,
-    "doc_lang_cardinality": SQL_DOC_LANG_CARDINALITY,
-    "lineitem_uniqueness": SQL_LINEITEM_UNIQUENESS,
-    "orders_ri_orphans": SQL_ORDERS_RI_ORPHANS,
-    "lineitem_ri_orphans": SQL_LINEITEM_RI_ORPHANS,
-    "doc_sha256": SQL_DOC_SHA256,
-    "doc_dedup_exact": SQL_DOC_DEDUP_EXACT,
-    "doc_minhash": SQL_DOC_MINHASH,
-    "doc_token_stats": SQL_DOC_TOKEN_STATS,
-    "doc_token_entropy": SQL_DOC_TOKEN_ENTROPY,
-    "doc_quality": SQL_DOC_QUALITY,
-    "events_hourly": SQL_EVENTS_HOURLY,
-    "events_retention": SQL_EVENTS_RETENTION,
-    "ann_cosine_topk": SQL_ANN_COSINE_TOPK,
-    "lineitem_pricing": SQL_LINEITEM_PRICING,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "doc_lang_guess": _lang_guess_sql(),
-    "doc_jaccard_pairs": SQL_DOC_JACCARD_PAIRS,
-    "emb_loop_stages": SQL_EMB_LOOP_STAGES,
-    "doc_simhash": _simhash_sql(),
-    "doc_simhash_pairs": _simhash_pairs_sql(),
-    "emb_ann_lsh": _ann_lsh_sql(),
-    "emb_ann_ivf": _ann_ivf_sql(),
-    "emb_ann_recall": _ann_recall_sql(),
-    "emb_near_dups": _emb_near_dups_sql(),
-    "doc_near_dups": _near_dups_sql(),
-    "emb_drift_loop": _emb_drift_loop_sql(),
-    "doc_bpe_tokens": SQL_DOC_BPE_TOKENS,
-    "doc_decontam": _decontam_sql(),
-    "doc_sample": _sample_sql(),
-    "doc_domain_cap": _domain_cap_sql(),
-    "doc_dup_clusters": _dup_clusters_sql(),
-    "doc_repetition": _repetition_sql(),
-    "doc_pii": _pii_sql(),
-    "events_sessions": _sessions_sql(),
-    "events_props": SQL_EVENTS_PROPS,
-    "events_asof": SQL_EVENTS_ASOF,
-    "events_asof_fwd": SQL_EVENTS_ASOF_FWD,
-    "events_funnel": _funnel_steps_sql(),
-    "doc_psi_drift": _psi_sql(),
-    "doc_ks_drift": _ks_sql(),
-    "doc_temp_resample": _temp_resample_sql(),
-    "emb_pq_adc": _pq_adc_sql(),
-    "emb_pq_codes": _pq_sql(),
-    "emb_quantize": _EMB_QUANT_SQL,
-    "events_window_psi": _window_psi_sql(),
-    "doc_pack_chunks": SQL_DOC_PACK_CHUNKS,
-    "doc_rag_chunks": SQL_DOC_RAG_CHUNKS,
-    "doc_lm_quality": _lm_quality_sql(),
-    "doc_split": _doc_split_sql(),
-    "doc_bm25": _bm25_sql(),
-    "doc_dup_ngrams": _dup_ngrams_sql(),
-    "doc_line_dedup": _LINE_DEDUP_SQL,
-    "doc_dsir": _dsir_sql(),
-    "doc_shuffle_order": SQL_DOC_SHUFFLE_ORDER,
-    "events_interval_join": SQL_EVENTS_INTERVAL_JOIN,
-    "doc_funnel": _funnel_sql(),
-    "emb_centroid_drift": _centroid_drift_sql(),
-    "emb_kmeans": _kmeans_sql(),
-    "doc_lm_stream": _lm_stream_sql(),
-    "doc_incremental_dedup": _incremental_dedup_sql(),
-    "lineitem_rollup": SQL_LINEITEM_ROLLUP,
-    "nation_revenue": SQL_NATION_REVENUE,
-    "doc_tfidf_terms": _tfidf_sql(),
-    "doc_drift_loop": _doc_drift_loop_sql(),
-    "doc_media_features": _media_features_sql(),
+# one entry per query: name -> (builder, DuckDB oracle twin)
+_REGISTRY: Dict[
+    str, Tuple[Callable[[SparkSession, str], DataFrame], str]
+] = {
+    "doc_null_rate": (q_doc_null_rate, SQL_DOC_NULL_RATE),
+    "doc_length_quantiles": (q_doc_length_quantiles, SQL_DOC_LENGTH_QUANTILES),
+    "doc_lang_cardinality": (q_doc_lang_cardinality, SQL_DOC_LANG_CARDINALITY),
+    "lineitem_uniqueness": (q_lineitem_uniqueness, SQL_LINEITEM_UNIQUENESS),
+    "orders_ri_orphans": (q_orders_ri_orphans, SQL_ORDERS_RI_ORPHANS),
+    "lineitem_ri_orphans": (q_lineitem_ri_orphans, SQL_LINEITEM_RI_ORPHANS),
+    "doc_sha256": (q_doc_sha256, SQL_DOC_SHA256),
+    "doc_dedup_exact": (q_doc_dedup_exact, SQL_DOC_DEDUP_EXACT),
+    "doc_minhash": (q_doc_minhash, SQL_DOC_MINHASH),
+    "doc_token_stats": (q_doc_token_stats, SQL_DOC_TOKEN_STATS),
+    "doc_token_entropy": (q_doc_token_entropy, SQL_DOC_TOKEN_ENTROPY),
+    "doc_quality": (q_doc_quality, SQL_DOC_QUALITY),
+    "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
+    "events_retention": (q_events_retention, SQL_EVENTS_RETENTION),
+    "ann_cosine_topk": (q_ann_cosine_topk, SQL_ANN_COSINE_TOPK),
+    "lineitem_pricing": (q_lineitem_pricing, SQL_LINEITEM_PRICING),
+    "doc_drift_loop": (q_doc_drift_loop, _doc_drift_loop_sql()),
+    "emb_drift_loop": (q_emb_drift_loop, _emb_drift_loop_sql()),
+    "emb_loop_stages": (q_emb_loop_stages, SQL_EMB_LOOP_STAGES),
+    "doc_fingerprint": (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    "doc_near_dups": (q_doc_near_dups, _near_dups_sql()),
+    "doc_simhash": (q_doc_simhash, _simhash_sql()),
+    "doc_simhash_pairs": (q_doc_simhash_pairs, _simhash_pairs_sql()),
+    "doc_lang_guess": (q_doc_lang_guess, _lang_guess_sql()),
+    "doc_jaccard_pairs": (q_doc_jaccard_pairs, SQL_DOC_JACCARD_PAIRS),
+    "emb_ann_lsh": (q_emb_ann_lsh, _ann_lsh_sql()),
+    "emb_ann_ivf": (q_emb_ann_ivf, _ann_ivf_sql()),
+    "emb_ann_recall": (q_emb_ann_recall, _ann_recall_sql()),
+    "emb_near_dups": (q_emb_near_dups, _emb_near_dups_sql()),
+    "doc_bpe_tokens": (q_doc_bpe_tokens, SQL_DOC_BPE_TOKENS),
     # Every media query is oracle-checked (round-5): DuckDB cannot
     # decode the containers, but each twin recomputes the DECODED
     # values from the md5 generation inputs — QOI pixels equal the PPM
@@ -13332,146 +13075,199 @@ ORACLES: Dict[str, str] = {
     # lookups, and the WAV rfft spectrum is a direct 48x25 DFT — so
     # the real decoders are hash-verified against an independent
     # engine; the compressed/corrupt paths stay roundtrip/fuzz pytest.
-    "doc_media_phash": SQL_DOC_MEDIA_PHASH,
-    "doc_media_qoi": _media_features_sql(decoder="qoi", n_bytes=150),
-    "doc_media_wav": _media_wav_sql(),
-    "doc_media_y4m": _media_y4m_sql(),
-    "doc_media_thumbs": _media_thumbs_sql(),
-    "events_key_skew": _key_skew_sql(),
-    "orders_join_profile": SQL_ORDERS_JOIN_PROFILE,
-    "part_fuzzy_pairs": SQL_PART_FUZZY_PAIRS,
-    "events_latest_state": SQL_EVENTS_LATEST_STATE,
-    "events_scd2": SQL_EVENTS_SCD2,
-    "events_rolling": SQL_EVENTS_ROLLING,
-    "doc_postings": _postings_sql(),
-    "doc_robust_len": SQL_DOC_ROBUST_LEN,
-    "doc_snapshot_diff": SQL_DOC_SNAPSHOT_DIFF,
-    "doc_len_bins": SQL_DOC_LEN_BINS,
-    "doc_source_overlap": SQL_DOC_SOURCE_OVERLAP,
-    "orders_topk_revenue": SQL_ORDERS_TOPK_REVENUE,
-    "events_gapfill": _gapfill_sql(),
-    "events_decay": SQL_EVENTS_DECAY,
-    "doc_profile": _column_profile_sql(),
-    "doc_kmv_distinct": _kmv_sql(),
-    "events_user_pivot": _events_pivot_sql(),
-    "orders_late_semi": SQL_ORDERS_LATE_SEMI,
-    "events_transitions": SQL_EVENTS_TRANSITIONS,
-    "events_cusum": SQL_EVENTS_CUSUM,
-    "events_rolling_distinct": SQL_EVENTS_ROLLING_DISTINCT,
-    "events_cms": SQL_EVENTS_CMS,
-    "part_supplier_variety": SQL_PART_SUPPLIER_VARIETY,
-    "graph_pagerank": _pagerank_sql(),
-    "doc_ssjoin": _ssjoin_sql(),
-    "doc_collocations": SQL_DOC_COLLOCATIONS,
-    "events_benford": SQL_EVENTS_BENFORD,
-    "doc_weighted_sample": SQL_DOC_WEIGHTED_SAMPLE,
-    "orders_rfm": SQL_ORDERS_RFM,
-    "orders_join_card": SQL_ORDERS_JOIN_CARD,
-    "events_paths": SQL_EVENTS_PATHS,
-    "events_ivm": SQL_EVENTS_IVM,
-    "events_zorder": _zorder_sql(),
-    "part_linkage": SQL_PART_LINKAGE,
-    "doc_ols": SQL_DOC_OLS,
-    "doc_chi2_terms": _chi2_terms_sql(),
-    "lineitem_corr": _corr_sql(),
-    "events_acf": _acf_sql(),
-    "part_triangles": SQL_PART_TRIANGLES,
-    "doc_nb_confusion": _nb_confusion_sql(),
-    "doc_ols_by_lang": SQL_DOC_OLS_BY_LANG,
-    "emb_rrf_fusion": _rrf_fusion_sql(),
-    "part_skyline": SQL_PART_SKYLINE,
-    "orders_bloom": SQL_ORDERS_BLOOM,
-    "lineitem_zonemap": _zonemap_sql(),
-    "events_ab": SQL_EVENTS_AB,
-    "events_hll": _events_hll_sql(),
-    "orders_ivm_join": SQL_ORDERS_IVM_JOIN,
-    "events_state_time": SQL_EVENTS_STATE_TIME,
-    "events_cube": SQL_EVENTS_CUBE,
-    "events_pivot": SQL_EVENTS_PIVOT,
-    "events_seasonality": SQL_EVENTS_SEASONALITY,
-    "doc_compaction": SQL_DOC_COMPACTION,
-    "doc_corpus_overlap": _doc_corpus_overlap_sql(),
-    "customer_order_dist": SQL_CUSTOMER_ORDER_DIST,
-    "customer_big_orders": SQL_CUSTOMER_BIG_ORDERS,
-    "supplier_blame": SQL_SUPPLIER_BLAME,
-    "doc_linear_score": SQL_DOC_LINEAR_SCORE,
-    "events_target_encode": SQL_EVENTS_TARGET_ENCODE,
-    "part_basket_pairs": SQL_PART_BASKET_PAIRS,
-    "events_concurrency": _concurrency_sql(),
-    "supplier_top_revenue": SQL_SUPPLIER_TOP_REVENUE,
-    "events_residual_outliers": SQL_EVENTS_RESIDUAL_OUTLIERS,
-    "orders_retract_aggs": SQL_ORDERS_RETRACT_AGGS,
-    "lineitem_winsor": SQL_LINEITEM_WINSOR,
-    "emb_pca_top": _pca_sql(),
-    "doc_golden": _golden_sql(),
-    "orders_trend": SQL_ORDERS_TREND,
-    "lineitem_qhist": SQL_LINEITEM_QHIST,
-    "lineitem_fd": SQL_LINEITEM_FD,
-    "customer_ltv": SQL_CUSTOMER_LTV,
-    "customer_kanon": SQL_CUSTOMER_KANON,
-    "events_rapid_repeat": SQL_EVENTS_RAPID_REPEAT,
-    "lineitem_qhist_audit": SQL_LINEITEM_QHIST_AUDIT,
-    "doc_lm_bigram": _lm_bigram_sql(),
-    "events_funnel_latency": _funnel_latency_sql(),
-    "customer_repeat_gaps": SQL_CUSTOMER_REPEAT_GAPS,
-    "emb_dist_profile": SQL_EMB_DIST_PROFILE,
-    "part_kcore": _kcore_sql(),
-    "doc_ols_cv": SQL_DOC_OLS_CV,
-    "nation_market_share": SQL_NATION_MARKET_SHARE,
-    "emb_pca_top2": _pca2_sql(),
-    "events_session_funnel": _session_funnel_sql(),
-    "events_stl": SQL_EVENTS_STL,
-    "emb_hard_negatives": _emb_hard_negatives_sql(),
-    "emb_knn_classifier": SQL_EMB_KNN_CLASSIFIER,
-    "customer_lorenz": SQL_CUSTOMER_LORENZ,
-    "lineitem_q6": SQL_LINEITEM_Q6,
-    "nation_profit": SQL_NATION_PROFIT,
-    "part_bracket_revenue": SQL_PART_BRACKET_REVENUE,
-    "nation_trade": SQL_NATION_TRADE,
-    "events_asof_staleness": SQL_EVENTS_ASOF_STALENESS,
-    "events_active_users": SQL_EVENTS_ACTIVE_USERS,
-    "lineitem_ks_exact": SQL_LINEITEM_KS_EXACT,
-    "lineitem_mwu": SQL_LINEITEM_MWU,
-    "doc_simhash_profile": _simhash_profile_sql(),
-    "orders_theilsen": SQL_ORDERS_THEILSEN,
-    "events_changepoint": SQL_EVENTS_CHANGEPOINT,
-    "events_trending": SQL_EVENTS_TRENDING,
-    "customer_survival": SQL_CUSTOMER_SURVIVAL,
-    "events_attribution": SQL_EVENTS_ATTRIBUTION,
-    "part_link_prediction": SQL_PART_LINK_PREDICTION,
-    "events_hour_bitmap": SQL_EVENTS_HOUR_BITMAP,
-    "lineitem_spearman": SQL_LINEITEM_SPEARMAN,
-    "emb_mrl_recall": SQL_EMB_MRL_RECALL,
-    "lineitem_pchart": SQL_LINEITEM_PCHART,
-    "events_markov_acc": SQL_EVENTS_MARKOV_ACC,
-    "doc_w1_drift": _w1_sql(),
-    "lineitem_fd_repair": SQL_LINEITEM_FD_REPAIR,
-    "doc_minhash_fidelity": _minhash_fidelity_sql(),
-    "part_assortativity": SQL_PART_ASSORTATIVITY,
-    "customer_gap_forecast": SQL_CUSTOMER_GAP_FORECAST,
-    "doc_sample_audit": _sample_audit_sql(),
-    "events_haar": _haar_sql(),
-    "doc_readability": SQL_DOC_READABILITY,
-    "doc_containment": _containment_sql(),
-    "events_conformance": _conformance_sql(),
-    "orders_aging": SQL_ORDERS_AGING,
-    "part_abc": SQL_PART_ABC,
-    "nation_hhi": SQL_NATION_HHI,
-    "events_window_w1": _window_w1_sql(),
-    "doc_shard_manifest": SQL_DOC_SHARD_MANIFEST,
-    "customer_segment_migration": SQL_CUSTOMER_SEGMENT_MIGRATION,
-    "doc_winnowing": SQL_DOC_WINNOWING,
-    "lineitem_moments": SQL_LINEITEM_MOMENTS,
-    "part_return_lift": SQL_PART_RETURN_LIFT,
-    "events_entropy": SQL_EVENTS_ENTROPY,
-    "events_fano": SQL_EVENTS_FANO,
-    "customer_returns": SQL_CUSTOMER_RETURNS,
-    "part_promo_share": SQL_PART_PROMO_SHARE,
-    "part_small_qty_revenue": SQL_PART_SMALL_QTY_REVENUE,
-    "customer_idle_rich": SQL_CUSTOMER_IDLE_RICH,
-    "doc_vocab": SQL_DOC_VOCAB,
-    "lineitem_wquantiles": SQL_LINEITEM_WQUANTILES,
-    "doc_bool_search": _doc_bool_search_sql(),
-    "doc_feature_hash": SQL_DOC_FEATURE_HASH,
-    "lineitem_zonebloom": _lineitem_zonebloom_sql(),
+    "doc_media_features": (q_doc_media_features, _media_features_sql()),
+    "doc_media_wav": (q_doc_media_wav, _media_wav_sql()),
+    "doc_media_phash": (q_doc_media_phash, SQL_DOC_MEDIA_PHASH),
+    "doc_media_qoi":
+        (q_doc_media_qoi, _media_features_sql(decoder="qoi", n_bytes=150)),
+    "doc_media_y4m": (q_doc_media_y4m, _media_y4m_sql()),
+    "doc_media_thumbs": (q_doc_media_thumbs, _media_thumbs_sql()),
+    "doc_decontam": (q_doc_decontam, _decontam_sql()),
+    "doc_sample": (q_doc_sample, _sample_sql()),
+    "doc_domain_cap": (q_doc_domain_cap, _domain_cap_sql()),
+    "doc_dup_clusters": (q_doc_dup_clusters, _dup_clusters_sql()),
+    "doc_repetition": (q_doc_repetition, _repetition_sql()),
+    "doc_pii": (q_doc_pii, _pii_sql()),
+    "events_sessions": (q_events_sessions, _sessions_sql()),
+    "events_props": (q_events_props, SQL_EVENTS_PROPS),
+    "events_asof": (q_events_asof, SQL_EVENTS_ASOF),
+    "events_asof_fwd": (q_events_asof_fwd, SQL_EVENTS_ASOF_FWD),
+    "events_funnel": (q_events_funnel, _funnel_steps_sql()),
+    "doc_psi_drift": (q_doc_psi_drift, _psi_sql()),
+    "doc_ks_drift": (q_doc_ks_drift, _ks_sql()),
+    "doc_temp_resample": (q_doc_temp_resample, _temp_resample_sql()),
+    "emb_pq_adc": (q_emb_pq_adc, _pq_adc_sql()),
+    "emb_pq_codes": (q_emb_pq_codes, _pq_sql()),
+    "emb_quantize": (q_emb_quantize, _EMB_QUANT_SQL),
+    "events_window_psi": (q_events_window_psi, _window_psi_sql()),
+    "doc_pack_chunks": (q_doc_pack_chunks, SQL_DOC_PACK_CHUNKS),
+    "doc_rag_chunks": (q_doc_rag_chunks, SQL_DOC_RAG_CHUNKS),
+    "doc_lm_quality": (q_doc_lm_quality, _lm_quality_sql()),
+    "doc_split": (q_doc_split, _doc_split_sql()),
+    "doc_bm25": (q_doc_bm25, _bm25_sql()),
+    "doc_dup_ngrams": (q_doc_dup_ngrams, _dup_ngrams_sql()),
+    "doc_line_dedup": (q_doc_line_dedup, _LINE_DEDUP_SQL),
+    "doc_dsir": (q_doc_dsir, _dsir_sql()),
+    "doc_shuffle_order": (q_doc_shuffle_order, SQL_DOC_SHUFFLE_ORDER),
+    "events_interval_join": (q_events_interval_join, SQL_EVENTS_INTERVAL_JOIN),
+    "doc_funnel": (q_doc_funnel, _funnel_sql()),
+    "emb_centroid_drift": (q_emb_centroid_drift, _centroid_drift_sql()),
+    "emb_kmeans": (q_emb_kmeans, _kmeans_sql()),
+    "doc_lm_stream": (q_doc_lm_stream, _lm_stream_sql()),
+    "doc_incremental_dedup":
+        (q_doc_incremental_dedup, _incremental_dedup_sql()),
+    "lineitem_rollup": (q_lineitem_rollup, SQL_LINEITEM_ROLLUP),
+    "nation_revenue": (q_nation_revenue, SQL_NATION_REVENUE),
+    "doc_tfidf_terms": (q_doc_tfidf_terms, _tfidf_sql()),
+    "events_key_skew": (q_events_key_skew, _key_skew_sql()),
+    "orders_join_profile": (q_orders_join_profile, SQL_ORDERS_JOIN_PROFILE),
+    "part_fuzzy_pairs": (q_part_fuzzy_pairs, SQL_PART_FUZZY_PAIRS),
+    "events_latest_state": (q_events_latest_state, SQL_EVENTS_LATEST_STATE),
+    "events_scd2": (q_events_scd2, SQL_EVENTS_SCD2),
+    "events_rolling": (q_events_rolling, SQL_EVENTS_ROLLING),
+    "doc_postings": (q_doc_postings, _postings_sql()),
+    "doc_robust_len": (q_doc_robust_len, SQL_DOC_ROBUST_LEN),
+    "doc_snapshot_diff": (q_doc_snapshot_diff, SQL_DOC_SNAPSHOT_DIFF),
+    "doc_len_bins": (q_doc_len_bins, SQL_DOC_LEN_BINS),
+    "doc_source_overlap": (q_doc_source_overlap, SQL_DOC_SOURCE_OVERLAP),
+    "orders_topk_revenue": (q_orders_topk_revenue, SQL_ORDERS_TOPK_REVENUE),
+    "events_gapfill": (q_events_gapfill, _gapfill_sql()),
+    "events_decay": (q_events_decay, SQL_EVENTS_DECAY),
+    "doc_profile": (q_doc_profile, _column_profile_sql()),
+    "doc_kmv_distinct": (q_doc_kmv, _kmv_sql()),
+    "events_user_pivot": (q_events_user_pivot, _events_pivot_sql()),
+    "orders_late_semi": (q_orders_late_semi, SQL_ORDERS_LATE_SEMI),
+    "events_transitions": (q_events_transitions, SQL_EVENTS_TRANSITIONS),
+    "events_cusum": (q_events_cusum, SQL_EVENTS_CUSUM),
+    "events_rolling_distinct":
+        (q_events_rolling_distinct, SQL_EVENTS_ROLLING_DISTINCT),
+    "events_cms": (q_events_cms, SQL_EVENTS_CMS),
+    "part_supplier_variety":
+        (q_part_supplier_variety, SQL_PART_SUPPLIER_VARIETY),
+    "graph_pagerank": (q_graph_pagerank, _pagerank_sql()),
+    "doc_ssjoin": (q_doc_ssjoin, _ssjoin_sql()),
+    "doc_collocations": (q_doc_collocations, SQL_DOC_COLLOCATIONS),
+    "events_benford": (q_events_benford, SQL_EVENTS_BENFORD),
+    "doc_weighted_sample": (q_doc_weighted_sample, SQL_DOC_WEIGHTED_SAMPLE),
+    "orders_rfm": (q_orders_rfm, SQL_ORDERS_RFM),
+    "orders_join_card": (q_orders_join_card, SQL_ORDERS_JOIN_CARD),
+    "events_paths": (q_events_paths, SQL_EVENTS_PATHS),
+    "events_ivm": (q_events_ivm, SQL_EVENTS_IVM),
+    "events_zorder": (q_events_zorder, _zorder_sql()),
+    "part_linkage": (q_part_linkage, SQL_PART_LINKAGE),
+    "doc_ols": (q_doc_ols, SQL_DOC_OLS),
+    "doc_chi2_terms": (q_doc_chi2_terms, _chi2_terms_sql()),
+    "lineitem_corr": (q_lineitem_corr, _corr_sql()),
+    "events_acf": (q_events_acf, _acf_sql()),
+    "part_triangles": (q_part_triangles, SQL_PART_TRIANGLES),
+    "doc_nb_confusion": (q_doc_nb_confusion, _nb_confusion_sql()),
+    "doc_ols_by_lang": (q_doc_ols_by_lang, SQL_DOC_OLS_BY_LANG),
+    "emb_rrf_fusion": (q_emb_rrf_fusion, _rrf_fusion_sql()),
+    "part_skyline": (q_part_skyline, SQL_PART_SKYLINE),
+    "orders_bloom": (q_orders_bloom, SQL_ORDERS_BLOOM),
+    "lineitem_zonemap": (q_lineitem_zonemap, _zonemap_sql()),
+    "events_ab": (q_events_ab, SQL_EVENTS_AB),
+    "events_hll": (q_events_hll, _events_hll_sql()),
+    "orders_ivm_join": (q_orders_ivm_join, SQL_ORDERS_IVM_JOIN),
+    "events_state_time": (q_events_state_time, SQL_EVENTS_STATE_TIME),
+    "events_cube": (q_events_cube, SQL_EVENTS_CUBE),
+    "events_pivot": (q_events_pivot, SQL_EVENTS_PIVOT),
+    "events_seasonality": (q_events_seasonality, SQL_EVENTS_SEASONALITY),
+    "doc_compaction": (q_doc_compaction, SQL_DOC_COMPACTION),
+    "doc_corpus_overlap": (q_doc_corpus_overlap, _doc_corpus_overlap_sql()),
+    "customer_order_dist": (q_customer_order_dist, SQL_CUSTOMER_ORDER_DIST),
+    "customer_big_orders": (q_customer_big_orders, SQL_CUSTOMER_BIG_ORDERS),
+    "supplier_blame": (q_supplier_blame, SQL_SUPPLIER_BLAME),
+    "doc_linear_score": (q_doc_linear_score, SQL_DOC_LINEAR_SCORE),
+    "events_target_encode": (q_events_target_encode, SQL_EVENTS_TARGET_ENCODE),
+    "part_basket_pairs": (q_part_basket_pairs, SQL_PART_BASKET_PAIRS),
+    "events_concurrency": (q_events_concurrency, _concurrency_sql()),
+    "supplier_top_revenue": (q_supplier_top_revenue, SQL_SUPPLIER_TOP_REVENUE),
+    "events_residual_outliers":
+        (q_events_residual_outliers, SQL_EVENTS_RESIDUAL_OUTLIERS),
+    "orders_retract_aggs": (q_orders_retract_aggs, SQL_ORDERS_RETRACT_AGGS),
+    "lineitem_winsor": (q_lineitem_winsor, SQL_LINEITEM_WINSOR),
+    "emb_pca_top": (q_emb_pca_top, _pca_sql()),
+    "doc_golden": (q_doc_golden, _golden_sql()),
+    "orders_trend": (q_orders_trend, SQL_ORDERS_TREND),
+    "lineitem_qhist": (q_lineitem_qhist, SQL_LINEITEM_QHIST),
+    "lineitem_fd": (q_lineitem_fd, SQL_LINEITEM_FD),
+    "customer_ltv": (q_customer_ltv, SQL_CUSTOMER_LTV),
+    "customer_kanon": (q_customer_kanon, SQL_CUSTOMER_KANON),
+    "events_rapid_repeat": (q_events_rapid_repeat, SQL_EVENTS_RAPID_REPEAT),
+    "lineitem_qhist_audit": (q_lineitem_qhist_audit, SQL_LINEITEM_QHIST_AUDIT),
+    "doc_lm_bigram": (q_doc_lm_bigram, _lm_bigram_sql()),
+    "events_funnel_latency": (q_events_funnel_latency, _funnel_latency_sql()),
+    "customer_repeat_gaps": (q_customer_repeat_gaps, SQL_CUSTOMER_REPEAT_GAPS),
+    "emb_dist_profile": (q_emb_dist_profile, SQL_EMB_DIST_PROFILE),
+    "part_kcore": (q_part_kcore, _kcore_sql()),
+    "doc_ols_cv": (q_doc_ols_cv, SQL_DOC_OLS_CV),
+    "nation_market_share": (q_nation_market_share, SQL_NATION_MARKET_SHARE),
+    "emb_pca_top2": (q_emb_pca_top2, _pca2_sql()),
+    "events_session_funnel": (q_events_session_funnel, _session_funnel_sql()),
+    "events_stl": (q_events_stl, SQL_EVENTS_STL),
+    "emb_hard_negatives": (q_emb_hard_negatives, _emb_hard_negatives_sql()),
+    "emb_knn_classifier": (q_emb_knn_classifier, SQL_EMB_KNN_CLASSIFIER),
+    "customer_lorenz": (q_customer_lorenz, SQL_CUSTOMER_LORENZ),
+    "lineitem_q6": (q_lineitem_q6, SQL_LINEITEM_Q6),
+    "nation_profit": (q_nation_profit, SQL_NATION_PROFIT),
+    "part_bracket_revenue": (q_part_bracket_revenue, SQL_PART_BRACKET_REVENUE),
+    "nation_trade": (q_nation_trade, SQL_NATION_TRADE),
+    "events_asof_staleness":
+        (q_events_asof_staleness, SQL_EVENTS_ASOF_STALENESS),
+    "events_active_users": (q_events_active_users, SQL_EVENTS_ACTIVE_USERS),
+    "lineitem_ks_exact": (q_lineitem_ks_exact, SQL_LINEITEM_KS_EXACT),
+    "lineitem_mwu": (q_lineitem_mwu, SQL_LINEITEM_MWU),
+    "doc_simhash_profile": (q_doc_simhash_profile, _simhash_profile_sql()),
+    "orders_theilsen": (q_orders_theilsen, SQL_ORDERS_THEILSEN),
+    "events_changepoint": (q_events_changepoint, SQL_EVENTS_CHANGEPOINT),
+    "events_trending": (q_events_trending, SQL_EVENTS_TRENDING),
+    "customer_survival": (q_customer_survival, SQL_CUSTOMER_SURVIVAL),
+    "events_attribution": (q_events_attribution, SQL_EVENTS_ATTRIBUTION),
+    "part_link_prediction": (q_part_link_prediction, SQL_PART_LINK_PREDICTION),
+    "events_hour_bitmap": (q_events_hour_bitmap, SQL_EVENTS_HOUR_BITMAP),
+    "lineitem_spearman": (q_lineitem_spearman, SQL_LINEITEM_SPEARMAN),
+    "emb_mrl_recall": (q_emb_mrl_recall, SQL_EMB_MRL_RECALL),
+    "lineitem_pchart": (q_lineitem_pchart, SQL_LINEITEM_PCHART),
+    "events_markov_acc": (q_events_markov_acc, SQL_EVENTS_MARKOV_ACC),
+    "doc_w1_drift": (q_doc_w1_drift, _w1_sql()),
+    "lineitem_fd_repair": (q_lineitem_fd_repair, SQL_LINEITEM_FD_REPAIR),
+    "doc_minhash_fidelity": (q_doc_minhash_fidelity, _minhash_fidelity_sql()),
+    "part_assortativity": (q_part_assortativity, SQL_PART_ASSORTATIVITY),
+    "customer_gap_forecast":
+        (q_customer_gap_forecast, SQL_CUSTOMER_GAP_FORECAST),
+    "doc_sample_audit": (q_doc_sample_audit, _sample_audit_sql()),
+    "events_haar": (q_events_haar, _haar_sql()),
+    "doc_readability": (q_doc_readability, SQL_DOC_READABILITY),
+    "doc_containment": (q_doc_containment, _containment_sql()),
+    "events_conformance": (q_events_conformance, _conformance_sql()),
+    "orders_aging": (q_orders_aging, SQL_ORDERS_AGING),
+    "part_abc": (q_part_abc, SQL_PART_ABC),
+    "nation_hhi": (q_nation_hhi, SQL_NATION_HHI),
+    "events_window_w1": (q_events_window_w1, _window_w1_sql()),
+    "doc_shard_manifest": (q_doc_shard_manifest, SQL_DOC_SHARD_MANIFEST),
+    "customer_segment_migration":
+        (q_customer_segment_migration, SQL_CUSTOMER_SEGMENT_MIGRATION),
+    "doc_winnowing": (q_doc_winnowing, SQL_DOC_WINNOWING),
+    "lineitem_moments": (q_lineitem_moments, SQL_LINEITEM_MOMENTS),
+    "part_return_lift": (q_part_return_lift, SQL_PART_RETURN_LIFT),
+    "events_entropy": (q_events_entropy, SQL_EVENTS_ENTROPY),
+    "events_fano": (q_events_fano, SQL_EVENTS_FANO),
+    "customer_returns": (q_customer_returns, SQL_CUSTOMER_RETURNS),
+    "part_promo_share": (q_part_promo_share, SQL_PART_PROMO_SHARE),
+    "part_small_qty_revenue":
+        (q_part_small_qty_revenue, SQL_PART_SMALL_QTY_REVENUE),
+    "customer_idle_rich": (q_customer_idle_rich, SQL_CUSTOMER_IDLE_RICH),
+    "doc_vocab": (q_doc_vocab, SQL_DOC_VOCAB),
+    "lineitem_wquantiles": (q_lineitem_wquantiles, SQL_LINEITEM_WQUANTILES),
+    "doc_bool_search": (q_doc_bool_search, _doc_bool_search_sql()),
+    "doc_feature_hash": (q_doc_feature_hash, SQL_DOC_FEATURE_HASH),
+    "lineitem_zonebloom": (q_lineitem_zonebloom, _lineitem_zonebloom_sql()),
+}
+
+QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: builder for name, (builder, _) in _REGISTRY.items()
+}
+ORACLES: Dict[str, str] = {
+    name: sql for name, (_, sql) in _REGISTRY.items()
 }

@@ -818,6 +818,88 @@ def kmeans_fit(
     return assigned.drop("_v"), cents
 
 
+def _pca_chains(
+    name: str,
+    df: DataFrame,
+    vec_col: str,
+    dim: int,
+    scale_bits: int,
+    rounds: int,
+    n_components: int,
+) -> tuple:
+    """``(mu, [v1, ...])``: the quantized column mean and
+    ``n_components`` fixed-point power-iteration chains, each deflated
+    against the chains before it — the one core of
+    :func:`pca_power_top` (one chain) and :func:`pca_power_two`."""
+    if vec_col not in df.columns:
+        raise ValueError(f"{name}: unknown column {vec_col!r}")
+    if rounds < 1 or dim < 1 or not 1 <= scale_bits <= 30:
+        raise ValueError(f"{name}: bad rounds/dim/scale_bits")
+    S = 1 << scale_bits
+    q = df.where(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+    ).select(
+        F.transform(
+            F.col(vec_col),
+            lambda x: F.floor(x.cast("double") * S + F.lit(0.5)).cast(
+                "long"
+            ),
+        ).alias("_q")
+    )
+    n_mu = q.agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[
+            F.sum(F.element_at("_q", j + 1)).alias(f"_m{j}")
+            for j in range(dim)
+        ],
+    ).collect()[0]
+    n = n_mu["_n"]
+    if n == 0:
+        raise ValueError(f"{name}: no valid vectors")
+
+    def _trunc_div(a: int, b: int) -> int:
+        qd = abs(a) // b
+        return qd if a >= 0 else -qd
+
+    mu = [_trunc_div(int(n_mu[f"_m{j}"]), n) for j in range(dim)]
+
+    def _one_pass(v):
+        M = sum(m_j * v_j for m_j, v_j in zip(mu, v))
+        v_lit = F.array(*[F.lit(int(x)) for x in v])
+        dot = F.aggregate(
+            F.zip_with(F.col("_q"), v_lit, lambda a, b: a * b),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+        stage = q.select("_q", dot.alias("_dot")).select(
+            "_q", F.expr(f"(_dot - {M}L) div {S}L").alias("_s")
+        )
+        row = stage.agg(
+            F.sum("_s").alias("_t"),
+            *[
+                F.sum(F.element_at("_q", j + 1) * F.col("_s")).alias(
+                    f"_a{j}"
+                )
+                for j in range(dim)
+            ],
+        ).collect()[0]
+        t = int(row["_t"])
+        return [int(row[f"_a{j}"]) - mu[j] * t for j in range(dim)]
+
+    chains = []
+    for _ in range(n_components):
+        v = [S] * dim
+        for _ in range(rounds):
+            u = _one_pass(v)
+            for w, norm in chains:
+                proj = sum(a * b for a, b in zip(u, w))
+                u = [x - _trunc_div(proj * y, norm) for x, y in zip(u, w)]
+            sc = max(1, max(abs(x) for x in u) // S)
+            v = [_trunc_div(x, sc) for x in u]
+        chains.append((v, max(1, sum(x * x for x in v))))
+    return mu, [v for v, _ in chains]
+
+
 def pca_power_top(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -856,66 +938,10 @@ def pca_power_top(
     engine addition (embedding analytics; pairs with centroid_drift /
     scalar_quantize).
     """
-    if vec_col not in df.columns:
-        raise ValueError(f"pca_power_top: unknown column {vec_col!r}")
-    if rounds < 1 or dim < 1 or not 1 <= scale_bits <= 30:
-        raise ValueError("pca_power_top: bad rounds/dim/scale_bits")
-    S = 1 << scale_bits
-    q = df.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    ).select(
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * S + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("_q")
+    mu, (v,) = _pca_chains(
+        "pca_power_top", df, vec_col, dim, scale_bits, rounds, 1
     )
-    n_mu = q.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(F.element_at("_q", j + 1)).alias(f"_m{j}")
-            for j in range(dim)
-        ],
-    ).collect()[0]
-    n = n_mu["_n"]
-    if n == 0:
-        raise ValueError("pca_power_top: no valid vectors")
-
-    def _trunc_div(a: int, b: int) -> int:
-        qd = abs(a) // b
-        return qd if a >= 0 else -qd
-
-    mu = [_trunc_div(int(n_mu[f"_m{j}"]), n) for j in range(dim)]
-    v = [S] * dim
-    for _ in range(rounds):
-        M = sum(m_j * v_j for m_j, v_j in zip(mu, v))
-        v_lit = F.array(*[F.lit(int(x)) for x in v])
-        dot = F.aggregate(
-            F.zip_with(F.col("_q"), v_lit, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        s_col = F.expr(f"(_dot - {M}L) div {S}L")
-        stage = q.select("_q", dot.alias("_dot")).select(
-            "_q", s_col.alias("_s")
-        )
-        row = stage.agg(
-            F.sum("_s").alias("_t"),
-            *[
-                F.sum(F.element_at("_q", j + 1) * F.col("_s")).alias(
-                    f"_a{j}"
-                )
-                for j in range(dim)
-            ],
-        ).collect()[0]
-        t = int(row["_t"])
-        u = [int(row[f"_a{j}"]) - mu[j] * t for j in range(dim)]
-        m_abs = max(abs(x) for x in u)
-        sc = max(1, m_abs // S)
-        v = [_trunc_div(x, sc) for x in u]
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return df.sparkSession.createDataFrame(
         [(j, mu[j], v[j]) for j in range(dim)],
         "dim long, mu_q long, v_fixed long",
     )
@@ -948,85 +974,10 @@ def pca_power_two(
     orthogonality is a float-world concept; the fixed-point contract
     trades it for cross-engine determinism.
     """
-    if vec_col not in df.columns:
-        raise ValueError(f"pca_power_two: unknown column {vec_col!r}")
-    if rounds < 1 or dim < 1 or not 1 <= scale_bits <= 30:
-        raise ValueError("pca_power_two: bad rounds/dim/scale_bits")
-    S = 1 << scale_bits
-    q = df.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
-    ).select(
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") * S + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("_q")
+    mu, (v1, v2) = _pca_chains(
+        "pca_power_two", df, vec_col, dim, scale_bits, rounds, 2
     )
-    n_mu = q.agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[
-            F.sum(F.element_at("_q", j + 1)).alias(f"_m{j}")
-            for j in range(dim)
-        ],
-    ).collect()[0]
-    n = n_mu["_n"]
-    if n == 0:
-        raise ValueError("pca_power_two: no valid vectors")
-
-    def _trunc_div(a: int, b: int) -> int:
-        qd = abs(a) // b
-        return qd if a >= 0 else -qd
-
-    mu = [_trunc_div(int(n_mu[f"_m{j}"]), n) for j in range(dim)]
-
-    def _one_pass(v):
-        M = sum(m_j * v_j for m_j, v_j in zip(mu, v))
-        v_lit = F.array(*[F.lit(int(x)) for x in v])
-        dot = F.aggregate(
-            F.zip_with(F.col("_q"), v_lit, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        stage = q.select("_q", dot.alias("_dot")).select(
-            "_q", F.expr(f"(_dot - {M}L) div {S}L").alias("_s")
-        )
-        row = stage.agg(
-            F.sum("_s").alias("_t"),
-            *[
-                F.sum(F.element_at("_q", j + 1) * F.col("_s")).alias(
-                    f"_a{j}"
-                )
-                for j in range(dim)
-            ],
-        ).collect()[0]
-        t = int(row["_t"])
-        return [int(row[f"_a{j}"]) - mu[j] * t for j in range(dim)]
-
-    def _normalize(u):
-        m_abs = max(abs(x) for x in u)
-        sc = max(1, m_abs // S)
-        return [_trunc_div(x, sc) for x in u]
-
-    def _run(rounds_n, deflate):
-        v = [S] * dim
-        for _ in range(rounds_n):
-            u = _one_pass(v)
-            if deflate is not None:
-                v1, norm1 = deflate
-                proj = sum(a * b for a, b in zip(u, v1))
-                u = [
-                    x - _trunc_div(proj * w, norm1)
-                    for x, w in zip(u, v1)
-                ]
-            v = _normalize(u)
-        return v
-
-    v1 = _run(rounds, None)
-    norm1 = sum(x * x for x in v1)
-    v2 = _run(rounds, (v1, max(1, norm1)))
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return df.sparkSession.createDataFrame(
         [(1, j, mu[j], v1[j]) for j in range(dim)]
         + [(2, j, mu[j], v2[j]) for j in range(dim)],
         "component long, dim long, mu_q long, v_fixed long",

@@ -26,11 +26,11 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from typing import Iterator, Optional, Sequence
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -154,6 +154,18 @@ def score_batch(
     return slim.mapInPandas(_scorer(bc, id_col, features_col), _SCORE_SCHEMA)
 
 
+def _windows(
+    df: DataFrame, ts_col: str, window_duration: str, watermark: str, *keys
+):
+    """``df`` grouped by its watermarked tumbling window ``w`` and ``keys``."""
+    # watermarks require TIMESTAMP (tz-aware); parquet often carries NTZ
+    return (
+        df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        .withWatermark(ts_col, watermark)
+        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), *keys)
+    )
+
+
 def windowed_event_counts(
     stream_df: DataFrame,
     ts_col: str = "ts",
@@ -169,11 +181,8 @@ def windowed_event_counts(
     their window.  Returns an aggregating streaming DataFrame suitable
     for ``outputMode("update"|"append")``.
     """
-    # watermarks require TIMESTAMP (tz-aware); parquet often carries NTZ
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
-        src.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), key_col)
+        _windows(stream_df, ts_col, window_duration, watermark, key_col)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.avg("value").alias("avg_value"),
@@ -319,62 +328,37 @@ def streaming_psi_drift(
     State is one ``n_bins``-counter histogram per open (window, key) —
     bounded by the watermark, independent of stream length.  The PSI
     fold runs on the aggregate's output row: all JVM expressions, the
-    baseline fractions folded in as literals (no join, no broadcast —
-    they travel inside the plan).
+    baseline counts folded in as literals (no join, no broadcast —
+    they travel inside the plan).  NULL and NaN values are dropped
+    before binning, as in the batch operators, so a window scored
+    against a baseline of its own rows reads psi 0.
 
     Returns ``(window_start, window_end[, key_col], n_rows, psi)``;
     works identically on a batch frame (window agg in batch mode) —
     the batch-parity test relies on that.
     """
+    from .psi import _bin_counts, _binned, _psi, _total
+
     if len(baseline_counts) != n_bins:
         raise ValueError(
             f"baseline_counts has {len(baseline_counts)} bins, expected {n_bins}"
         )
-    if eps <= 0 or bin_width <= 0:
-        raise ValueError("bin_width and eps must be > 0")
-    total = float(sum(baseline_counts))
-    b = float(n_bins)
-    qs = [(g + eps) / (total + eps * b) for g in baseline_counts]
-
-    from .psi import _bin
-
-    x = F.col(value_col).cast("double")
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    keys = [F.window(F.col(ts_col), window_duration).alias("w")] + (
-        [F.col(key_col)] if key_col else []
-    )
-    hist_cols = [
-        F.sum(F.when(_bin(x, n_bins, bin_width) == i, 1).otherwise(0))
-        .cast("double")
-        .alias(f"_h{i}")
-        for i in range(n_bins)
-    ]
-    agg = (
-        src.filter(x.isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .agg(*hist_cols)
-    )
-    arr = F.array(*[F.col(f"_h{i}") for i in range(n_bins)])
-    n = F.aggregate(arr, F.lit(0.0), lambda a, c: a + c)
-    qarr = F.array(*[F.lit(q) for q in qs])
-    with_n = agg.select(
-        "w", *([key_col] if key_col else []), arr.alias("_p"), n.alias("_n")
-    )
-    p_of = lambda c: (c + F.lit(eps)) / (  # noqa: E731 — shared smoothing
-        F.col("_n") + F.lit(eps) * F.lit(b)
-    )
-    terms = F.zip_with(
-        F.col("_p"), qarr, lambda c, q: (p_of(c) - q) * F.log(p_of(c) / q)
-    )
-    return with_n.select(
+    if eps <= 0:
+        raise ValueError("eps must be > 0")
+    keys = [key_col] if key_col else []
+    agg = _windows(
+        _binned(stream_df, value_col, n_bins, bin_width),
+        ts_col, window_duration, watermark, *keys,
+    ).agg(_bin_counts(n_bins).alias("_p"))
+    q = F.array(*[F.lit(float(g)) for g in baseline_counts])
+    n = _total(F.col("_p"))
+    total = F.lit(float(sum(baseline_counts)))
+    return agg.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
-        *([key_col] if key_col else []),
-        F.col("_n").cast("long").alias("n_rows"),
-        F.round(F.aggregate(terms, F.lit(0.0), lambda a, t: a + t), 6).alias(
-            "psi"
-        ),
+        *keys,
+        n.cast("long").alias("n_rows"),
+        _psi(F.col("_p"), n, q, total, eps, n_bins).alias("psi"),
     )
 
 
@@ -587,29 +571,9 @@ def streaming_latest_state(
     sink (``foreachBatch`` MERGE in production; the memory/complete
     sink in tests).  NULL-keyed updates are dropped, as in batch.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    payload = F.struct(
-        *[F.col(c) for c in attr_cols],
-        F.col("_us").alias("_last_us"),
-    )
-    order = F.struct(F.col("_us"), F.col(tiebreak_col))
-    out = (
-        stream_df.where(F.col(key_col).isNotNull())
-        .withColumn("_us", us)
-        .groupBy(key_col)
-        .agg(
-            F.max_by(payload, order).alias("_cur"),
-            F.min("_us").alias("first_us"),
-            F.count(F.lit(1)).alias("n_updates"),
-        )
-    )
-    return out.select(
-        key_col,
-        *[F.col(f"_cur.{c}").alias(c) for c in attr_cols],
-        F.col("_cur._last_us").alias("last_us"),
-        "first_us",
-        "n_updates",
-    )
+    from .cdc import latest_state
+
+    return latest_state(stream_df, key_col, ts_col, attr_cols, tiebreak_col)
 
 
 def streaming_cms(
@@ -637,22 +601,9 @@ def streaming_cms(
     per-key streaming count would hold state per DISTINCT key: the
     sketch holds ≤ depth·width cells, full stop.
     """
-    from .profiling import _cms_bucket
+    from .profiling import cms_build
 
-    if depth < 1 or width < 2:
-        raise ValueError(
-            f"streaming_cms: bad shape depth={depth} width={width}"
-        )
-    rows = stream_df.where(F.col(key_col).isNotNull()).select(
-        F.col(key_col).cast("string").alias("_k"),
-        F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("row"),
-    )
-    return (
-        rows.groupBy(
-            "row", _cms_bucket(F.col("_k"), F.col("row"), width).alias("bucket")
-        )
-        .agg(F.count(F.lit(1)).alias("cell_n"))
-    )
+    return cms_build(stream_df, key_col, depth, width)
 
 
 def streaming_ols_moments(
@@ -708,17 +659,9 @@ def streaming_hll(
     engine-private state; these registers are md5-deterministic
     integers any engine (or the batch twin) reproduces bit-for-bit.
     """
-    from .profiling import _hll_hash_cols
+    from .profiling import hll_build
 
-    if not 4 <= p <= 12:
-        raise ValueError(f"streaming_hll: p must be in [4, 12], got {p}")
-    bucket, rho = _hll_hash_cols(F.col(value_col), salt, p)
-    return (
-        stream_df.where(F.col(value_col).isNotNull())
-        .select(*group_cols, bucket.alias("bucket"), rho.alias("_rho"))
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("_rho").cast("long").alias("register"))
-    )
+    return hll_build(stream_df, group_cols, value_col, p, salt)
 
 
 def streaming_qhist(
@@ -742,25 +685,9 @@ def streaming_qhist(
 
     Negative values raise in plan (the batch builder's contract).
     """
-    group_cols = list(group_cols)
-    missing = [
-        c for c in (*group_cols, value_col) if c not in stream_df.columns
-    ]
-    if missing:
-        raise ValueError(f"streaming_qhist: unknown columns {missing}")
-    v = F.when(
-        F.col(value_col) < 0,
-        F.raise_error("streaming_qhist: negative value"),
-    ).otherwise(F.col(value_col))
-    return (
-        stream_df.where(F.col(value_col).isNotNull())
-        .select(
-            *group_cols,
-            (F.length(F.bin(v)) - 1).cast("long").alias("qbin"),
-        )
-        .groupBy(*group_cols, "qbin")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    from .profiling import qhist_build
+
+    return qhist_build(stream_df, group_cols, value_col)
 
 
 def streaming_bitmap(
@@ -816,71 +743,40 @@ def streaming_w1_drift(
     — every quantity an exact integer, so the monitor's verdict is
     bit-identical in streaming and batch mode on any engine (PSI's
     float fold can't say that).  The baseline travels as plan
-    literals — no join, no broadcast.
+    literals — no join, no broadcast.  NULL and NaN values are
+    dropped before binning, as in :func:`pynomaly_spark.psi.
+    baseline_cumulative`.
 
     Returns ``(window_start, window_end[, key_col], n_rows, w1_num,
     w1_bins_6dp)``; works identically on a batch frame — the
     batch-parity test relies on that.
     """
+    from .psi import _binned, _cum_counts, _w1
+
     if len(baseline_cum) != n_bins:
         raise ValueError(
             f"baseline_cum has {len(baseline_cum)} bins, expected {n_bins}"
         )
-    if bin_width <= 0:
-        raise ValueError("bin_width must be > 0")
     g = [int(v) for v in baseline_cum]
     if any(b < a for a, b in zip(g, g[1:])):
         raise ValueError("baseline_cum must be non-decreasing")
-    big_g = g[-1]
-    if big_g <= 0:
+    if g[-1] <= 0:
         raise ValueError("baseline_cum is empty (total 0)")
-
-    from .psi import _bin
-
-    dec = "decimal(38,0)"
-    x = F.col(value_col).cast("double")
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    keys = [F.window(F.col(ts_col), window_duration).alias("w")] + (
-        [F.col(key_col)] if key_col else []
-    )
-    cum_cols = [
-        F.sum(F.when(_bin(x, n_bins, bin_width) <= i, 1).otherwise(0))
-        .cast("long")
-        .alias(f"_c{i}")
-        for i in range(n_bins)
+    keys = [key_col] if key_col else []
+    agg = _windows(
+        _binned(stream_df, value_col, n_bins, bin_width),
+        ts_col, window_duration, watermark, *keys,
+    ).agg(_cum_counts(n_bins, "long").alias("_p"))
+    p = F.col("_p")
+    win = [
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
     ]
-    agg = (
-        src.filter(x.isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .agg(*cum_cols)
-    )
-    n = F.col(f"_c{n_bins - 1}")
-    num = None
-    for i in range(n_bins):
-        term = F.abs(
-            F.col(f"_c{i}").cast(dec) * F.lit(big_g).cast(dec)
-            - F.lit(g[i]).cast(dec) * n.cast(dec)
-        )
-        num = term if num is None else num + term
-    out_keys = (
-        [
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-        ]
-        + ([F.col(key_col)] if key_col else [])
-    )
-    return agg.select(
-        *out_keys,
-        n.cast("long").alias("n_rows"),
-        num.cast(dec).alias("_num"),
-    ).select(
-        *[c.split(".")[-1] for c in ["window_start", "window_end"]]
-        + ([key_col] if key_col else []),
-        "n_rows",
-        F.col("_num").cast("long").alias("w1_num"),
-        F.expr(
-            f"(_num * 1000000) div (cast(n_rows as {dec})"
-            f" * cast({big_g} as {dec}))"
-        ).cast("long").alias("w1_bins_6dp"),
+    return _w1(
+        agg,
+        win + keys,
+        p,
+        F.element_at(p, n_bins),
+        F.array(*[F.lit(v).cast("long") for v in g]),
+        F.lit(g[-1]).cast("long"),
     )

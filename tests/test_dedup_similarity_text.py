@@ -1810,18 +1810,12 @@ def test_golden_records_survivorship_rules(spark):
         golden_records(recs, clusters, "nope", "n_chars")
 
 
-def test_pca_power_two_recovers_two_planted_directions(spark):
-    """Two orthogonal planted directions with distinct variances: PC1
-    aligns with the strong one, PC2 with the weak one, and the fixed
-    iterates are near-orthogonal (within the documented truncation
-    bound)."""
-    import math
+def _two_planted_directions(spark, d=8):
+    """300 vectors along two orthogonal planted directions ``w1`` (strong)
+    and ``w2`` (weak) plus small noise: ``(df, w1, w2)``."""
     import random
 
-    from pynomaly_spark.similarity import pca_power_two
-
     rng = random.Random(11)
-    d = 8
     w1 = [1.0 if j < 4 else 0.0 for j in range(d)]
     w2 = [0.0 if j < 4 else 1.0 for j in range(d)]
     w1 = [x / 2.0 for x in w1]
@@ -1834,6 +1828,20 @@ def test_pca_power_two_recovers_two_planted_directions(spark):
                  for j in range(d)])
         )
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return df, w1, w2
+
+
+def test_pca_power_two_recovers_two_planted_directions(spark):
+    """Two orthogonal planted directions with distinct variances: PC1
+    aligns with the strong one, PC2 with the weak one, and the fixed
+    iterates are near-orthogonal (within the documented truncation
+    bound)."""
+    import math
+
+    from pynomaly_spark.similarity import pca_power_two
+
+    d = 8
+    df, w1, w2 = _two_planted_directions(spark, d)
     out = pca_power_two(df, "embedding", dim=d, rounds=8)
     vs = {1: {}, 2: {}}
     for r in out.collect():
@@ -1849,6 +1857,20 @@ def test_pca_power_two_recovers_two_planted_directions(spark):
     assert abs(cos(v1, w1)) > 0.98
     assert abs(cos(v2, w2)) > 0.98
     assert abs(cos(v1, v2)) < 0.02
+
+
+def test_pca_power_top_is_component_one_of_pca_power_two(spark):
+    """The top component is the first chain of the top two, row for row:
+    same ``(dim, mu_q, v_fixed)`` as ``pca_power_two``'s component 1."""
+    from pynomaly_spark.similarity import pca_power_top, pca_power_two
+
+    df, _, _ = _two_planted_directions(spark)
+    top = sorted(map(tuple, pca_power_top(df, dim=8, rounds=8).collect()))
+    two = pca_power_two(df, dim=8, rounds=8).where("component = 1")
+    assert top == sorted(
+        map(tuple, two.select("dim", "mu_q", "v_fixed").collect())
+    )
+    assert len(top) == 8
 
 
 def test_winnowing_guarantee_and_edges(spark):

@@ -894,3 +894,40 @@ def test_streaming_w1_drift_matches_batch(spark, tmp_path):
         streaming_w1_drift(ev, [5] * 15 + [4], n_bins=16)
     with _pytest.raises(ValueError, match="total 0"):
         streaming_w1_drift(ev, [0] * 16, n_bins=16)
+
+
+def _nan_window(spark):
+    """One hour-window of 9 rows: 5 finite values, 3 NaN, 1 NULL."""
+    import datetime as dt
+
+    t0 = dt.datetime(2026, 3, 1)
+    nan = float("nan")
+    vals = [10.0, 50.0, nan, 90.0, nan, 130.0, None, nan, 170.0]
+    return spark.createDataFrame(
+        [(t0 + dt.timedelta(minutes=i), v) for i, v in enumerate(vals)],
+        "ts timestamp, value double",
+    )
+
+
+def test_streaming_psi_drift_drops_nan_like_its_baseline(spark):
+    """A window scored against ``baseline_histogram`` of its own rows:
+    NaN and NULL values are dropped on both sides, so ``n_rows`` counts
+    the finite values and the window reads no drift."""
+    from pynomaly_spark.psi import baseline_histogram
+    from pynomaly_spark.streaming import streaming_psi_drift
+
+    ev = _nan_window(spark)
+    (r,) = streaming_psi_drift(ev, baseline_histogram(ev, "value")).collect()
+    assert r.n_rows == 5
+    assert r.psi == 0.0
+
+
+def test_streaming_w1_drift_drops_nan_like_its_baseline(spark):
+    """The integer sibling: against ``baseline_cumulative`` of the same
+    rows the W1 numerator is exactly 0 over the 5 finite values."""
+    from pynomaly_spark.psi import baseline_cumulative
+    from pynomaly_spark.streaming import streaming_w1_drift
+
+    ev = _nan_window(spark)
+    (r,) = streaming_w1_drift(ev, baseline_cumulative(ev, "value")).collect()
+    assert (r.n_rows, r.w1_num, r.w1_bins_6dp) == (5, 0, 0)
