@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .packing import _running_sums
+
 __all__ = [
     "target_encode_loo",
     "rolling_range_aggs",
@@ -419,15 +421,11 @@ def quantile_bins(
     formula is engine-independent.  Ties at a bin boundary split by
     ``id`` — deterministic cross-engine.
 
-    Scale (100 TB): the naive form is one GLOBAL window — every row
-    through a single reducer.  This is the two-level rank instead (the
-    distributed prefix-sum shape shared with ``packing.pack_chunks``
-    and ``sampling.shuffle_order``): rows bucket by the MONOTONE coarse
-    key ``floor(value / coarse_width)``, rank locally within their
-    bucket, and add a per-bucket offset from the cumulative bucket
-    counts — a frame with one row PER BUCKET, the only thing that ever
-    passes through a single-partition window.  Pick ``coarse_width``
-    so bucket count is thousands, each bucket executor-sized.
+    Scale (100 TB): ``rank`` is the two-level running count of
+    ``packing._running_sums``, bucketed by the MONOTONE coarse key
+    ``floor(value / coarse_width)`` — never one global window.  Pick
+    ``coarse_width`` so bucket count is thousands, each bucket
+    executor-sized.
 
     NULL values / ids are excluded (a NULL has no rank; rank-bin a
     filled or flagged copy instead).
@@ -438,45 +436,17 @@ def quantile_bins(
         raise ValueError(f"coarse_width must be > 0, got {coarse_width}")
     x = F.col(value_col)
     src = df.where(x.isNotNull() & F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("id"),
-        x.alias("value"),
-        F.floor(x / F.lit(coarse_width)).cast("long").alias("_b"),
+        F.col(id_col).alias("id"), x.alias("value")
     )
-    local = src.withColumn(
-        "_lr",
-        F.row_number().over(
-            Window.partitionBy("_b").orderBy("value", "id")
-        ),
+    ranked = _running_sums(
+        src,
+        ["value", "id"],
+        [F.floor(F.col("value") / F.lit(coarse_width)).cast("long")],
+        {"rank": F.lit(1)},
+        totals=True,
     )
-    counts = src.groupBy("_b").agg(F.count(F.lit(1)).alias("_bn"))
-    # one row per bucket: the exclusive prefix sum and the grand total
-    # both come from this tiny frame, never from the row-level data
-    w_off = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        F.col("_b").alias("_ob"),
-        F.coalesce(F.sum("_bn").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_bn").over(
-            Window.orderBy("_b").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_n"),
-    )
-    ranked = local.join(
-        F.broadcast(offsets), F.col("_b") == F.col("_ob")
-    ).select(
-        "id",
-        "value",
-        (F.col("_off") + F.col("_lr")).alias("rank"),
-        "_n",
-    )
-    return ranked.select(
-        "id",
-        "value",
-        "rank",
-        F.expr(f"((rank - 1) * {int(k)}) div _n").cast("long").alias("bin"),
-    )
+    bin_ = F.expr(f"((rank - 1) * {int(k)}) div rank_total").cast("long")
+    return ranked.select("id", "value", "rank", bin_.alias("bin"))
 
 
 def ols_moments(

@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from .profiling import _pearson_6dp
+
 __all__ = [
     "pagerank_fixed_point",
     "triangle_count",
@@ -526,8 +528,7 @@ def degree_assortativity(
     pipeline tracks across snapshots to catch topology drift that
     per-node metrics miss.
 
-    All moments are exact integer sums in decimal(38,0); the single
-    closed-form division is a mirrored IEEE tree truncated to 6-dp
+    The correlation is ``profiling._pearson_6dp``'s exact-moment 6-dp
     fixed point (the ``spearman_rho`` discipline).  NULL when every
     node has the same degree (zero variance).
 
@@ -559,37 +560,16 @@ def degree_assortativity(
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("_du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("_dv"))
     keyed = und.join(du, "u").join(dv, "v")
-    dec = "decimal(38,0)"
     de = keyed.select(
-        F.col("_du").cast(dec).alias("x"), F.col("_dv").cast(dec).alias("y")
-    ).unionAll(
-        keyed.select(
-            F.col("_dv").cast(dec).alias("x"),
-            F.col("_du").cast(dec).alias("y"),
-        )
-    )
-    m = de.agg(
-        F.count(F.lit(1)).cast(dec).alias("_n"),
-        F.sum("x").cast(dec).alias("_sx"),
-        F.sum("y").cast(dec).alias("_sy"),
-        F.sum(F.col("x") * F.col("x")).cast(dec).alias("_sxx"),
-        F.sum(F.col("y") * F.col("y")).cast(dec).alias("_syy"),
-        F.sum(F.col("x") * F.col("y")).cast(dec).alias("_sxy"),
-    )
+        F.col("_du").alias("x"), F.col("_dv").alias("y")
+    ).unionAll(keyed.select(F.col("_dv").alias("x"), F.col("_du").alias("y")))
     nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    num = F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    vx = F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    vy = F.col("_n") * F.col("_syy") - F.col("_sy") * F.col("_sy")
-    r = F.when(
-        (vx > 0) & (vy > 0),
-        F.floor(
-            num.cast("double")
-            * F.lit(1000000.0)
-            / F.sqrt(vx.cast("double") * vy.cast("double"))
-        ),
-    ).cast("long")
-    return m.crossJoin(F.broadcast(nn)).select(
-        (F.col("_n") / 2).cast("long").alias("n_edges"),
-        "n_nodes",
-        r.alias("r_6dp"),
+    return (
+        _pearson_6dp(de, "x", "y")
+        .crossJoin(F.broadcast(nn))
+        .select(
+            (F.col("_n") / 2).cast("long").alias("n_edges"),
+            "n_nodes",
+            F.col("_r6").alias("r_6dp"),
+        )
     )

@@ -540,16 +540,16 @@ def loop_scores_tied(
     same neighbor-distance multiset and the same neighborhood of
     distinct vectors, so the O(m^2) row-level pairwise pass collapses
     to O(D^2) over the D distinct vectors with multiplicities (the
-    kernel docstring's at-scale remedy for tie-heavy features).  All
-    stages after the kNN run at row level on the expanded arrays, so
-    ssd/sigma/pdist/plof/eplof2/nplof/scores are bit-identical to the
-    row-level path; the only possible deviation is the float summation
-    order of the neighborhood EV when an exact distance tie spans
-    several distinct vectors (equal-value reordering there is absorbed
-    by callers' 6-dp rounding).  Requires position order == external id
-    order (the ``exact_tiebreak`` id sort in
-    :func:`pynomaly_spark.drift.loop_grouped`) and
-    NaN-free features (falls back to the row-level path otherwise).
+    kernel docstring's at-scale remedy for tie-heavy features).  The
+    stages after the kNN are :func:`loop_from_knn` on the kNN expanded
+    back to rows, so ssd/sigma/pdist/plof/eplof2/nplof/scores are
+    bit-identical to the row-level path; the only possible deviation
+    is the float summation order of the neighborhood EV when an exact
+    distance tie spans several distinct vectors (equal-value
+    reordering there is absorbed by callers' 6-dp rounding).  Requires
+    position order == external id order (the ``exact_tiebreak`` id sort
+    in :func:`pynomaly_spark.drift.loop_grouped`) and NaN-free features
+    (falls back to the row-level path otherwise).
     """
     pts = _as_matrix(points)
     n = pts.shape[0]
@@ -580,36 +580,11 @@ def loop_scores_tied(
     ddist, didx = _tied_knn_distinct(
         uniq, counts, positions_by_vec, k
     )
-    # expand the kNN back to rows; every downstream stage then runs the
-    # exact loop_from_knn math on per-row arrays (bit-parity)
-    d = ddist[inv]
-    ssd = np.einsum("ij,ij->i", d, d)
-    sigma = np.sqrt(ssd / float(k))
-    pdist = float(extent) * sigma
-    # neighbor EV: a neighbor's pdist is a function of its distinct
-    # vector alone, so gather at distinct level and expand
-    pdist_d = float(extent) * np.sqrt(
-        np.einsum("ij,ij->i", ddist, ddist) / float(k)
-    )
-    with np.errstate(invalid="ignore"):
-        ev = np.nanmean(pdist_d[didx], axis=1)[inv]
-    plof = _prob_outlier_factor(pdist, ev)
-    vals = plof[~np.isnan(plof)]
-    eplof2 = np.full(n, np.power(vals, 2).sum() / float(vals.size))
-    nplof = float(extent) * np.sqrt(eplof2)
-    scores = _local_outlier_probability(plof, nplof)
-    return LoopResult(
-        ssd=ssd,
-        standard_distance=sigma,
-        prob_distance=pdist,
-        prob_distance_ev=ev,
-        plof=plof,
-        eplof2=eplof2,
-        nplof=nplof,
-        scores=scores,
-        nplof_max=float(np.max(nplof)),
-        mean_prob_distance_ev=float(np.mean(ev)),
-    )
+    # expand the kNN back to rows, naming each neighbor by the first row
+    # of its distinct vector (every member row has the same pdist), and
+    # run the exact loop_from_knn math on the per-row arrays
+    rep = order[bounds[:-1]]
+    return loop_from_knn(ddist[inv], rep[didx][inv], k, extent=extent)
 
 
 def score_new_points(

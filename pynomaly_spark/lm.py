@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .packing import _running_sums
 from .textops import _TOKEN_SPLIT
 
 __all__ = [
@@ -372,29 +373,21 @@ def build_vocab(
 
     Returns ``token, n, vocab_id``.
 
-    Scale (100 TB of tokens → 10^8-row vocabularies): the naive id
-    assignment is ``row_number() OVER (ORDER BY n DESC, token)`` — a
-    GLOBAL window that funnels the whole vocabulary through one
-    reducer.  Here ids come from a banded two-level rank, the
-    ``sampling.shuffle_order`` discipline adapted to a non-uniform
-    key: rows bucket by ``(-min(count, head_cap), first token char)``
-    — a key ORDER-MONOTONE in (count DESC, token) because bucket 1
-    decreases with count and, when counts tie below the cap, the first
-    character prefixes the token order; all heavy hitters
+    Scale (100 TB of tokens → 10^8-row vocabularies): ids are the
+    two-level running count of ``packing._running_sums``, never a
+    global ``row_number()``.  Its buckets ``(-min(count, head_cap),
+    first token char)`` are ORDER-MONOTONE in (count DESC, token):
+    bucket 1 decreases with count and, when counts tie below the cap,
+    the first character prefixes the token order; all heavy hitters
     (count ≥ head_cap, a handful of rows by Zipf) share one head
-    bucket.  Each bucket ranks its slice in parallel; bucket counts
-    (≤ cap × alphabet + 1 rows, control-plane) prefix-sum into
-    broadcast offsets; ``vocab_id = offset + local_rank``.  The
-    largest bucket is one (count, first-char) cell of the count=1
-    tail, ~|vocab| / (alphabet size) rows — bounded parallelism
-    without any quantile sketch.
+    bucket.  The largest bucket is one (count, first-char) cell of the
+    count=1 tail, ~|vocab| / (alphabet size) rows — bounded
+    parallelism without any quantile sketch.
 
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (LM preprocessing; feeds ``unigram_model`` /
     ``dsir_scores`` pipelines with stable ids).
     """
-    from pyspark.sql import Window
-
     if min_count < 1:
         raise ValueError(f"build_vocab: min_count must be >= 1")
     if head_cap < 2:
@@ -413,37 +406,9 @@ def build_vocab(
     b2 = F.when(F.col("n") >= head_cap, F.lit("")).otherwise(
         F.substring("token", 1, 1)
     )
-    keyed = counts.withColumn("_b1", b1).withColumn("_b2", b2)
-    w_local = Window.partitionBy("_b1", "_b2").orderBy(
-        F.col("n").desc(), "token"
-    )
-    local = keyed.withColumn(
-        "_local", F.row_number().over(w_local).cast("long") - 1
-    )
-    w_bkt = Window.orderBy("_b1", "_b2").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        keyed.groupBy("_b1", "_b2")
-        .agg(F.count(F.lit(1)).alias("_bc"))
-        .select(
-            F.col("_b1").alias("_r_b1"),
-            F.col("_b2").alias("_r_b2"),
-            F.coalesce(F.sum("_bc").over(w_bkt), F.lit(0)).alias("_off"),
-        )
-    )
-    return (
-        local.join(
-            F.broadcast(offsets),
-            (F.col("_b1") == F.col("_r_b1"))
-            & (F.col("_b2") == F.col("_r_b2")),
-        )
-        .select(
-            "token",
-            "n",
-            (F.col("_off") + F.col("_local")).cast("long").alias("vocab_id"),
-        )
-    )
+    return _running_sums(
+        counts, [F.col("n").desc(), "token"], [b1, b2], {"_rank": F.lit(1)}
+    ).select("token", "n", (F.col("_rank") - 1).alias("vocab_id"))
 
 
 def feature_hash(

@@ -14,19 +14,26 @@ The whole operator reduces to an EXCLUSIVE PREFIX SUM of token counts in
 stream order — the one primitive that is sequential by definition.  A
 naive ``Window.orderBy`` with no partition key funnels the corpus through
 a single reducer; at 100 TB that is the job.  Instead the scan is
-two-level, the classic distributed prefix sum:
+two-level, the classic distributed prefix sum (:func:`_running_sums`):
 
-1. range-bucket the stream (boundary literals from ``approxQuantile`` —
-   a bounded, driver-side control-plane step; boundary placement affects
-   only parallelism, never results), local cumsum per ``(group, bucket)``
-   window — each bucket sorts ~1/n_buckets of its group, in parallel;
-2. per-bucket token totals (one tiny ``groupBy`` relation, groups ×
-   buckets rows), exclusive-prefix them over the bucket index, broadcast
-   the offsets back.
+1. bucket the rows by a key that is monotone in the order, and run a
+   local running sum per ``(group, bucket)`` window — each bucket sorts
+   its own slice, in parallel;
+2. per-bucket totals (one tiny ``groupBy`` relation, groups × buckets
+   rows), exclusive-prefix them over the bucket index, broadcast the
+   offsets back.
 
-``cum_before = bucket_offset + local_before`` is exact for any bucket
-placement.  Chunk ids stay under 2^53 (a 100 TB corpus is ~2×10^13
-tokens), so the double-precision ``floor`` division is exact.
+``running = bucket_offset + local_running`` is exact for any bucket
+placement.  Every global running sum or rank of the library runs
+through this one scan (``features.quantile_bins``, ``lm.build_vocab``,
+``sampling.shuffle_order``, the ``profiling`` two-sample tests and
+Spearman ranks, ``sessions.concurrency_profile``, ``queries.q_part_abc``).
+
+``pack_chunks`` range-buckets the stream with boundary literals from
+``approxQuantile`` — a bounded control-plane sketch whose boundary
+placement affects only parallelism, never results.  Chunk ids stay
+under 2^53 (a 100 TB corpus is ~2×10^13 tokens), so the
+double-precision ``floor`` division is exact.
 
 Preconditions (documented, mirrored by the oracle twin): ``order_col``
 must be unique within its group — a total stream order is what "the
@@ -37,10 +44,86 @@ content and are dropped.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["pack_chunks", "chunk_stats", "sliding_chunks"]
+
+
+def _running_sums(
+    df: DataFrame,
+    order: list,
+    bucket: list,
+    sums: dict,
+    by=(),
+    totals: bool = False,
+) -> DataFrame:
+    """``df`` plus, for each ``name -> column`` of ``sums``, the INCLUSIVE
+    running sum ``name`` of ``column`` over ``order`` within each ``by``
+    group, computed as the two-level scan of the module docstring.
+
+    The frame is ROWS, so the running sum of ``F.lit(1)`` is
+    ``row_number()``; subtract a row's own value for the exclusive sum
+    (exact: every caller sums integers).  NULL values add nothing.
+
+    ``bucket`` is a list of non-NULL columns, each non-decreasing along
+    ``order`` within a ``by`` group (negate a key for a descending
+    order).  Only the per-bucket totals — groups × buckets rows — pass
+    through the offsets window, which is what keeps the scan parallel.
+    ``by`` columns join back null-safely: a NULL group is a group.
+    ``totals=True`` also adds ``<name>_total``, the sum over the whole
+    ``by`` group, read off the same per-bucket totals.
+    """
+    by = list(by)
+    bk = [f"_rs_bucket{i}" for i in range(len(bucket))]
+    keyed = df.select("*", *[c.alias(b) for b, c in zip(bk, bucket)])
+    w_local = (
+        Window.partitionBy(*by, *bk)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = keyed.select(
+        "*",
+        *[F.sum(c).over(w_local).alias(f"_rs_l_{n}") for n, c in sums.items()],
+    )
+    per_bucket = keyed.groupBy(*by, *bk).agg(
+        *[F.sum(c).alias(f"_rs_t_{n}") for n, c in sums.items()]
+    )
+    w_bkt = Window.partitionBy(*by).orderBy(*bk)
+    w_off = w_bkt.rowsBetween(Window.unboundedPreceding, -1)
+    offsets = [
+        F.coalesce(F.sum(f"_rs_t_{n}").over(w_off), F.lit(0))
+        .alias(f"_rs_o_{n}")
+        for n in sums
+    ]
+    if totals:
+        w_all = w_bkt.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        offsets += [
+            F.sum(f"_rs_t_{n}").over(w_all).alias(f"{n}_total") for n in sums
+        ]
+    offsets_df = per_bucket.select(
+        *[F.col(c).alias(f"_rs_k{i}") for i, c in enumerate(by)],
+        *[F.col(b).alias(f"_rs_r{i}") for i, b in enumerate(bk)],
+        *offsets,
+    )
+    cond = [F.col(b) == F.col(f"_rs_r{i}") for i, b in enumerate(bk)] + [
+        F.col(c).eqNullSafe(F.col(f"_rs_k{i}")) for i, c in enumerate(by)
+    ]
+    return local.join(F.broadcast(offsets_df), reduce(and_, cond)).select(
+        *df.columns,
+        *[
+            (
+                F.col(f"_rs_o_{n}") + F.coalesce(F.col(f"_rs_l_{n}"), F.lit(0))
+            ).alias(n)
+            for n in sums
+        ],
+        *[f"{n}_total" for n in sums if totals],
+    )
 
 
 def pack_chunks(
@@ -96,40 +179,18 @@ def pack_chunks(
     for b in bounds:  # flat comparison sum — <=63 terms, whole-stage codegen
         bkt = bkt + (F.col(order_col).cast("double") >= F.lit(b)).cast("int")
     # a non-castable order value (string ids) would make the bucket NULL
-    # and the null-unsafe offsets join would silently DROP those rows —
-    # coalesce pins them to bucket 0 (correctness is bucket-invariant)
-    keyed = src.withColumn("_bucket", F.coalesce(bkt, F.lit(0)))
-
-    # level 1: local exclusive cumsum inside each (group, bucket) slice
-    w_local = (
-        Window.partitionBy(*grp, "_bucket")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = keyed.withColumn(
-        "_local_before", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-
-    # level 2: exclusive prefix of bucket totals — groups x buckets rows,
-    # a control-plane relation; broadcast back
-    totals = keyed.groupBy(*grp, "_bucket").agg(
-        F.sum("n_tokens").alias("_bt")
-    )
-    w_bkt = (
-        Window.partitionBy(*grp)
-        .orderBy("_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.select(
-        *[F.col(c).alias(f"_r_{c}") for c in grp],
-        F.col("_bucket").alias("_r_bucket"),
-        F.coalesce(F.sum("_bt").over(w_bkt), F.lit(0)).alias("_bucket_off"),
-    )
-    cond = F.col("_bucket") == F.col("_r_bucket")
-    for c in grp:  # null group values are legitimate stream keys
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_r_{c}"))
-    joined = local.join(F.broadcast(offsets), cond).withColumn(
-        "cum_before", F.col("_bucket_off") + F.col("_local_before")
+    # and the offsets join would silently DROP those rows — coalesce pins
+    # them to bucket 0 (correctness is bucket-invariant)
+    joined = _running_sums(
+        src,
+        [order_col],
+        [F.coalesce(bkt, F.lit(0))],
+        {"_cum": F.col("n_tokens")},
+        by=grp,
+    ).withColumn(
+        # n_tokens is never NULL here: the coalesce only keeps the
+        # column's schema non-nullable
+        "cum_before", F.coalesce(F.col("_cum") - F.col("n_tokens"), F.lit(0))
     )
 
     capL = F.lit(int(cap)).cast("long")

@@ -50,6 +50,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .packing import _running_sums
+
 __all__ = [
     "key_frequency_histogram",
     "join_key_profile",
@@ -1609,17 +1611,13 @@ def _two_sample_cum(
     :func:`rank_sum_u`: one row per distinct non-NULL value ``_v`` with
     its per-side counts ``_c1``/``_c2``, the INCLUSIVE cumulative counts
     ``_cum1``/``_cum2`` (#values <= v per side) and the side totals
-    ``_n1``/``_n2``.
+    ``_cum1_total``/``_cum2_total``.
 
     Both samples collapse to per-distinct-value counts first (map-side
-    combine), then the cumulative counts run as the TWO-LEVEL scan
-    (quantile_bins/pack_chunks shape): a local window inside monotone
-    value buckets (``value div coarse_width``) plus a broadcast
-    exclusive prefix over the per-bucket totals — never a global
-    single-reducer window over the value order.
+    combine); the cumulative counts and totals are the two-level
+    running sums of ``packing._running_sums`` over monotone value
+    buckets (``value div coarse_width``).
     """
-    from pyspark.sql import Window
-
     if coarse_width < 1:
         raise ValueError(f"{name}: coarse_width must be >= 1")
     for side, frame in (("a", df_a), ("b", df_b)):
@@ -1635,38 +1633,25 @@ def _two_sample_cum(
             F.lit(c2).alias("_c2"),
         )
 
-    tagged = tag(df_a, 1, 0).unionAll(tag(df_b, 0, 1))
-    per_v = tagged.groupBy("_v").agg(
-        F.sum("_c1").alias("_c1"), F.sum("_c2").alias("_c2")
-    ).withColumn("_bkt", F.expr(f"_v div {int(coarse_width)}"))
-    w_loc = (
-        Window.partitionBy("_bkt")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    per_v = (
+        tag(df_a, 1, 0)
+        .unionAll(tag(df_b, 0, 1))
+        .groupBy("_v")
+        .agg(F.sum("_c1").alias("_c1"), F.sum("_c2").alias("_c2"))
     )
-    w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = per_v.groupBy("_bkt").agg(
-        F.sum("_c1").alias("_t1"), F.sum("_c2").alias("_t2")
-    ).select(
-        F.col("_bkt").alias("_ob"),
-        F.coalesce(F.sum("_t1").over(w_off), F.lit(0)).alias("_o1"),
-        F.coalesce(F.sum("_t2").over(w_off), F.lit(0)).alias("_o2"),
+    return _running_sums(
+        per_v,
+        ["_v"],
+        [F.expr(f"_v div {int(coarse_width)}")],
+        {"_cum1": F.col("_c1"), "_cum2": F.col("_c2")},
+        totals=True,
     )
-    n = tagged.agg(
-        F.sum("_c1").cast("long").alias("_n1"),
-        F.sum("_c2").cast("long").alias("_n2"),
-    )
-    return (
-        per_v.join(F.broadcast(offsets), F.col("_bkt") == F.col("_ob"))
-        .select(
-            "_v",
-            "_c1",
-            "_c2",
-            (F.col("_o1") + F.sum("_c1").over(w_loc)).alias("_cum1"),
-            (F.col("_o2") + F.sum("_c2").over(w_loc)).alias("_cum2"),
-        )
-        .crossJoin(F.broadcast(n))
-    )
+
+
+def _ratio_6dp(num: Column, den: Column) -> Column:
+    """``round(num / den, 6)``, NULL when ``den`` is 0 — one empty side
+    has no defined two-sample statistic."""
+    return F.when(den != 0, F.round(num.cast("double") / den, 6))
 
 
 def ks_exact(
@@ -1684,38 +1669,33 @@ def ks_exact(
     comparisons, so it cannot ulp-flip cross-engine; only the final
     reported ratio rounds (6 dp).
 
-    Returns one row: ``n_a, n_b, d_num, d``.
+    Returns one row: ``n_a, n_b, d_num, d`` (``d`` is NULL when a side
+    has no non-NULL value).
 
-    Scale (100 TB): both samples collapse to per-distinct-value counts
-    first (map-side combine), then the cumulative counts run as the
-    TWO-LEVEL scan (quantile_bins/pack_chunks shape): a local window
-    inside monotone value buckets (``value div coarse_width``) plus a
-    broadcast exclusive prefix over the per-bucket totals — never a
-    global single-reducer window over the value order.  ``d_num`` is
-    BIGINT — promote the cross-products to decimal(38,0) beyond ~3·10⁹
-    rows per side.
+    Scale (100 TB): per-distinct-value counts and the two-level
+    cumulative scan of ``_two_sample_cum`` — never a global
+    single-reducer window over the value order.  ``d_num`` is BIGINT —
+    promote the cross-products to decimal(38,0) beyond ~3·10⁹ rows per
+    side.
 
     Reference parity: extends the reference's distribution-drift stance
     (LoOP scores; psi.histogram_ks) with an exact test — engine
     addition.
     """
     cum = _two_sample_cum("ks_exact", df_a, df_b, value_col, coarse_width)
-    gap = F.abs(F.col("_n2") * F.col("_cum1") - F.col("_n1") * F.col("_cum2"))
+    n1, n2 = F.col("_cum1_total"), F.col("_cum2_total")
+    gap = F.abs(n2 * F.col("_cum1") - n1 * F.col("_cum2"))
     return (
         cum.agg(
-            F.max("_n1").alias("n_a"),
-            F.max("_n2").alias("n_b"),
+            F.max(n1).alias("n_a"),
+            F.max(n2).alias("n_b"),
             F.max(gap).cast("long").alias("d_num"),
         )
         .select(
             "n_a",
             "n_b",
             "d_num",
-            F.round(
-                F.col("d_num").cast("double")
-                / (F.col("n_a") * F.col("n_b")),
-                6,
-            ).alias("d"),
+            _ratio_6dp(F.col("d_num"), F.col("n_a") * F.col("n_b")).alias("d"),
         )
     )
 
@@ -1735,11 +1715,11 @@ def rank_sum_u(
     display only).
 
     Returns one row: ``n_a, n_b, u2, effect`` (effect = U/(nA·nB);
-    0.5 = stochastically equal, 1.0 = A always above B).
+    0.5 = stochastically equal, 1.0 = A always above B; NULL when a
+    side has no non-NULL value).
 
-    Scale: identical shape to ``ks_exact`` — per-distinct-value counts
-    (map-side combined), cumulative B-counts via the two-level scan,
-    one final aggregate.  ``u2 ≤ 2·nA·nB``: promote to decimal(38,0)
+    Scale: identical shape to ``ks_exact`` — the ``_two_sample_cum``
+    scan, one final aggregate.  ``u2 ≤ 2·nA·nB``: promote to decimal(38,0)
     beyond ~2·10⁹ rows per side.
     """
     cum = _two_sample_cum("rank_sum_u", df_a, df_b, value_col, coarse_width)
@@ -1747,18 +1727,16 @@ def rank_sum_u(
     term = F.col("_c1") * (F.lit(2) * F.col("_cum2") - F.col("_c2"))
     return (
         cum.agg(
-            F.max("_n1").alias("n_a"),
-            F.max("_n2").alias("n_b"),
+            F.max("_cum1_total").alias("n_a"),
+            F.max("_cum2_total").alias("n_b"),
             F.sum(term).cast("long").alias("u2"),
         )
         .select(
             "n_a",
             "n_b",
             "u2",
-            F.round(
-                F.col("u2").cast("double")
-                / (F.lit(2) * F.col("n_a") * F.col("n_b")),
-                6,
+            _ratio_6dp(
+                F.col("u2"), F.lit(2) * F.col("n_a") * F.col("n_b")
             ).alias("effect"),
         )
     )
@@ -1844,10 +1822,9 @@ def spearman_rho(
     (``rho_6dp`` is NULL when either column is constant).
 
     Scale (100 TB): per column, a per-distinct-value count (map-side
-    combined) and the TWO-LEVEL cumulative scan (bucketed local window
-    + broadcast bucket offsets — never a global single-reducer
-    window), one value-keyed join back per column, ONE final moment
-    aggregate.  Identical shape to ``ks_exact``/``rank_sum_u``.
+    combined) and the two-level running count of
+    ``packing._running_sums`` (never a global single-reducer window),
+    one value-keyed join back per column, ONE final moment aggregate.
 
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (profiling/statistics family).
@@ -1865,68 +1842,72 @@ def spearman_rho(
     )
 
     def doubled_midranks(col: str) -> DataFrame:
-        per_v = (
-            base.groupBy(F.col(col).alias("_v"))
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .withColumn("_bkt", F.expr(f"_v div {int(coarse_width)}"))
+        per_v = base.groupBy(F.col(col).alias("_v")).agg(
+            F.count(F.lit(1)).alias("_c")
         )
-        w_loc = (
-            Window.partitionBy("_bkt")
-            .orderBy("_v")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        local = per_v.withColumn(
-            "_lb", F.coalesce(F.sum("_c").over(w_loc), F.lit(0))
-        )
-        totals = per_v.groupBy("_bkt").agg(F.sum("_c").alias("_t"))
-        w_off = Window.orderBy("_bkt").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = totals.select(
-            F.col("_bkt").alias("_ob"),
-            F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
-        )
-        return (
-            local.join(F.broadcast(offsets), F.col("_bkt") == F.col("_ob"))
-            .select(
-                "_v",
-                (
-                    F.lit(2) * (F.col("_off") + F.col("_lb"))
-                    + F.col("_c")
-                    + F.lit(1)
-                ).alias("_dr"),
-            )
+        # |{<v}| is the running count through v minus c(v)
+        return _running_sums(
+            per_v,
+            ["_v"],
+            [F.expr(f"_v div {int(coarse_width)}")],
+            {"_cum": F.col("_c")},
+        ).select(
+            "_v",
+            (
+                F.lit(2) * (F.col("_cum") - F.col("_c"))
+                + F.col("_c")
+                + F.lit(1)
+            ).alias("_dr"),
         )
 
-    dec = "decimal(38,0)"
     rx = doubled_midranks("_x").select(
         F.col("_v").alias("_vx"), F.col("_dr").alias("_drx")
     )
     ry = doubled_midranks("_y").select(
         F.col("_v").alias("_vy"), F.col("_dr").alias("_dry")
     )
-    j = (
-        base.join(rx, F.col("_x") == F.col("_vx"))
-        .join(ry, F.col("_y") == F.col("_vy"))
-        .select(
-            F.col("_drx").cast(dec).alias("_a"),
-            F.col("_dry").cast(dec).alias("_b"),
-        )
-    )
-    m = j.agg(
-        F.count(F.lit(1)).cast(dec).alias("_n"),
-        F.sum("_a").cast(dec).alias("_sx"),
-        F.sum("_b").cast(dec).alias("_sy"),
-        F.sum(F.col("_a") * F.col("_a")).cast(dec).alias("_sxx"),
-        F.sum(F.col("_b") * F.col("_b")).cast(dec).alias("_syy"),
-        F.sum(F.col("_a") * F.col("_b")).cast(dec).alias("_sxy"),
+    j = base.join(rx, F.col("_x") == F.col("_vx")).join(
+        ry, F.col("_y") == F.col("_vy")
     )
     ndx = rx.agg(F.count(F.lit(1)).cast("long").alias("n_distinct_x"))
     ndy = ry.agg(F.count(F.lit(1)).cast("long").alias("n_distinct_y"))
+    return (
+        _pearson_6dp(j, "_drx", "_dry")
+        .crossJoin(F.broadcast(ndx))
+        .crossJoin(F.broadcast(ndy))
+        .select(
+            F.col("_n").cast("long").alias("n"),
+            "n_distinct_x",
+            "n_distinct_y",
+            F.col("_r6").alias("rho_6dp"),
+        )
+    )
+
+
+def _pearson_6dp(frame: DataFrame, x: str, y: str) -> DataFrame:
+    """One row ``_n, _r6``: the row count of ``frame`` (decimal(38,0))
+    and the Pearson correlation of its integer columns ``x`` and ``y``
+    truncated to 6-dp fixed point (BIGINT), NULL under zero variance.
+
+    Every moment is an exact integer sum in decimal(38,0); the single
+    closed-form division is an IEEE expression tree the SQL twins mirror
+    verbatim (decimal→double is round-to-nearest on both engines), then
+    ``floor`` truncates it — the statistic cannot ulp-flip cross-engine.
+    """
+    dec = "decimal(38,0)"
+    a, b = F.col(x).cast(dec), F.col(y).cast(dec)
+    m = frame.agg(
+        F.count(F.lit(1)).cast(dec).alias("_n"),
+        F.sum(a).cast(dec).alias("_sx"),
+        F.sum(b).cast(dec).alias("_sy"),
+        F.sum(a * a).cast(dec).alias("_sxx"),
+        F.sum(b * b).cast(dec).alias("_syy"),
+        F.sum(a * b).cast(dec).alias("_sxy"),
+    )
     num = F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
     vx = F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     vy = F.col("_n") * F.col("_syy") - F.col("_sy") * F.col("_sy")
-    rho = F.when(
+    r = F.when(
         (vx > 0) & (vy > 0),
         F.floor(
             num.cast("double")
@@ -1934,16 +1915,7 @@ def spearman_rho(
             / F.sqrt(vx.cast("double") * vy.cast("double"))
         ),
     ).cast("long")
-    return (
-        m.crossJoin(F.broadcast(ndx))
-        .crossJoin(F.broadcast(ndy))
-        .select(
-            F.col("_n").cast("long").alias("n"),
-            "n_distinct_x",
-            "n_distinct_y",
-            rho.alias("rho_6dp"),
-        )
-    )
+    return m.select("_n", r.alias("_r6"))
 
 
 def p_chart(

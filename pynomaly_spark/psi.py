@@ -45,10 +45,11 @@ _DEC = "decimal(38,0)"
 
 
 def _bin(x: Column, n_bins: int, bin_width: float) -> Column:
-    return F.greatest(
-        F.lit(0),
-        F.least(F.lit(n_bins - 1), F.floor(x / F.lit(bin_width)).cast("int")),
-    )
+    """``floor(x / bin_width)`` clamped to ``[0, n_bins - 1]``.  The clamp
+    runs in double before the INT cast, so a value past ``2^31`` bins
+    lands in the top bin instead of overflowing the cast."""
+    scaled = F.greatest(F.lit(0.0), x / F.lit(bin_width))
+    return F.floor(F.least(F.lit(float(n_bins - 1)), scaled)).cast("int")
 
 
 def _binned(

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .packing import _running_sums
 from .profiling import _check_k, _k_sigma_sides
 
 __all__ = [
@@ -329,17 +330,12 @@ def shuffle_order(
     well-defined and the oracle twin is a plain ``row_number() OVER
     (ORDER BY md5(...), id)``.
 
-    Scale (100 TB reasoning): a global ``row_number`` with no
-    partition key funnels the corpus through ONE reducer — at 10^12
-    rows that single sort is the job.  Here the md5 key is uniform, so
-    the two-level scan needs no quantile sketch (unlike
-    :func:`~pynomaly_spark.packing.pack_chunks`, whose order ids are
-    arbitrary): ``bucket = floor(key16 * n_buckets / 65536)`` on the
-    first four hex chars is MONOTONE in the key string, each bucket
-    ranks its ~1/n_buckets slice in parallel, and bucket row-counts
-    (one tiny relation, ≤``n_buckets`` rows) prefix-sum into broadcast
-    offsets.  ``position = offset[bucket] + local_rank`` is exact
-    because bucket ranges partition the key order contiguously.
+    Scale (100 TB reasoning): ``position`` is the two-level running
+    count of ``packing._running_sums``, never one global ``row_number``.
+    The md5 key is uniform, so the buckets need no quantile sketch
+    (unlike :func:`~pynomaly_spark.packing.pack_chunks`, whose order
+    ids are arbitrary): ``bucket = floor(key16 * n_buckets / 65536)``
+    on the first four hex chars is MONOTONE in the key string.
 
     Rows with a NULL id carry no identity and are dropped (documented,
     mirrored by the twin).  Ids are expected unique; duplicate ids tie
@@ -359,44 +355,17 @@ def shuffle_order(
         * n_buckets
         / F.lit(65536)
     ).cast("int")
-    keyed = (
-        df.where(F.col(id_col).isNotNull())
-        .withColumn("_key", key)
-        .withColumn("_bucket", bkt)
+    ranked = _running_sums(
+        df.where(F.col(id_col).isNotNull()).withColumn("_key", key),
+        ["_key", id_col],
+        [bkt],
+        {"_row_number": F.lit(1)},
     )
-
-    # level 1: rank inside each bucket (parallel, ~n/n_buckets rows each)
-    w_local = Window.partitionBy("_bucket").orderBy("_key", id_col)
-    local = keyed.withColumn(
-        "_local", F.row_number().over(w_local).cast("long") - 1
-    )
-
-    # level 2: exclusive prefix of bucket counts — a <=n_buckets-row
-    # control-plane relation (its single-partition window is bounded by
-    # construction); broadcast back
-    w_bkt = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        keyed.groupBy("_bucket")
-        .agg(F.count(F.lit(1)).alias("_bc"))
-        .select(
-            F.col("_bucket").alias("_r_bucket"),
-            F.coalesce(F.sum("_bc").over(w_bkt), F.lit(0)).alias("_off"),
-        )
-    )
-    pos = (F.col("_off") + F.col("_local")).alias("position")
-    out = local.join(
-        F.broadcast(offsets), F.col("_bucket") == F.col("_r_bucket")
-    )
-    cols = [*df.columns, pos]
+    pos = F.col("_row_number") - 1
+    cols = [*df.columns, pos.alias("position")]
     if n_shards:
-        cols.append(
-            F.pmod(F.col("_off") + F.col("_local"), F.lit(n_shards))
-            .cast("long")
-            .alias("shard")
-        )
-    return out.select(*cols)
+        cols.append(F.pmod(pos, F.lit(n_shards)).cast("long").alias("shard"))
+    return ranked.select(*cols)
 
 
 def weighted_sample(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .packing import _running_sums
+
 __all__ = [
     "sessionize",
     "session_stats",
@@ -188,14 +190,11 @@ def concurrency_profile(
     non-question cross-engine.  Buckets with no boundary are not
     emitted (the level there is the previous bucket's ``level_after``).
 
-    Scale (100 TB): a running sum ordered by global time is the
-    classic single-reducer trap — a naive ``Window.orderBy(ts)``
-    funnels every boundary through one task.  This is the same
-    two-level scan as ``packing.sliding_chunks``: a local cumulative
-    sum within coarse scan buckets (day-sized) + an exclusive prefix
-    over the TINY per-bucket totals (a control-plane relation,
-    broadcast back).  Malformed intervals (end < start) raise IN PLAN
-    rather than silently skewing the level.
+    Scale (100 TB): the level is the two-level running sum of
+    ``packing._running_sums`` over coarse (day-sized) scan buckets —
+    never one ``Window.orderBy(ts)`` over every boundary.  Malformed
+    intervals (end < start) raise IN PLAN rather than silently skewing
+    the level.
 
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (capacity/behavioral analytics).
@@ -221,31 +220,16 @@ def concurrency_profile(
             F.sum(F.when(F.col("_d") == -1, 1).otherwise(0)).alias("_ne"),
         )
         .withColumn("_net", F.col("_ns") - F.col("_ne"))
-        .withColumn("_bucket", F.expr(f"_t div {int(scan_bucket_us)}"))
     )
-    w_local = (
-        Window.partitionBy("_bucket")
-        .orderBy("_t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = deltas.withColumn("_cum", F.sum("_net").over(w_local))
-    totals = deltas.groupBy("_bucket").agg(F.sum("_net").alias("_btot"))
-    w_excl = Window.orderBy("_bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "_bucket",
-        F.coalesce(F.sum("_btot").over(w_excl), F.lit(0)).alias("_off"),
-    )
-    swept = local.join(
-        F.broadcast(offsets.withColumnRenamed("_bucket", "_ob")),
-        F.col("_bucket") == F.col("_ob"),
+    swept = _running_sums(
+        deltas,
+        ["_t"],
+        [F.expr(f"_t div {int(scan_bucket_us)}")],
+        {"_level": F.col("_net")},
     ).select(
         F.expr(f"_t div {int(bucket_us)}").alias("bucket"),
-        (F.col("_off") + F.col("_cum") - F.col("_net") + F.col("_ns")).alias(
-            "_peak_at"
-        ),
-        (F.col("_off") + F.col("_cum")).alias("_level"),
+        (F.col("_level") - F.col("_net") + F.col("_ns")).alias("_peak_at"),
+        "_level",
         "_t",
     )
     return swept.groupBy("bucket").agg(

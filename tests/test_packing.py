@@ -202,6 +202,105 @@ def test_pack_chunks_string_order_ids_survive(spark):
         cum += r.n_tokens
 
 
+def _running_sums_frame(spark, seed):
+    """Random integer rows ``(id, g, k, v)``: ``k`` is tie-heavy, ``g``
+    holds NULL groups, ``v`` mixes signs."""
+    rng = np.random.default_rng(seed)
+    rows = [
+        (
+            i,
+            [None, "a", "b"][int(rng.integers(0, 3))],
+            int(rng.integers(-20, 40)),
+            int(rng.integers(-5, 30)),
+        )
+        for i in range(300)
+    ]
+    return spark.createDataFrame(rows, "id long, g string, k long, v long").repartition(4)
+
+
+@pytest.mark.parametrize(
+    "by, bucket, desc",
+    [
+        ((), "one", False),
+        ((), "many", False),
+        (("g",), "one", False),
+        (("g",), "many", False),
+        (("g",), "two", False),
+        ((), "many", True),
+        (("g",), "many", True),
+    ],
+)
+def test_running_sums_matches_global_window(spark, by, bucket, desc):
+    """The two-level scan equals one plain window over the whole frame:
+    inclusive and exclusive sums, the running count (row_number) and
+    the group totals, with NULL groups, one or many buckets, and a
+    descending order through a negated bucket."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pynomaly_spark.packing import _running_sums
+
+    df = _running_sums_frame(spark, 3)
+    k = F.col("k")
+    order = [k.desc() if desc else k.asc(), F.col("id").asc()]
+    sign = -1 if desc else 1
+    buckets = {
+        "one": [F.lit(0)],
+        "many": [sign * F.expr("floor(k / 7)")],
+        "two": [F.expr("floor(k / 25)"), F.expr("floor(k / 7)")],
+    }[bucket]
+    got = _running_sums(
+        df, order, buckets, {"s": F.col("v"), "rn": F.lit(1)}, by=by, totals=True
+    ).withColumn("excl", F.col("s") - F.col("v"))
+    w = Window.partitionBy(*by).orderBy(*order)
+    want = df.select(
+        "*",
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("s"),
+        F.row_number().over(w).alias("rn"),
+        F.sum("v").over(Window.partitionBy(*by)).alias("s_total"),
+        F.count(F.lit(1)).over(Window.partitionBy(*by)).alias("rn_total"),
+        F.coalesce(
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ).alias("excl"),
+    )
+    cols = ["id", "g", "k", "v", "s", "rn", "s_total", "rn_total", "excl"]
+    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
+
+
+def test_running_sums_ties_in_order(spark):
+    """With ties in the order the ROWS frame numbers a tie class in an
+    arbitrary order, but each class gets the same block of running
+    counts as a global window, and the running sum at the class's last
+    row is the sum of every row up to and including the class."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pynomaly_spark.packing import _running_sums
+
+    df = _running_sums_frame(spark, 5)
+    sums = {"s": F.col("v"), "rn": F.lit(1)}
+    got = _running_sums(df, ["k"], [F.expr("floor(k / 7)")], sums, by=["g"])
+    w = Window.partitionBy("g").orderBy("k")
+    want = df.select(
+        "*",
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("s"),
+        F.row_number().over(w).alias("rn"),
+    )
+
+    def classes(frame):
+        out = {}
+        for r in frame.collect():
+            out.setdefault((r.g, r.k), []).append((r.rn, r.s))
+        return {
+            key: (sorted(rn for rn, _ in v), max(v)[1]) for key, v in out.items()
+        }
+
+    assert classes(got) == classes(want)
+
+
 class TestSlidingChunks:
     def test_spans_overlap_and_shas(self, spark):
         import hashlib

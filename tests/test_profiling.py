@@ -695,6 +695,22 @@ def test_rank_sum_u_matches_literal_python_with_ties(spark):
     assert rank_sum_u(a, a, "v").collect()[0]["effect"] == 0.5
 
 
+@pytest.mark.parametrize("empty_side", ["a", "b"])
+def test_two_sample_tests_with_one_empty_side(spark, empty_side):
+    """One side with no non-NULL value: the counts and the integer
+    statistic come back, the undefined ratio is NULL (no DIVIDE_BY_ZERO)."""
+    from pynomaly_spark.profiling import ks_exact, rank_sum_u
+
+    full = spark.createDataFrame([(v,) for v in [3, 5, 5, 9]], "v long")
+    empty = spark.createDataFrame([(None,)], "v long")
+    a, b = (empty, full) if empty_side == "a" else (full, empty)
+    n_a, n_b = (0, 4) if empty_side == "a" else (4, 0)
+    ks = ks_exact(a, b, "v").collect()
+    assert [tuple(r) for r in ks] == [(n_a, n_b, 0, None)]
+    u = rank_sum_u(a, b, "v").collect()
+    assert [tuple(r) for r in u] == [(n_a, n_b, 0, None)]
+
+
 def test_fd_repair_majority_and_tiebreak(spark):
     """Majority rhs wins; equal counts break on the smaller rendered
     rhs; clean keys emit nothing; confidence is truncating 6-dp."""

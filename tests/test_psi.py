@@ -69,6 +69,21 @@ class TestHistogramPsi:
         row = histogram_psi(d, "x", "part", n_bins=4, bin_width=10.0).first()
         assert row["n_rows"] == 2 and math.isfinite(row["psi"])
 
+    def test_value_past_int_range_lands_in_top_bin(self, spark):
+        # floor(1e12 / 10) does not fit an INT: the clamp must come first
+        d = spark.createDataFrame(
+            [("p", 5.0), ("p", 1e12), ("q", 7.0)], "part string, x double"
+        )
+        out = {
+            r["part"]: r
+            for r in histogram_psi(d, "x", "part", n_bins=4, bin_width=10.0).collect()
+        }
+        every = [5.0, 1e12, 7.0]
+        for key, vals in [("p", [5.0, 1e12]), ("q", [7.0])]:
+            assert out[key]["n_rows"] == len(vals)
+            expect = _psi_numpy(vals, every, 4, 10.0, 0.5)
+            assert out[key]["psi"] == pytest.approx(round(expect, 6), abs=2e-6)
+
     def test_partition_invariance(self, df):
         key = lambda r: (r[0] is None, r[0])  # noqa: E731
         a = sorted(map(tuple, histogram_psi(df, "x", "part").collect()), key=key)
