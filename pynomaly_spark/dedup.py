@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .skew import _skew_split_lookup
+
 __all__ = [
     "exact_dedup",
     "shingles",
@@ -551,11 +553,11 @@ def dup_ngram_fraction(
 
     Scale shape: per-doc-DISTINCT grams -> one gram-keyed count
     aggregate (partial-aggregated; the count relation is one row per
-    distinct gram) -> flag join back SKEW-SPLIT exactly like the LM
-    vocabulary join: viral grams (``doc count >= hot_min`` — license
-    banners living in millions of docs) are a tiny relation, broadcast
-    and matched map-side so their postings never converge on one
-    reducer; the shuffled remainder is rare-by-construction.
+    distinct gram) -> flag join back through the split lookup of
+    :func:`pynomaly_spark.skew._skew_split_lookup`: viral grams (``doc
+    count >= hot_min`` — license banners living in millions of docs)
+    are broadcast and matched map-side so their postings never converge
+    on one reducer.
     ``hash_keys=True`` carries 8-byte ``xxhash64`` keys instead of gram
     strings through the shuffles (2^-64 per-pair collision risk — fine
     for a report-level gate; the oracle twin runs string keys).
@@ -579,27 +581,15 @@ def dup_ngram_fraction(
     key = F.xxhash64("gram") if hash_keys else F.col("gram")
     keyed = grams.select(id_col, key.alias("_g"))
     cnt = keyed.groupBy("_g").agg(F.count(F.lit(1)).alias("_nd"))
-    hot = cnt.where(F.col("_nd") >= hot_min).select(F.col("_g").alias("_hg"))
-    tail = cnt.where(
-        (F.col("_nd") >= 2) & (F.col("_nd") < hot_min)
-    ).select(F.col("_g").alias("_tg"))
-    j1 = keyed.join(F.broadcast(hot), F.col("_g") == F.col("_hg"), "left")
-    matched = j1.where(F.col("_hg").isNotNull()).select(
-        id_col, F.lit(1).cast("long").alias("_dup")
-    )
-    missed = (
-        j1.where(F.col("_hg").isNull())
-        .join(tail, F.col("_g") == F.col("_tg"), "left")
-        .select(
-            id_col, F.col("_tg").isNotNull().cast("long").alias("_dup")
-        )
+    flagged = _skew_split_lookup(
+        keyed, cnt.where(F.col("_nd") >= 2), [("_g", "_g")], "_nd", hot_min,
+        "_hit",
     )
     return (
-        matched.unionByName(missed)
-        .groupBy(id_col)
+        flagged.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
-            F.sum("_dup").alias("dup_grams"),
+            F.sum(F.col("_hit").isNotNull().cast("long")).alias("dup_grams"),
         )
         .select(
             id_col,
@@ -748,10 +738,10 @@ def line_dedup(
 
     Scale shape (mirrors :func:`dup_ngram_fraction`): per-doc-DISTINCT
     eligible lines -> one line-keyed count aggregate (partial-agg
-    combine; one row per distinct line) -> flag join back SKEW-SPLIT:
-    viral lines (``>= hot_min`` docs) are a tiny broadcast relation so
-    their postings never converge on one reducer, the remainder is
-    rare-by-construction.  ``hash_keys=True`` ships 8-byte xxhash64
+    combine; one row per distinct line) -> flag join back through the
+    split lookup of :func:`pynomaly_spark.skew._skew_split_lookup`:
+    viral lines (``>= hot_min`` docs) are broadcast so their postings
+    never converge on one reducer.  ``hash_keys=True`` ships 8-byte xxhash64
     line keys through both exchanges instead of raw line strings
     (2^-64 per-pair collision risk); the oracle twin runs string keys.
     Reassembly is one doc-keyed aggregate — a document's lines fit on
@@ -775,35 +765,22 @@ def line_dedup(
     key = F.xxhash64("_line") if hash_keys else F.col("_line")
     dl = lines.where(eligible).select(id_col, key.alias("_k")).distinct()
     cnt = dl.groupBy("_k").agg(F.count(F.lit(1)).alias("_nd"))
-    hot = cnt.where(F.col("_nd") >= hot_min).select(F.col("_k").alias("_hk"))
-    tail = cnt.where(
-        (F.col("_nd") >= min_docs) & (F.col("_nd") < hot_min)
-    ).select(F.col("_k").alias("_tk"))
     probed = lines.select(
         id_col, "_pos", "_line", F.when(eligible, key).alias("_k")
     )
-    j1 = probed.join(F.broadcast(hot), F.col("_k") == F.col("_hk"), "left")
-    matched = j1.where(F.col("_hk").isNotNull()).select(
-        id_col, "_pos", "_line", F.lit(True).alias("_dup")
+    flagged = _skew_split_lookup(
+        probed, cnt.where(F.col("_nd") >= min_docs), [("_k", "_k")], "_nd",
+        hot_min, "_hit",
     )
-    missed = (
-        j1.where(F.col("_hk").isNull())
-        .join(tail, F.col("_k") == F.col("_tk"), "left")
-        .select(
-            id_col, "_pos", "_line", F.col("_tk").isNotNull().alias("_dup")
-        )
-    )
-    flagged = matched.unionByName(missed)
+    dup = F.col("_hit").isNotNull()
     kept = F.array_sort(
-        F.collect_list(
-            F.when(~F.col("_dup"), F.struct("_pos", "_line"))
-        )
+        F.collect_list(F.when(~dup, F.struct("_pos", "_line")))
     )
     return (
         flagged.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("_dup").cast("long")).alias("dup_lines"),
+            F.sum(dup.cast("long")).alias("dup_lines"),
             F.sha2(
                 F.array_join(
                     F.transform(kept, lambda s: s["_line"]), "\n"

@@ -13,14 +13,10 @@ Scale design (100 TB reasoning):
 
 * the model is a ``(token, c)`` relation — vocab-sized, not corpus-
   sized, and prunable with ``min_count`` (pruned tokens score as OOV).
-* the scoring join is the skew case of the engine: token keys are
-  Zipfian, and a plain shuffle join sends every ``(doc, "the")`` row to
-  one reducer.  The join therefore splits the vocab into a HOT head
-  (``c >= hot_min`` — a few thousand tokens carrying most of the token
-  mass, broadcast, map-side: the hot keys never shuffle) and the rare
-  tail (shuffle join over keys that are rare BY CONSTRUCTION, so that
-  exchange is skew-free).  This is the standard two-pass skew join with
-  the split chosen by frequency instead of sampling.
+* the scoring joins are the skew case of the engine: token keys are
+  Zipfian, so they go through the split lookup of
+  :func:`pynomaly_spark.skew._skew_split_lookup` (hot head broadcast,
+  rare tail shuffled; the split is ``c >= hot_min``).
 * documents are reduced to ``(doc, token, tf)`` before any join —
   join input is distinct doc-token pairs, not token occurrences.
 
@@ -36,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .packing import _running_sums
+from .skew import _skew_split_lookup
 from .textops import _TOKEN_SPLIT
 
 __all__ = [
@@ -64,6 +61,11 @@ def _tokens(df: DataFrame, text_col: str, cols: list) -> DataFrame:
         )
         .where(F.col("_t") != "")
     )
+
+
+def _count_or_0(name: str):
+    """A looked-up model count as a double; no model row (OOV) reads 0."""
+    return F.coalesce(F.col(name).cast("double"), F.lit(0.0))
 
 
 def unigram_model(
@@ -106,8 +108,9 @@ def score_unigram_logprob(
     of a second full scan+explode.  Pass an explicit model for the
     frozen train-then-score deployment.
 
-    ``hot_min`` sets the broadcast head of the skew-split join (see
-    module docstring); results are invariant to its value — tested.
+    ``hot_min`` sets the broadcast head of the split lookup
+    (:func:`pynomaly_spark.skew._skew_split_lookup`); results are
+    invariant to its value — tested.
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
@@ -121,25 +124,8 @@ def score_unigram_logprob(
         model = tf.groupBy(F.col("_t").alias("token")).agg(
             F.sum("_tf").alias("c")
         )
-    hot = model.where(F.col("c") >= hot_min).select(
-        F.col("token").alias("_ht"), F.col("c").cast("double").alias("_hc")
-    )
-    tail = model.where(F.col("c") < hot_min).select(
-        F.col("token").alias("_tt"), F.col("c").cast("double").alias("_tc")
-    )
-    j1 = tf.join(F.broadcast(hot), F.col("_t") == F.col("_ht"), "left").drop(
-        "_ht"
-    )
-    matched = j1.where(F.col("_hc").isNotNull()).select(
-        *cols, "_t", "_tf", F.col("_hc").alias("_c")
-    )
-    missed = (
-        j1.where(F.col("_hc").isNull())
-        .join(tail, F.col("_t") == F.col("_tt"), "left")
-        .select(
-            *cols, "_t", "_tf",
-            F.coalesce(F.col("_tc"), F.lit(0.0)).alias("_c"),
-        )
+    looked = _skew_split_lookup(
+        tf, model, [("_t", "token")], "c", hot_min, "_c"
     )
     stats = model.agg(
         # empty model (everything pruned): N=0, V=0 -> every token is
@@ -148,10 +134,9 @@ def score_unigram_logprob(
         F.count(F.lit(1)).cast("double").alias("_V"),
     )
     denom = F.col("_N") + F.lit(alpha) * (F.col("_V") + F.lit(1.0))
-    lp = F.log((F.col("_c") + F.lit(alpha)) / denom)
+    lp = F.log((_count_or_0("_c") + F.lit(alpha)) / denom)
     return (
-        matched.unionByName(missed)
-        .crossJoin(F.broadcast(stats))
+        looked.crossJoin(F.broadcast(stats))
         .groupBy(*cols)
         .agg(
             F.sum("_tf").cast("long").alias("n_tokens"),
@@ -326,7 +311,7 @@ def nb_predict(
 
     Scale: tf is one doc-keyed aggregate of the exploded corpus; the
     scoring join is token-keyed against the |V|·|C|-row model (hot-token
-    skew: pre-split the model as in ``score_unigram_logprob`` if the
+    skew: see :func:`pynomaly_spark.skew._skew_split_lookup` if the
     vocabulary head dominates); the per-(doc, class) rollup and the
     per-doc argmax window both shuffle on the doc key.
     """
@@ -593,10 +578,10 @@ def score_bigram_logprob(
     ``model=None`` self-trains: the model AND the left marginals both
     derive from the per-doc bigram tf relation, so the corpus is
     exploded and shuffled once (the unigram ReusedExchange
-    discipline).  Both the pair join and the marginal join are
-    SKEW-SPLIT on ``hot_min`` — frequent bigrams ("of the") and
-    frequent left tokens ("the") broadcast map-side; the rare tail
-    shuffles over rare-by-construction keys.
+    discipline).  Both the pair join and the marginal join are split
+    lookups on ``hot_min``
+    (:func:`pynomaly_spark.skew._skew_split_lookup`) — frequent bigrams
+    ("of the") and frequent left tokens ("the") broadcast map-side.
 
     Reference parity: no counterpart in /root/reference/PyNomaly —
     engine addition (LM family order-2; pairs with
@@ -611,64 +596,16 @@ def score_bigram_logprob(
     stats = model.agg(
         F.count_distinct(F.col("w2")).cast("double").alias("_V2")
     )
-    # pair join, skew-split on the (w1, w2) key
-    hot = model.where(F.col("c") >= hot_min).select(
-        F.col("w1").alias("_h1"),
-        F.col("w2").alias("_h2"),
-        F.col("c").cast("double").alias("_hc"),
+    paired = _skew_split_lookup(
+        tf, model, [("w1", "w1"), ("w2", "w2")], "c", hot_min, "_c12"
     )
-    tail = model.where(F.col("c") < hot_min).select(
-        F.col("w1").alias("_t1"),
-        F.col("w2").alias("_t2"),
-        F.col("c").cast("double").alias("_tc"),
+    looked = _skew_split_lookup(
+        paired, m1, [("w1", "w1")], "c1", hot_min, "_c1"
     )
-    j1 = tf.join(
-        F.broadcast(hot),
-        (F.col("w1") == F.col("_h1")) & (F.col("w2") == F.col("_h2")),
-        "left",
-    ).drop("_h1", "_h2")
-    matched = j1.where(F.col("_hc").isNotNull()).select(
-        id_col, "w1", "w2", "_tf", F.col("_hc").alias("_c12")
-    )
-    missed = (
-        j1.where(F.col("_hc").isNull())
-        .join(
-            tail,
-            (F.col("w1") == F.col("_t1")) & (F.col("w2") == F.col("_t2")),
-            "left",
-        )
-        .select(
-            id_col, "w1", "w2", "_tf",
-            F.coalesce(F.col("_tc"), F.lit(0.0)).alias("_c12"),
-        )
-    )
-    paired = matched.unionByName(missed)
-    # marginal join, skew-split on w1
-    m_hot = m1.where(F.col("c1") >= hot_min).select(
-        F.col("w1").alias("_mh"), F.col("c1").cast("double").alias("_mhc")
-    )
-    m_tail = m1.where(F.col("c1") < hot_min).select(
-        F.col("w1").alias("_mt"), F.col("c1").cast("double").alias("_mtc")
-    )
-    j2 = paired.join(
-        F.broadcast(m_hot), F.col("w1") == F.col("_mh"), "left"
-    ).drop("_mh")
-    m_matched = j2.where(F.col("_mhc").isNotNull()).select(
-        id_col, "_tf", "_c12", F.col("_mhc").alias("_c1")
-    )
-    m_missed = (
-        j2.where(F.col("_mhc").isNull())
-        .join(m_tail, F.col("w1") == F.col("_mt"), "left")
-        .select(
-            id_col, "_tf", "_c12",
-            F.coalesce(F.col("_mtc"), F.lit(0.0)).alias("_c1"),
-        )
-    )
-    denom = F.col("_c1") + F.lit(alpha) * (F.col("_V2") + F.lit(1.0))
-    lp = F.log((F.col("_c12") + F.lit(alpha)) / denom)
+    denom = _count_or_0("_c1") + F.lit(alpha) * (F.col("_V2") + F.lit(1.0))
+    lp = F.log((_count_or_0("_c12") + F.lit(alpha)) / denom)
     return (
-        m_matched.unionByName(m_missed)
-        .crossJoin(F.broadcast(stats))
+        looked.crossJoin(F.broadcast(stats))
         .groupBy(id_col)
         .agg(
             F.sum("_tf").cast("long").alias("n_bigrams"),

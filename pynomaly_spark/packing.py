@@ -29,9 +29,10 @@ through this one scan (``features.quantile_bins``, ``lm.build_vocab``,
 ``sampling.shuffle_order``, the ``profiling`` two-sample tests and
 Spearman ranks, ``sessions.concurrency_profile``, ``queries.q_part_abc``).
 
-``pack_chunks`` range-buckets the stream with boundary literals from
-``approxQuantile`` — a bounded control-plane sketch whose boundary
-placement affects only parallelism, never results.  Chunk ids stay
+``pack_chunks`` range-buckets a numeric or timestamp stream order with
+boundary literals from ``approxQuantile`` — a bounded control-plane
+sketch whose boundary placement affects only parallelism, never results
+(any other order type packs in one bucket per group).  Chunk ids stay
 under 2^53 (a 100 TB corpus is ~2×10^13 tokens), so the
 double-precision ``floor`` division is exact.
 
@@ -49,6 +50,7 @@ from operator import and_
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["pack_chunks", "chunk_stats", "sliding_chunks"]
 
@@ -157,30 +159,29 @@ def pack_chunks(
 
     # control-plane: ~n_buckets-1 boundary literals; placement affects
     # parallelism only (cum_before is exact for ANY bucketing), so the
-    # sketch's approximation error is irrelevant to correctness
-    if n_buckets > 1:
+    # sketch's approximation error is irrelevant to correctness.  Only a
+    # numeric or timestamp order casts to a double monotone in it; any
+    # other order (string ids, even ones that parse as numbers) takes
+    # one bucket, with no sketch job
+    bounds = []
+    if n_buckets > 1 and isinstance(
+        src.select(order_col).schema[0].dataType,
+        (T.NumericType, T.TimestampType),
+    ):
         probs = [i / n_buckets for i in range(1, n_buckets)]
-        try:
-            bounds = sorted(
-                set(
-                    src.select(F.col(order_col).cast("double").alias("_o"))
-                    .where(F.col("_o").isNotNull())
-                    .stat.approxQuantile("_o", probs, 0.01)
-                )
+        bounds = sorted(
+            set(
+                src.select(F.col(order_col).cast("double").alias("_o"))
+                .stat.approxQuantile("_o", probs, 0.01)
             )
-        except Exception:
-            # non-castable order ids (string keys) can't range-bucket:
-            # fall back to one bucket — slower (single sort per group)
-            # but correct, instead of a sketch error or dropped rows
-            bounds = []
-    else:
-        bounds = []
+        )
     bkt = F.lit(0)
     for b in bounds:  # flat comparison sum — <=63 terms, whole-stage codegen
         bkt = bkt + (F.col(order_col).cast("double") >= F.lit(b)).cast("int")
-    # a non-castable order value (string ids) would make the bucket NULL
-    # and the offsets join would silently DROP those rows — coalesce pins
-    # them to bucket 0 (correctness is bucket-invariant)
+    # the coalesce never fires (the order is non-NULL here); it keeps the
+    # bucket non-nullable, so the offsets join infers no isnotnull filter
+    # on it, which would make the two reads of ``src`` differ and lose
+    # their exchange reuse
     joined = _running_sums(
         src,
         [order_col],

@@ -185,8 +185,8 @@ def test_pack_chunks_properties_hypothesis(spark):
 
 
 def test_pack_chunks_string_order_ids_survive(spark):
-    """String order ids can't range-bucket (cast -> NULL); they must
-    fall into one bucket and still pack correctly, not silently drop."""
+    """String order ids can't range-bucket; they must fall into one
+    bucket and still pack correctly, not silently drop."""
     rows = [("g", f"doc-{i:03d}", 10 + i) for i in range(20)]
     df = spark.createDataFrame(rows, "grp string, doc_id string, n long")
     got = sorted(
@@ -200,6 +200,45 @@ def test_pack_chunks_string_order_ids_survive(spark):
     for r in got:
         assert r.cum_before == cum
         cum += r.n_tokens
+
+
+def test_pack_chunks_string_ids_pack_in_string_order(spark):
+    """String ids that parse as numbers order as strings ("10" < "2"),
+    so their numeric value must not pick the bucket: every bucket count
+    gives the exclusive token sum in lexicographic id order.  A string
+    order also plans without a Spark job (a numeric one runs the
+    boundary sketch), so ids like "k000" run no failing cast job."""
+    rows = [(str(i), 10 + i) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id string, n long")
+    want, cum = {}, 0
+    for doc, n in sorted(rows):
+        want[doc] = cum
+        cum += n
+    for b in (1, 4):
+        got = pack_chunks(df, "n", "doc_id", cap=64, n_buckets=b).collect()
+        assert {r.doc_id: r.cum_before for r in got} == want, b
+    assert want["10"] == 21
+
+    sc = spark.sparkContext
+    ids = {
+        "numeric": spark.createDataFrame(
+            [(i, 5) for i in range(40)], "doc_id long, n long"
+        ),
+        "string": spark.createDataFrame(
+            [(f"k{i:03d}", 5) for i in range(40)], "doc_id string, n long"
+        ),
+    }
+    jobs = {}
+    try:
+        for kind, frame in ids.items():
+            group = f"pack-plan-{kind}"
+            sc.setJobGroup(group, group)
+            pack_chunks(frame, "n", "doc_id", cap=64, n_buckets=4)
+            jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["numeric"] > 0 and jobs["string"] == 0, jobs
 
 
 def _running_sums_frame(spark, seed):
