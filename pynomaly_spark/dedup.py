@@ -1459,7 +1459,7 @@ def golden_records(
 
     NULL scores rank BELOW every real score (a record with no quality
     signal never beats one with a signal; an all-NULL cluster falls
-    back to smallest id).
+    back to smallest id and reports a NULL ``survivor_score``).
 
     Scale (100 TB): one left join (records × cluster labels — the
     labels frame is |clustered nodes| rows, typically a small fraction
@@ -1483,6 +1483,7 @@ def golden_records(
     lab = clusters.select(
         F.col(node_col).alias("_gn"), F.col(cluster_col).alias("_gc")
     )
+    score = F.col(score_col).cast("long")
     j = (
         records.where(F.col(id_col).isNotNull())
         .select(id_col, score_col)
@@ -1490,14 +1491,14 @@ def golden_records(
         .select(
             F.coalesce(F.col("_gc"), F.col(id_col)).alias("cluster_id"),
             F.col(id_col).alias("_id"),
-            F.coalesce(
-                F.col(score_col).cast("long"), F.lit(-(1 << 62))
-            ).alias("_sc"),
+            score.alias("_s"),
+            # the sentinel only orders the pick; it is never reported
+            F.coalesce(score, F.lit(-(1 << 62))).alias("_sc"),
         )
     )
     return j.groupBy("cluster_id").agg(
         F.expr("min_by(_id, struct(-_sc, _id))").alias("survivor_id"),
-        F.max("_sc").cast("long").alias("survivor_score"),
+        F.max("_s").alias("survivor_score"),
         F.count(F.lit(1)).cast("long").alias("n_members"),
     )
 

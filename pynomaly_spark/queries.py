@@ -34,8 +34,9 @@ _EMB_DIM = 64
 # shingles, md5/sha digests, 64-dim HOF dot products) on a FEW-ROW
 # relation: a single-file single-row-group scan pins all of that work
 # to one task, so these readers spread to session parallelism by
-# default (see _spread below; measured round 6: emb_knn_classifier
-# 78 -> 2.2s, doc_ssjoin 74 -> 15s at sf0.1).  The big row-count
+# default (see _spread below; measured in round 6 on a 32-core host:
+# emb_knn_classifier 78 -> 2.2s, doc_ssjoin 74 -> 15s at sf0.1; the
+# 4-vCPU benchmark host has not re-measured them).  The big row-count
 # tables (lineitem/orders/events) are NOT spread: their queries are
 # columnar aggregates where an extra exchange of every row costs more
 # than the serial scan (measured: events_hourly 0.69 -> 1.70s), and
@@ -82,6 +83,15 @@ def _doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tbl(spark, sf_dir, "documents")
 
 
+def _doc_content(spark, sf_dir) -> DataFrame:
+    # documents with text, in the dedup operators' (row_id, content) shape
+    return (
+        _doc(spark, sf_dir)
+        .where(F.col("text").isNotNull())
+        .select(F.col("doc_id").alias("row_id"), F.col("text").alias("content"))
+    )
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Spread a few-file scan to session parallelism before CPU-heavy
     per-row work (round 6, guide §2.5 input skew: "one huge unsplittable
@@ -89,8 +99,10 @@ def _spread(df: DataFrame) -> DataFrame:
 
     The driver tables are ONE parquet file with one row group, which
     Spark cannot split below row-group granularity, so a regex/digest
-    pass over every row runs on ONE core at local[32] regardless of
-    ``spark.sql.files.minPartitionNum``.  The :func:`_few_files` probe
+    pass over every row runs as ONE task, on one core, whatever the
+    session's ``local[N]`` and ``spark.sql.files.minPartitionNum``.  The
+    spread repartitions to ``defaultParallelism`` (N, the session's
+    core count).  The :func:`_few_files` probe
     keeps production-scale tables off this branch.  Results
     are unchanged — consumers are row-order independent — only a small
     exchange of the raw rows is added, which the parallel per-row work
@@ -107,6 +119,40 @@ def _few_files(df: DataFrame) -> bool:
     each; a production-scale table has thousands and never takes the
     small-input branches this probe steers."""
     return len(df.inputFiles()) <= 4
+
+
+def _cents(col: str):
+    """``col`` in exact integer cents: ``round(col * 100)`` as a long."""
+    return F.round(F.col(col) * 100).cast("long")
+
+
+def _rev_cents():
+    """A lineitem row's exact discounted revenue in 1/10000 units:
+    price cents × (100 − discount percent)."""
+    return _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
+
+
+def _order_day():
+    """An order's date as whole days since the epoch (integer µs div)."""
+    return F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
+
+
+def _order_months(spark, sf_dir, key: str, month: str):
+    """Dated orders as ``key``, ``month`` (months since 1995-01) and
+    ``_c`` (exact total-price cents)."""
+    return (
+        _tbl(spark, sf_dir, "orders")
+        .where(F.col("o_orderdate").isNotNull())
+        .select(
+            key,
+            (
+                (F.year("o_orderdate") - F.lit(1995)) * 12
+                + F.month("o_orderdate")
+                - 1
+            ).cast("long").alias(month),
+            _cents("o_totalprice").alias("_c"),
+        )
+    )
 
 
 # --------------------------------------------------------------------------
@@ -597,11 +643,7 @@ def q_doc_near_dups(spark, sf_dir):
     from .dedup import ngram_jaccard, shingles
 
     rpb = _ND_PERM // _ND_BANDS
-    doc = (
-        _doc(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("row_id"), F.col("text").alias("content"))
-    )
+    doc = _doc_content(spark, sf_dir)
     sh = doc.select(
         "row_id", shingles("content", _ND_SHINGLE).alias("_sh")
     ).where(F.size("_sh") > 0)
@@ -697,11 +739,7 @@ def q_doc_simhash(spark, sf_dir):
     share and a bit-string output both can build."""
     from .dedup import simhash_md5_bits
 
-    doc = (
-        _doc(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("row_id"), F.col("text").alias("content"))
-    )
+    doc = _doc_content(spark, sf_dir)
     return simhash_md5_bits(doc).select("row_id", "simhash_bits")
 
 
@@ -843,11 +881,7 @@ def q_doc_jaccard_pairs(spark, sf_dir):
     bucketing isn't SQL-expressible, but the verify on given pairs is)."""
     from .dedup import ngram_jaccard
 
-    doc = (
-        _doc(spark, sf_dir)
-        .where(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("row_id"), F.col("text").alias("content"))
-    )
+    doc = _doc_content(spark, sf_dir)
     a = doc.where((F.col("row_id") < 60) & (F.col("row_id") % 2 == 0)).select(
         F.col("row_id").alias("id_a")
     )
@@ -905,39 +939,36 @@ def _sql_double_array(vals) -> str:
     return "[" + ", ".join(repr(float(v)) for v in vals) + "]"
 
 
-def _ann_lsh_sql() -> str:
-    """DuckDB twin of q_emb_ann_lsh: identical seeded plane literals,
-    identical bit-packed sign buckets and Hamming-1 probes; cosine rank
-    over the same deduped candidate set."""
+def _plane_bucket_sql() -> str:
+    """The sign-bit bucket of ``v`` under the six seeded hyperplanes
+    (``similarity._hyperplanes(64, 6, 42)``) that ``rp_lsh_topk`` and
+    ``embedding_near_dups`` use, as inlined plane literals."""
     from .similarity import _hyperplanes
 
     planes = _hyperplanes(_EMB_DIM, 6, 42)
-    bucket_terms = "\n       + ".join(
+    return "\n       + ".join(
         f"(CASE WHEN list_dot_product(v, {_sql_double_array(p)}) > 0"
         f" THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(planes)
     )
-    probe_list = ", ".join(
-        ["qbucket"] + [f"xor(qbucket, {1 << i})" for i in range(6)]
-    )
+
+
+def _lsh_buckets_sql() -> str:
+    # WITH head: float64 vectors `base` and their plane buckets `it`
     return f"""
 WITH base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
 ), it AS (
   SELECT vec_id, v,
-         {bucket_terms} AS bucket
+         {_plane_bucket_sql()} AS bucket
   FROM base
-), q AS (
-  SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM it
-  WHERE vec_id < 5
-), probes AS (
-  SELECT query_id, qv, unnest([{probe_list}]) AS bucket FROM q
-), cand AS (
-  SELECT DISTINCT p.query_id, p.qv, i.vec_id AS neighbor_id, i.v
-  FROM probes p JOIN it i USING (bucket)
-  WHERE i.vec_id <> p.query_id
-), ranked AS (
+)"""
+
+
+# the ANN twins' last step: candidates `cand(query_id, qv, neighbor_id,
+# v)` ranked by (6-dp cosine DESC, neighbor ASC), top 5 per query
+_CAND_COS_RANK_SQL = """ranked AS (
   SELECT query_id, neighbor_id,
          row_number() OVER (PARTITION BY query_id
             ORDER BY round(list_cosine_similarity(qv, v), 6) DESC,
@@ -949,17 +980,32 @@ SELECT query_id, rnk, neighbor_id FROM ranked WHERE rnk <= 5
 """
 
 
-def q_doc_media_features(spark, sf_dir):
-    """Multimodal plumbing demonstrated end-to-end (rows-only: binary
-    codec work is not oracle-SQL-expressible).  Deterministic 8x4 P6
-    images are synthesized JVM-side from document digests (ASCII-hex
-    raster = 96 bytes), then decoded by the REAL pure-numpy PPM codec in
-    multimodal.extract_features — payload build, byte-budget transport,
-    decode, and feature math all exercised on the driver tables."""
-    from .multimodal import extract_features
+def _ann_lsh_sql() -> str:
+    """DuckDB twin of q_emb_ann_lsh: identical seeded plane literals,
+    identical bit-packed sign buckets and Hamming-1 probes; cosine rank
+    over the same deduped candidate set."""
+    probe_list = ", ".join(
+        ["qbucket"] + [f"xor(qbucket, {1 << i})" for i in range(6)]
+    )
+    return f"""{_lsh_buckets_sql()}, q AS (
+  SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM it
+  WHERE vec_id < 5
+), probes AS (
+  SELECT query_id, qv, unnest([{probe_list}]) AS bucket FROM q
+), cand AS (
+  SELECT DISTINCT p.query_id, p.qv, i.vec_id AS neighbor_id, i.v
+  FROM probes p JOIN it i USING (bucket)
+  WHERE i.vec_id <> p.query_id
+), {_CAND_COS_RANK_SQL}"""
 
+
+def _media_docs(spark, sf_dir, max_id: int = 50):
+    """``(doc, raster)``: the documents with text and ``doc_id <
+    max_id``, and the 96-char ASCII-hex raster every synthetic media
+    payload is built from — ``md5(text) || md5('x'||text) ||
+    md5('y'||text)``, which the twins recompute (``_MEDIA_SRC_SQL``)."""
     doc = _doc(spark, sf_dir).where(
-        (F.col("doc_id") < 50) & F.col("text").isNotNull()
+        (F.col("doc_id") < max_id) & F.col("text").isNotNull()
     )
     raster = F.rpad(
         F.concat(
@@ -970,6 +1016,38 @@ def q_doc_media_features(spark, sf_dir):
         96,
         "0",
     )
+    return doc, raster
+
+
+_MEDIA_SRC_SQL = """WITH src AS (
+  SELECT doc_id,
+         md5(text) || md5('x' || text) || md5('y' || text) AS raster
+  FROM documents WHERE doc_id < 50 AND text IS NOT NULL
+)"""
+
+
+def _media_features(media):
+    """The real decoders' features of ``media`` (``multimodal.
+    extract_features``), first six rounded to 6 dp, keyed by doc_id."""
+    from .multimodal import extract_features
+
+    first6 = [
+        F.round(F.col("features").getItem(i), 6).alias(f"f{i}")
+        for i in range(6)
+    ]
+    return extract_features(media).select(
+        F.col("media_id").alias("doc_id"), "decoder", "n_bytes", *first6
+    )
+
+
+def q_doc_media_features(spark, sf_dir):
+    """Multimodal plumbing demonstrated end-to-end (rows-only: binary
+    codec work is not oracle-SQL-expressible).  Deterministic 8x4 P6
+    images are synthesized JVM-side from document digests (ASCII-hex
+    raster = 96 bytes), then decoded by the REAL pure-numpy PPM codec in
+    multimodal.extract_features — payload build, byte-budget transport,
+    decode, and feature math all exercised on the driver tables."""
+    doc, raster = _media_docs(spark, sf_dir)
     payload = F.concat(
         F.lit(b"P6\n8 4\n255\n"), F.encode(raster, "utf-8")
     )
@@ -978,14 +1056,7 @@ def q_doc_media_features(spark, sf_dir):
         F.lit("image").alias("kind"),
         payload.alias("payload"),
     )
-    feats = extract_features(media)
-    first6 = [
-        F.round(F.col("features").getItem(i), 6).alias(f"f{i}")
-        for i in range(6)
-    ]
-    return feats.select(
-        F.col("media_id").alias("doc_id"), "decoder", "n_bytes", *first6
-    )
+    return _media_features(media)
 
 
 def _media_features_sql(decoder: str = "ppm", n_bytes: int = 107) -> str:
@@ -1011,11 +1082,7 @@ def _media_features_sql(decoder: str = "ppm", n_bytes: int = 107) -> str:
     the other codecs (QOI/WAV/Y4M) stay roundtrip/fuzz-tested.
     """
     return f"""
-WITH src AS (
-  SELECT doc_id,
-         md5(text) || md5('x' || text) || md5('y' || text) AS raster
-  FROM documents WHERE doc_id < 50 AND text IS NOT NULL
-),
+{_MEDIA_SRC_SQL},
 codes AS (
   SELECT doc_id, (p - 1) % 3 AS ch,
          CAST(ascii(substr(raster, CAST(p AS INTEGER), 1)) AS DOUBLE)
@@ -1057,18 +1124,7 @@ def q_doc_media_phash(spark, sf_dir):
     from .dedup import phash_near_dups
     from .multimodal import perceptual_hash
 
-    doc = _doc(spark, sf_dir).where(
-        (F.col("doc_id") < 200) & F.col("text").isNotNull()
-    )
-    raster = F.rpad(
-        F.concat(
-            F.md5("text"),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ),
-        96,
-        "0",
-    )
+    doc, raster = _media_docs(spark, sf_dir, max_id=200)
     payload = F.concat(F.lit(b"P6\n8 4\n255\n"), F.encode(raster, "utf-8"))
     media = doc.select(
         F.col("doc_id").alias("media_id"), payload.alias("payload")
@@ -1187,16 +1243,7 @@ WITH base AS (
   SELECT DISTINCT p.query_id, p.qv, a.vec_id AS neighbor_id, a.v
   FROM qprobe p JOIN assign a USING (cell)
   WHERE a.vec_id <> p.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-            ORDER BY round(list_cosine_similarity(qv, v), 6) DESC,
-                     neighbor_id ASC)
-           AS rnk
-  FROM cand
-)
-SELECT query_id, rnk, neighbor_id FROM ranked WHERE rnk <= 5
-"""
+), {_CAND_COS_RANK_SQL}"""
 
 
 def q_emb_near_dups(spark, sf_dir):
@@ -1215,23 +1262,7 @@ def q_emb_near_dups(spark, sf_dir):
 
 
 def _emb_near_dups_sql(threshold: float = 0.35) -> str:
-    from .similarity import _hyperplanes
-
-    planes = _hyperplanes(_EMB_DIM, 6, 42)
-    bucket_terms = "\n       + ".join(
-        f"(CASE WHEN list_dot_product(v, {_sql_double_array(p)}) > 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), it AS (
-  SELECT vec_id, v,
-         {bucket_terms} AS bucket
-  FROM base
-)
+    return f"""{_lsh_buckets_sql()}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_dot_product(a.v, b.v)
              / (sqrt(list_dot_product(a.v, a.v))
@@ -1311,8 +1342,6 @@ def q_doc_media_wav(spark, sf_dir):
     as a direct DFT cross join (see ``_media_wav_sql``)."""
     import struct
 
-    from .multimodal import extract_features
-
     n_data = 96
     header = (
         b"RIFF"
@@ -1323,32 +1352,14 @@ def q_doc_media_wav(spark, sf_dir):
         + b"data"
         + struct.pack("<I", n_data)
     )
-    doc = _doc(spark, sf_dir).where(
-        (F.col("doc_id") < 50) & F.col("text").isNotNull()
-    )
-    pcm = F.rpad(
-        F.concat(
-            F.md5("text"),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ),
-        n_data,
-        "0",
-    )
+    doc, pcm = _media_docs(spark, sf_dir)
     payload = F.concat(F.lit(header), F.encode(pcm, "utf-8"))
     media = doc.select(
         F.col("doc_id").alias("media_id"),
         F.lit("audio").alias("kind"),
         payload.alias("payload"),
     )
-    feats = extract_features(media)
-    first6 = [
-        F.round(F.col("features").getItem(i), 6).alias(f"f{i}")
-        for i in range(6)
-    ]
-    return feats.select(
-        F.col("media_id").alias("doc_id"), "decoder", "n_bytes", *first6
-    )
+    return _media_features(media)
 
 
 def _log1p_sql(x: str) -> str:
@@ -1382,11 +1393,7 @@ def _media_wav_sql() -> str:
     it.  ``searchsorted(cumsum, 0.85*total)`` == count of bins whose
     cumulative power is strictly below the threshold."""
     return f"""
-WITH src AS (
-  SELECT doc_id,
-         md5(text) || md5('x' || text) || md5('y' || text) AS raster
-  FROM documents WHERE doc_id < 50 AND text IS NOT NULL
-),
+{_MEDIA_SRC_SQL},
 samp AS (
   SELECT doc_id, CAST(t.i AS INTEGER) AS i,
          (CAST(ascii(substr(raster, CAST(2 * t.i + 1 AS INTEGER), 1))
@@ -1465,20 +1472,7 @@ def q_doc_media_qoi(spark, sf_dir):
     image features (decoder='qoi').  The pytest roundtrip test covers
     the compressed ops (RUN/INDEX/DIFF/LUMA) with a driver-side
     encoder."""
-    from .multimodal import extract_features
-
-    doc = _doc(spark, sf_dir).where(
-        (F.col("doc_id") < 50) & F.col("text").isNotNull()
-    )
-    raster = F.rpad(
-        F.concat(
-            F.md5("text"),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ),
-        96,
-        "0",
-    )
+    doc, raster = _media_docs(spark, sf_dir)
     header = b"qoif" + (8).to_bytes(4, "big") + (4).to_bytes(4, "big") + bytes([3, 0])
     parts = [F.lit(header)]
     for i in range(32):  # 32 pixels, one QOI_OP_RGB chunk each
@@ -1490,14 +1484,7 @@ def q_doc_media_qoi(spark, sf_dir):
         F.lit("image").alias("kind"),
         F.concat(*parts).alias("payload"),
     )
-    feats = extract_features(media)
-    first6 = [
-        F.round(F.col("features").getItem(i), 6).alias(f"f{i}")
-        for i in range(6)
-    ]
-    return feats.select(
-        F.col("media_id").alias("doc_id"), "decoder", "n_bytes", *first6
-    )
+    return _media_features(media)
 
 
 def q_doc_media_thumbs(spark, sf_dir):
@@ -1531,18 +1518,7 @@ def _y4m_media(spark, sf_dir):
     (8x4 C420: per frame 32 luma + 16 chroma ASCII-hex bytes from
     document digests) — shared by the video feature and thumbnail
     queries."""
-    doc = _doc(spark, sf_dir).where(
-        (F.col("doc_id") < 50) & F.col("text").isNotNull()
-    )
-    raster = F.rpad(
-        F.concat(
-            F.md5("text"),
-            F.md5(F.concat(F.lit("x"), F.col("text"))),
-            F.md5(F.concat(F.lit("y"), F.col("text"))),
-        ),
-        96,
-        "0",
-    )
+    doc, raster = _media_docs(spark, sf_dir)
     payload = F.concat(
         F.lit(b"YUV4MPEG2 W8 H4 F25:1 Ip A1:1 C420\x0a"),
         F.lit(b"FRAME\x0a"),
@@ -1565,16 +1541,7 @@ def q_doc_media_y4m(spark, sf_dir):
     frame/fps/motion features (decoder='y4m').  The twin recomputes the
     64 luma bytes from the md5 generation inputs (chroma planes are
     position-skipped exactly like the walker) — see ``_media_y4m_sql``."""
-    from .multimodal import extract_features
-
-    feats = extract_features(_y4m_media(spark, sf_dir))
-    first6 = [
-        F.round(F.col("features").getItem(i), 6).alias(f"f{i}")
-        for i in range(6)
-    ]
-    return feats.select(
-        F.col("media_id").alias("doc_id"), "decoder", "n_bytes", *first6
-    )
+    return _media_features(_y4m_media(spark, sf_dir))
 
 
 def _media_y4m_sql() -> str:
@@ -1592,11 +1559,7 @@ def _media_y4m_sql() -> str:
     (``_log1p_sql``) against numpy's log1p — ulp-level, absorbed by the
     6-dp round."""
     return f"""
-WITH src AS (
-  SELECT doc_id,
-         md5(text) || md5('x' || text) || md5('y' || text) AS raster
-  FROM documents WHERE doc_id < 50 AND text IS NOT NULL
-),
+{_MEDIA_SRC_SQL},
 luma AS (
   SELECT doc_id, CAST(t.f AS INTEGER) AS f, CAST(u.j AS INTEGER) AS j,
          CAST(ascii(substr(raster, CAST(48 * t.f + u.j + 1 AS INTEGER), 1))
@@ -1638,12 +1601,8 @@ def _media_thumbs_sql() -> str:
     {0, 4, 16, 20}, so thumbnail cell p of frame f is raster char
     ``48f + off_p + 1`` over 255 — pure integer indexing, bit-identical
     across engines."""
-    return """
-WITH src AS (
-  SELECT doc_id,
-         md5(text) || md5('x' || text) || md5('y' || text) AS raster
-  FROM documents WHERE doc_id < 50 AND text IS NOT NULL
-)
+    return f"""
+{_MEDIA_SRC_SQL}
 SELECT doc_id, CAST(t.f AS BIGINT) AS frame_idx,
        CAST(2 AS BIGINT) AS n_frames, 'y4m' AS decoder,
        round(ascii(substr(raster, CAST(48 * t.f + 1 AS INTEGER), 1))
@@ -1682,13 +1641,36 @@ def q_doc_drift_loop(spark, sf_dir):
         F.col("lang").alias("partition_id"),
         drift_features("text").alias("features"),
     )
-    scored = loop_grouped(feats, n_neighbors=10, extent=3, exact_tiebreak=True)
+    return _loop_scores(
+        loop_grouped(feats, n_neighbors=10, extent=3, exact_tiebreak=True)
+    )
+
+
+def _loop_scores(scored):
+    """The oracle-checked columns of a LoOP drift query: the 6-dp score
+    and ``gated`` as an int (cross-engine boolean hashing is not
+    stable)."""
     return scored.select(
         "partition_id",
         "row_id",
         F.round("loop_score", 6).alias("loop_score"),
         F.col("gated").cast("int").alias("gated"),
     )
+
+
+def _emb_loop_scored(spark, sf_dir):
+    """LoOP (n_neighbors=10, extent=3) per label over the float64
+    embeddings: the one kernel call of ``emb_drift_loop`` and
+    ``emb_loop_stages``."""
+    from .drift import loop_grouped
+
+    emb = _tbl(spark, sf_dir, "embeddings")
+    feats = emb.select(
+        F.col("vec_id").alias("row_id"),
+        F.col("label").cast("string").alias("partition_id"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("features"),
+    )
+    return loop_grouped(feats, n_neighbors=10, extent=3)
 
 
 def q_emb_drift_loop(spark, sf_dir):
@@ -1698,21 +1680,7 @@ def q_emb_drift_loop(spark, sf_dir):
     8.4e-11 on [0,4], measured; the [4,inf) tail rounds to 1.0 at 6 dp
     on both sides).  ``gated`` is cast to int on both sides (stable
     cross-engine hashing for booleans is not guaranteed)."""
-    from .drift import loop_grouped
-
-    emb = _tbl(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        F.col("vec_id").alias("row_id"),
-        F.col("label").cast("string").alias("partition_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("features"),
-    )
-    scored = loop_grouped(feats, n_neighbors=10, extent=3)
-    return scored.select(
-        "partition_id",
-        "row_id",
-        F.round("loop_score", 6).alias("loop_score"),
-        F.col("gated").cast("int").alias("gated"),
-    )
+    return _loop_scores(_emb_loop_scored(spark, sf_dir))
 
 
 def q_emb_loop_stages(spark, sf_dir):
@@ -1726,16 +1694,7 @@ def q_emb_loop_stages(spark, sf_dir):
     against an independent engine.  (Tie-free matters: argpartition's
     unordered k-subset is only deterministic when no distances tie —
     SURVEY.md §2.3.)"""
-    from .drift import loop_grouped
-
-    emb = _tbl(spark, sf_dir, "embeddings")
-    feats = emb.select(
-        F.col("vec_id").alias("row_id"),
-        F.col("label").cast("string").alias("partition_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("features"),
-    )
-    scored = loop_grouped(feats, n_neighbors=10, extent=3)
-    return scored.select(
+    return _emb_loop_scored(spark, sf_dir).select(
         "partition_id",
         "row_id",
         F.round("prob_distance", 6).alias("pdist"),
@@ -1814,43 +1773,14 @@ def _erf_sql_expr(x: str = "x", u: str = "u", n_terms: int = 76) -> str:
     return f"{x} * ({terms})"
 
 
-def _emb_drift_loop_sql() -> str:
-    """DuckDB twin of the FULL LoOP kernel (q_emb_drift_loop).
-
-    Same stage pipeline as SQL_EMB_LOOP_STAGES, extended through the
-    final map: x = plof / (nplof * sqrt(2)), score = max(0, erf(x))
-    with the kernel's guards — the all-equal short-circuit (every plof
-    equal to nplof scores 0, kernel._local_outlier_probability) and the
-    cluster-size gate (groups of <= n_neighbors rows emit gated=1 with
-    a null score, matching the gated frame drift.loop_grouped emits
-    per group).
-    """
+def _loop_twin_stages(row_id: str) -> str:
+    """The stages the LoOP twins share after the probabilistic distance
+    ``pd`` (Kriegel et al., CIKM 2009): neighbourhood expected value,
+    PLOF, nPLOF, the all-equal guard, the erf map, and the final select
+    that gates groups of <= n_neighbors rows (``gsz``) to a NULL score.
+    ``row_id`` is the id column of ``base``."""
     erf = _erf_sql_expr()
-    return f"""
-WITH base AS (
-  SELECT vec_id, CAST(label AS VARCHAR) AS partition_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-gsz AS (
-  SELECT partition_id, count(*) AS n FROM base GROUP BY partition_id
-),
-pairs AS (
-  SELECT a.vec_id AS qid, a.partition_id, b.vec_id AS nid,
-         list_distance(a.v, b.v) AS dist
-  FROM base a JOIN base b
-    ON a.partition_id = b.partition_id AND a.vec_id <> b.vec_id
-),
-knn AS (
-  SELECT qid, partition_id, nid, dist,
-         row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS rn
-  FROM pairs
-),
-pd AS (
-  SELECT qid, partition_id, 3.0 * sqrt(sum(dist * dist) / 10.0) AS pdist
-  FROM knn WHERE rn <= 10 GROUP BY qid, partition_id
-),
-ev AS (
+    return f"""ev AS (
   SELECT k.qid, avg(p.pdist) AS ev_pdist
   FROM knn k JOIN pd p ON p.qid = k.nid
   WHERE k.rn <= 10 GROUP BY k.qid
@@ -1886,14 +1816,52 @@ scored AS (
   FROM guarded
 )
 SELECT b.partition_id,
-       b.vec_id AS row_id,
+       b.{row_id} AS row_id,
        CASE WHEN g.n <= 10 THEN NULL ELSE round(s.score, 6) END
          AS loop_score,
        CAST(g.n <= 10 AS INTEGER) AS gated
 FROM base b
 JOIN gsz g ON g.partition_id = b.partition_id
-LEFT JOIN scored s ON s.qid = b.vec_id
+LEFT JOIN scored s ON s.qid = b.{row_id}
 """
+
+
+def _emb_drift_loop_sql() -> str:
+    """DuckDB twin of the FULL LoOP kernel (q_emb_drift_loop).
+
+    Same stage pipeline as SQL_EMB_LOOP_STAGES, extended through the
+    final map: x = plof / (nplof * sqrt(2)), score = max(0, erf(x))
+    with the kernel's guards — the all-equal short-circuit (every plof
+    equal to nplof scores 0, kernel._local_outlier_probability) and the
+    cluster-size gate (groups of <= n_neighbors rows emit gated=1 with
+    a null score, matching the gated frame drift.loop_grouped emits
+    per group).
+    """
+    return f"""
+WITH base AS (
+  SELECT vec_id, CAST(label AS VARCHAR) AS partition_id,
+         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+gsz AS (
+  SELECT partition_id, count(*) AS n FROM base GROUP BY partition_id
+),
+pairs AS (
+  SELECT a.vec_id AS qid, a.partition_id, b.vec_id AS nid,
+         list_distance(a.v, b.v) AS dist
+  FROM base a JOIN base b
+    ON a.partition_id = b.partition_id AND a.vec_id <> b.vec_id
+),
+knn AS (
+  SELECT qid, partition_id, nid, dist,
+         row_number() OVER (PARTITION BY qid ORDER BY dist, nid) AS rn
+  FROM pairs
+),
+pd AS (
+  SELECT qid, partition_id, 3.0 * sqrt(sum(dist * dist) / 10.0) AS pdist
+  FROM knn WHERE rn <= 10 GROUP BY qid, partition_id
+),
+{_loop_twin_stages("vec_id")}"""
 
 
 def _doc_drift_loop_sql() -> str:
@@ -1909,7 +1877,6 @@ def _doc_drift_loop_sql() -> str:
     distance also avoids the sqrt double-rounding that could create
     false ties the kernel doesn't see.
     """
-    erf = _erf_sql_expr()
     return f"""
 WITH feats AS (
   SELECT doc_id, lang AS partition_id,
@@ -1945,50 +1912,7 @@ pd AS (
   SELECT qid, partition_id, 3.0 * sqrt(sum(sq) / 10.0) AS pdist
   FROM knn WHERE rn <= 10 GROUP BY qid, partition_id
 ),
-ev AS (
-  SELECT k.qid, avg(p.pdist) AS ev_pdist
-  FROM knn k JOIN pd p ON p.qid = k.nid
-  WHERE k.rn <= 10 GROUP BY k.qid
-),
-plofs AS (
-  SELECT pd.qid, pd.partition_id,
-         pd.pdist / (CASE WHEN ev.ev_pdist = 0.0 THEN 1e-8
-                          ELSE ev.ev_pdist END) - 1.0 AS plof
-  FROM pd JOIN ev ON ev.qid = pd.qid
-),
-nplofs AS (
-  SELECT qid, partition_id, plof,
-         3.0 * sqrt(avg(plof * plof) OVER (PARTITION BY partition_id))
-           AS nplof
-  FROM plofs
-),
-guarded AS (
-  SELECT qid, partition_id, plof, nplof,
-         max(CASE WHEN plof <> nplof THEN 1 ELSE 0 END)
-           OVER (PARTITION BY partition_id) AS any_ne,
-         plof / (nplof * 1.4142135623730951) AS x,
-         (plof / (nplof * 1.4142135623730951))
-           * (plof / (nplof * 1.4142135623730951)) AS u
-  FROM nplofs
-),
-scored AS (
-  SELECT qid,
-         CASE WHEN any_ne = 0 THEN 0.0
-              WHEN x <= 0.0 THEN 0.0
-              WHEN x >= 4.0 THEN 1.0
-              ELSE greatest(0.0, {erf})
-         END AS score
-  FROM guarded
-)
-SELECT b.partition_id,
-       b.doc_id AS row_id,
-       CASE WHEN g.n <= 10 THEN NULL ELSE round(s.score, 6) END
-         AS loop_score,
-       CAST(g.n <= 10 AS INTEGER) AS gated
-FROM base b
-JOIN gsz g ON g.partition_id = b.partition_id
-LEFT JOIN scored s ON s.qid = b.doc_id
-"""
+{_loop_twin_stages("doc_id")}"""
 
 
 # --------------------------------------------------------------------------
@@ -2303,13 +2227,11 @@ FROM events GROUP BY event_type
 """
 
 
-def q_events_asof(spark, sf_dir):
-    """As-of join (``asof.asof_join``): every purchase aligned to the
-    user's latest click at-or-before it.  One shuffle on user_id, one
-    window pass — no range join.  The twin is DuckDB's NATIVE ASOF JOIN,
-    so the union-tag implementation is verified against an independent
-    first-class one.  Equal-timestamp clicks resolve to max event_id on
-    both engines; value carried as exact cents."""
+def _purchase_last_click(spark, sf_dir, payload_cols):
+    """Every purchase as-of joined to the user's latest click at or
+    before it (``asof.asof_join``; equal-timestamp clicks resolve to the
+    max event_id), with the click's ``payload_cols`` suffixed
+    ``_click``."""
     from pynomaly_spark.asof import asof_join
 
     ev = _tbl(spark, sf_dir, "events")
@@ -2319,15 +2241,25 @@ def q_events_asof(spark, sf_dir):
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", "value"
     )
-    j = asof_join(
+    return asof_join(
         purchases,
         clicks,
         on=["user_id"],
         ts_col="ts",
-        payload_cols=["event_id", "value"],
+        payload_cols=payload_cols,
         right_tiebreak="event_id",
         suffix="_click",
     )
+
+
+def q_events_asof(spark, sf_dir):
+    """As-of join (``asof.asof_join``): every purchase aligned to the
+    user's latest click at-or-before it.  One shuffle on user_id, one
+    window pass — no range join.  The twin is DuckDB's NATIVE ASOF JOIN,
+    so the union-tag implementation is verified against an independent
+    first-class one.  Equal-timestamp clicks resolve to max event_id on
+    both engines; value carried as exact cents."""
+    j = _purchase_last_click(spark, sf_dir, ["event_id", "value"])
     p_us = F.unix_micros(F.col("ts").cast("timestamp"))
     return j.select(
         "event_id",
@@ -2336,9 +2268,7 @@ def q_events_asof(spark, sf_dir):
         F.col("event_id_click").alias("click_event_id"),
         F.col("matched_us").alias("click_us"),
         (p_us - F.col("matched_us")).alias("gap_us"),
-        F.round(F.col("value_click") * 100).cast("long").alias(
-            "click_value_cents"
-        ),
+        _cents("value_click").alias("click_value_cents"),
     )
 
 
@@ -2395,9 +2325,7 @@ def q_events_asof_fwd(spark, sf_dir):
         F.col("event_id_buy").alias("purchase_event_id"),
         F.col("matched_us").alias("purchase_us"),
         (F.col("matched_us") - s_us).alias("wait_us"),
-        F.round(F.col("value_buy") * 100).cast("long").alias(
-            "purchase_value_cents"
-        ),
+        _cents("value_buy").alias("purchase_value_cents"),
     )
 
 
@@ -2443,37 +2371,51 @@ def q_events_funnel(spark, sf_dir):
     )
 
 
-def _funnel_steps_sql(steps=None) -> str:
-    """DuckDB twin of q_events_funnel: per-user FILTERed mins chained
-    through CTE joins (t1 -> t2 -> t3), then one count per step.  The
-    strict `us > t_prev` predicate and epoch_us integers match the
-    Spark contract exactly."""
-    steps = steps or _FUNNEL_STEPS
-    ctes = [
-        "e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events)",
-        f"""s1 AS (
-  SELECT user_id,
+_FUNNEL_E_SQL = "e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events)"
+
+
+def _funnel_step_ctes(key: str, steps) -> list:
+    """The funnel twins' step CTEs ``s1..sN`` over a CTE ``e(key, us,
+    event_type)``: ``t1`` is the key's first step-1 time, and ``tK``
+    needs a step-K event STRICTLY after ``t(K-1)``, chained through
+    per-key joins (``sessions.funnel_steps``' window mins)."""
+    ctes = [f"""s1 AS (
+  SELECT {key},
          min(us) FILTER (WHERE event_type = '{steps[0]}') AS t1
-  FROM e GROUP BY user_id
-)""",
-    ]
+  FROM e GROUP BY {key}
+)"""]
     for i in range(2, len(steps) + 1):
         prev_cte, prev_t = f"s{i - 1}", f"t{i - 1}"
         prev_cols = ", ".join(
             f"any_value({prev_cte}.t{j}) AS t{j}" for j in range(1, i)
         )
         ctes.append(f"""s{i} AS (
-  SELECT e.user_id, {prev_cols},
+  SELECT e.{key}, {prev_cols},
          min(us) FILTER (WHERE event_type = '{steps[i - 1]}'
                          AND {prev_t} IS NOT NULL AND us > {prev_t}) AS t{i}
-  FROM e JOIN {prev_cte} USING (user_id) GROUP BY e.user_id
+  FROM e JOIN {prev_cte} USING ({key}) GROUP BY e.{key}
 )""")
+    return ctes
+
+
+def _funnel_reached_sql(ctes, steps, col: str) -> str:
+    # one count of non-NULL tK per step, named `col`
     selects = [
         f"SELECT CAST({i} AS BIGINT) AS step, '{s}' AS step_type,"
-        f" CAST(count(t{i}) AS BIGINT) AS users_reached FROM s{i}"
+        f" CAST(count(t{i}) AS BIGINT) AS {col} FROM s{i}"
         for i, s in enumerate(steps, start=1)
     ]
     return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
+
+
+def _funnel_steps_sql(steps=None) -> str:
+    """DuckDB twin of q_events_funnel: per-user FILTERed mins chained
+    through CTE joins (t1 -> t2 -> t3), then one count per step.  The
+    strict `us > t_prev` predicate and epoch_us integers match the
+    Spark contract exactly."""
+    steps = steps or _FUNNEL_STEPS
+    ctes = [_FUNNEL_E_SQL, *_funnel_step_ctes("user_id", steps)]
+    return _funnel_reached_sql(ctes, steps, "users_reached")
 
 
 _PSI_BINS, _PSI_WIDTH, _PSI_EPS = 16, 40.0, 0.5
@@ -2551,15 +2493,16 @@ def q_emb_pq_codes(spark, sf_dir):
     )
 
 
-def _pq_sql() -> str:
-    """DuckDB twin of q_emb_pq_codes — the same codebook literals in a
-    VALUES table, the same 8-term left-assoc squared distance, argmin =
-    rank-1 by (d ASC, ci ASC), exactly pq_codes' lowest-index
-    array_position rule."""
+def _pq_dists_sql():
+    """``(m, head)``: the number of PQ subspaces and the head of a
+    ``WITH`` list that both PQ twins share — ``base`` vectors, the
+    seeded codebooks as a VALUES table ``cents``, and ``dists``, every
+    (vector, subspace, centroid) squared distance as the same
+    left-associated sum ``similarity.pq_codes`` computes."""
     from .similarity import pq_codebooks
 
     cbs = pq_codebooks()
-    m, k, sub = len(cbs), len(cbs[0]), len(cbs[0][0])
+    m, sub = len(cbs), len(cbs[0][0])
     rows = []
     for s, cb in enumerate(cbs):
         for ci, c in enumerate(cb):
@@ -2571,14 +2514,7 @@ def _pq_sql() -> str:
         f"(v[s*{sub}+{i + 1}] - c{i + 1}) * (v[s*{sub}+{i + 1}] - c{i + 1})"
         for i in range(sub)
     )
-    code_cases = ",\n       ".join(
-        f"CAST(max(CASE WHEN s = {j} THEN code END) AS BIGINT) AS code{j}"
-        for j in range(m)
-    )
-    err_sum = " + ".join(
-        f"max(CASE WHEN s = {j} THEN d END)" for j in range(m)
-    )
-    return f"""
+    return m, f"""
 WITH base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
@@ -2590,7 +2526,25 @@ WITH base AS (
   SELECT b.vec_id, c.s, c.ci,
          {term} AS d
   FROM base b CROSS JOIN cents c
-), sel AS (
+)"""
+
+
+def _pq_pivot_sum(m: int) -> str:
+    # the per-subspace distances d pivoted into one left-assoc sum
+    return " + ".join(f"max(CASE WHEN s = {j} THEN d END)" for j in range(m))
+
+
+def _pq_sql() -> str:
+    """DuckDB twin of q_emb_pq_codes — the same codebook literals in a
+    VALUES table, the same 8-term left-assoc squared distance, argmin =
+    rank-1 by (d ASC, ci ASC), exactly pq_codes' lowest-index
+    array_position rule."""
+    m, head = _pq_dists_sql()
+    code_cases = ",\n       ".join(
+        f"CAST(max(CASE WHEN s = {j} THEN code END) AS BIGINT) AS code{j}"
+        for j in range(m)
+    )
+    return f"""{head}, sel AS (
   SELECT vec_id, s, ci AS code, d FROM (
     SELECT vec_id, s, ci, d,
            row_number() OVER (PARTITION BY vec_id, s
@@ -2599,7 +2553,7 @@ WITH base AS (
 )
 SELECT vec_id,
        {code_cases},
-       round(sqrt({err_sum}), 6) AS qerr
+       round(sqrt({_pq_pivot_sum(m)}), 6) AS qerr
 FROM sel GROUP BY vec_id
 """
 
@@ -2626,37 +2580,8 @@ def _pq_adc_sql(k: int = 5) -> str:
     """DuckDB twin of q_emb_pq_adc: codes from the pq twin's argmin,
     query LUT values from the SAME dists relation, ADC = pivoted
     left-assoc sum over subspaces, rank by (round(d,6) ASC, id ASC)."""
-    from .similarity import pq_codebooks
-
-    cbs = pq_codebooks()
-    m, sub = len(cbs), len(cbs[0][0])
-    rows = []
-    for s, cb in enumerate(cbs):
-        for ci, c in enumerate(cb):
-            coords = ", ".join(repr(float(x)) for x in c)
-            rows.append(f"({s}, {ci}, {coords})")
-    values = ",\n    ".join(rows)
-    cols = ", ".join(f"c{i + 1}" for i in range(sub))
-    term = " + ".join(
-        f"(v[s*{sub}+{i + 1}] - c{i + 1}) * (v[s*{sub}+{i + 1}] - c{i + 1})"
-        for i in range(sub)
-    )
-    adc_sum = " + ".join(
-        f"max(CASE WHEN s = {j} THEN d END)" for j in range(m)
-    )
-    return f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND len(embedding) = {m * sub}
-), cents(s, ci, {cols}) AS (
-  VALUES
-    {values}
-), dists AS (
-  SELECT b.vec_id, c.s, c.ci,
-         {term} AS d
-  FROM base b CROSS JOIN cents c
-), codes AS (
+    m, head = _pq_dists_sql()
+    return f"""{head}, codes AS (
   SELECT vec_id, s, ci AS code FROM (
     SELECT vec_id, s, ci,
            row_number() OVER (PARTITION BY vec_id, s
@@ -2669,7 +2594,7 @@ WITH base AS (
   FROM qd q JOIN codes c ON q.s = c.s AND q.ci = c.code
   WHERE c.vec_id <> q.query_id
 ), adc AS (
-  SELECT query_id, neighbor_id, {adc_sum} AS dist
+  SELECT query_id, neighbor_id, {_pq_pivot_sum(m)} AS dist
   FROM pair GROUP BY query_id, neighbor_id
 ), ranked AS (
   SELECT query_id, neighbor_id, round(dist, 6) AS adc_dist,
@@ -3450,9 +3375,7 @@ def q_events_interval_join(spark, sf_dir):
     )
     return joined.groupBy("event_type", "interval_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-            "value_cents"
-        ),
+        F.sum(_cents("value")).alias("value_cents"),
     )
 
 
@@ -3488,10 +3411,7 @@ def q_nation_revenue(spark, sf_dir):
     hashes identically cross-engine (float revenue would not)."""
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
     )
     o = (
         _tbl(spark, sf_dir, "orders")
@@ -3954,8 +3874,8 @@ def q_lineitem_rollup(spark, sf_dir):
     shuffle; ``grouping_id`` disambiguates rolled-up nulls from data
     nulls on both engines.  Money in exact integer cents."""
     li = _tbl(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    qty = F.round(F.col("l_quantity") * 100).cast("long")
+    cents = _cents("l_extendedprice")
+    qty = _cents("l_quantity")
     return (
         li.withColumn("_cents", cents)
         .withColumn("_qty", qty)
@@ -4081,10 +4001,11 @@ def q_doc_dup_clusters(spark, sf_dir):
     )
 
 
-def _dup_clusters_sql() -> str:
-    """DuckDB twin: the near-dup pair CTE (shared generator) feeding a
-    recursive min-label closure — the fixpoint the iterative Spark loop
-    converges to, engine-verified end to end."""
+def _cc_closure_sql() -> str:
+    """The head of a ``WITH RECURSIVE`` list shared by the cluster
+    twins: the near-dup pairs ``nd``, both edge directions ``e``, and
+    ``cc(node, cluster_id)``, the recursive min-label closure that
+    ``dedup.dup_clusters``' label propagation converges to."""
     return f"""
 WITH RECURSIVE nd AS ({_near_dups_sql()}
 ), e AS (
@@ -4099,7 +4020,14 @@ WITH RECURSIVE nd AS ({_near_dups_sql()}
   SELECT e.dst AS node, r.lab FROM reach r JOIN e ON e.src = r.node
 ), cc AS (
   SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node
-)
+)"""
+
+
+def _dup_clusters_sql() -> str:
+    """DuckDB twin: the near-dup pair CTE (shared generator) feeding a
+    recursive min-label closure — the fixpoint the iterative Spark loop
+    converges to, engine-verified end to end."""
+    return f"""{_cc_closure_sql()}
 SELECT cc.node AS doc_id, cc.cluster_id, sz.cluster_size,
        CAST(cc.node = cc.cluster_id AS INTEGER) AS is_canonical
 FROM cc JOIN (SELECT cluster_id, count(*) AS cluster_size
@@ -4261,7 +4189,7 @@ def q_events_latest_state(spark, sf_dir):
         "user_id",
         F.col("event_type").alias("last_event_type"),
         F.col("props").alias("last_props"),
-        F.round(F.col("value") * 100).cast("long").alias("last_value_cents"),
+        _cents("value").alias("last_value_cents"),
         "last_us",
         "first_us",
         "n_updates",
@@ -4306,7 +4234,7 @@ def q_events_scd2(spark, sf_dir):
         F.coalesce(F.col("valid_to_us"), F.lit(-1)).alias("valid_to_us"),
         F.col("is_current").cast("long").alias("is_current"),
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        _cents("value").alias("value_cents"),
         "event_id",
     )
 
@@ -4626,13 +4554,7 @@ def q_orders_topk_revenue(spark, sf_dir):
         .where(F.col("l_shipdate") > cutoff)
         .select(
             "l_orderkey",
-            (
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (
-                    F.lit(100)
-                    - F.round(F.col("l_discount") * 100).cast("long")
-                )
-            ).alias("_rev"),
+            _rev_cents().alias("_rev"),
         )
     )
     return (
@@ -4862,7 +4784,7 @@ def q_events_user_pivot(spark, sf_dir):
         .select(
             "user_id",
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("_cents"),
+            _cents("value").alias("_cents"),
         )
     )
     return pivot_agg(
@@ -5496,9 +5418,7 @@ def q_orders_rfm(spark, sf_dir):
                 )
             ).alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "monetary_cents"
-            ),
+            F.sum(_cents("o_totalprice")).alias("monetary_cents"),
         )
     )
     per_cust = per_cust.localCheckpoint()  # 3 bin passes + final join
@@ -5711,7 +5631,7 @@ def q_events_ivm(spark, sf_dir):
             side.withColumn(
                 "_us", F.unix_micros(F.col("ts").cast("timestamp"))
             )
-            .withColumn("_cents", F.round(F.col("value") * 100).cast("long"))
+            .withColumn("_cents", _cents("value"))
             .groupBy(
                 F.col("event_type"),
                 F.expr("_us div 3600000000").alias("hour_bucket"),
@@ -6033,8 +5953,8 @@ def q_lineitem_corr(spark, sf_dir):
 
     li = _tbl(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("qty"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("disc_pct"),
-        F.round(F.col("l_tax") * 100).cast("long").alias("tax_pct"),
+        _cents("l_discount").alias("disc_pct"),
+        _cents("l_tax").alias("tax_pct"),
         F.col("l_linenumber").cast("long").alias("line_no"),
     )
     return corr_matrix(li, ["qty", "disc_pct", "tax_pct", "line_no"])
@@ -6434,9 +6354,7 @@ def q_part_skyline(spark, sf_dir):
 
     p = _tbl(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("long").alias(
-            "price_cents"
-        ),
+        _cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("long").alias("size"),
     )
     res = skyline_2d(p, "price_cents", "size", "p_partkey")
@@ -6839,10 +6757,7 @@ def q_orders_ivm_join(spark, sf_dir):
     )
     li = _tbl(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"),
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("rev_units"),
+        _rev_cents().alias("rev_units"),
     )
     o_coin = F.substring(
         F.md5(F.concat(F.lit("ivmo:"), F.col("okey").cast("string"))), 1, 1
@@ -6959,7 +6874,7 @@ def q_events_cube(spark, sf_dir):
             F.expr(
                 "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000 % 7"
             ).alias("dow"),
-            F.round(F.col("value") * 100).cast("long").alias("_cents"),
+            _cents("value").alias("_cents"),
         )
     )
     return ev.cube("event_type", "dow").agg(
@@ -7264,8 +7179,8 @@ def q_part_small_qty_revenue(spark, sf_dir):
     )
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.round(F.col("l_quantity") * 100).cast("long").alias("_qty_c"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("_px_c"),
+        _cents("l_quantity").alias("_qty_c"),
+        _cents("l_extendedprice").alias("_px_c"),
     )
     avgs = li.groupBy("l_partkey").agg(
         F.sum("_qty_c").alias("_sum_q"), F.count(F.lit(1)).alias("_cnt")
@@ -7323,7 +7238,7 @@ def q_customer_idle_rich(spark, sf_dir):
     c = _tbl(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("_bal_c"),
+        _cents("c_acctbal").alias("_bal_c"),
     )
     glob = c.agg(
         F.sum("_bal_c").alias("_sum_c"),
@@ -7433,8 +7348,8 @@ def q_lineitem_wquantiles(spark, sf_dir):
 
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("px_c"),
-        F.round(F.col("l_quantity") * 100).cast("long").alias("qty_u"),
+        _cents("l_extendedprice").alias("px_c"),
+        _cents("l_quantity").alias("qty_u"),
     )
     return weighted_quantiles(
         li, ["l_returnflag"], "px_c", "qty_u", ps=(25, 50, 75)
@@ -7514,14 +7429,9 @@ _FH_DIM = 64
 _FH_SALT = "fh"
 
 
-def q_doc_feature_hash(spark, sf_dir):
-    """Hashing-trick featurization (``lm.feature_hash``): every token
-    signed-hashed into 64 fixed slots with no vocabulary pass — the
-    constant-memory featurizer — then a per-slot corpus rollup
-    (occupancy, signed sum, L1 mass) that exposes the collision/
-    cancellation profile.  Slot and sign are seedless md5 arithmetic,
-    weights are integers; one (doc, slot) aggregate + one 64-row
-    rollup."""
+def _doc_feature_hash(spark, sf_dir):
+    """Every document's whitespace tokens hashed into ``_FH_DIM`` signed
+    slots (``lm.feature_hash``): sparse ``(doc_id, slot, weight)``."""
     from pynomaly_spark.lm import feature_hash
 
     toks = (
@@ -7532,7 +7442,18 @@ def q_doc_feature_hash(spark, sf_dir):
             F.explode(F.split(F.col("text"), r"\s+")).alias("tok"),
         )
     )
-    sparse = feature_hash(toks, "doc_id", "tok", dim=_FH_DIM, salt=_FH_SALT)
+    return feature_hash(toks, "doc_id", "tok", dim=_FH_DIM, salt=_FH_SALT)
+
+
+def q_doc_feature_hash(spark, sf_dir):
+    """Hashing-trick featurization (``lm.feature_hash``): every token
+    signed-hashed into 64 fixed slots with no vocabulary pass — the
+    constant-memory featurizer — then a per-slot corpus rollup
+    (occupancy, signed sum, L1 mass) that exposes the collision/
+    cancellation profile.  Slot and sign are seedless md5 arithmetic,
+    weights are integers; one (doc, slot) aggregate + one 64-row
+    rollup."""
+    sparse = _doc_feature_hash(spark, sf_dir)
     return sparse.groupBy("slot").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum("weight").cast("long").alias("sum_weight"),
@@ -7682,7 +7603,7 @@ def q_customer_big_orders(spark, sf_dir):
     threshold prunes ~80% of orders BEFORE the customer join."""
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        F.round(F.col("l_quantity") * 100).cast("long").alias("_qty_c"),
+        _cents("l_quantity").alias("_qty_c"),
     )
     big = (
         li.groupBy("l_orderkey")
@@ -7692,7 +7613,7 @@ def q_customer_big_orders(spark, sf_dir):
     o = _tbl(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_px_c"),
+        _cents("o_totalprice").alias("_px_c"),
     )
     c = _tbl(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
@@ -7816,17 +7737,9 @@ def q_doc_linear_score(spark, sf_dir):
     guarantees the model side always broadcasts, so inference is
     map-side + one per-doc aggregate.  All-integer arithmetic: the
     decision boundary cannot flip cross-engine."""
-    from pynomaly_spark.lm import feature_hash, linear_score
+    from pynomaly_spark.lm import linear_score
 
-    toks = (
-        _doc(spark, sf_dir)
-        .where(F.col("text").isNotNull() & F.col("doc_id").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), r"\s+")).alias("tok"),
-        )
-    )
-    sparse = feature_hash(toks, "doc_id", "tok", dim=_FH_DIM, salt=_FH_SALT)
+    sparse = _doc_feature_hash(spark, sf_dir)
     weights = spark.range(_FH_DIM).select(
         F.col("id").alias("slot"),
         (
@@ -7893,7 +7806,7 @@ def q_events_target_encode(spark, sf_dir):
     ev = _tbl(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("y_cents"),
+        _cents("value").alias("y_cents"),
     )
     enc = target_encode_loo(ev, "event_type", "y_cents")
     return enc.select(
@@ -8059,13 +7972,7 @@ def q_supplier_top_revenue(spark, sf_dir):
         )
         .select(
             "l_suppkey",
-            (
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (
-                    F.lit(100)
-                    - F.round(F.col("l_discount") * 100).cast("long")
-                )
-            ).alias("_rev"),
+            _rev_cents().alias("_rev"),
         )
     )
     rev = li.groupBy("l_suppkey").agg(
@@ -8121,7 +8028,7 @@ def q_events_residual_outliers(spark, sf_dir):
             F.expr(
                 "unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000 % 168"
             ).alias("how"),
-            F.round(F.col("value") * 100).cast("long").alias("y_c"),
+            _cents("value").alias("y_c"),
         )
     )
     return seasonal_outliers(ev, ["event_type", "how"], "y_c", 3, 2)
@@ -8172,7 +8079,7 @@ def q_orders_retract_aggs(spark, sf_dir):
     o = _tbl(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
+        _cents("o_totalprice").alias("_c"),
         "o_orderdate",
         F.substring(
             F.md5(F.col("o_orderkey").cast("string")), 1, 2
@@ -8258,9 +8165,7 @@ def q_lineitem_winsor(spark, sf_dir):
         .select(
             "l_returnflag",
             F.year(F.col("l_shipdate")).cast("long").alias("ship_year"),
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("long")
-            .alias("price_c"),
+            _cents("l_extendedprice").alias("price_c"),
         )
     )
     return winsorized_stats(
@@ -8325,12 +8230,27 @@ def q_emb_pca_top(spark, sf_dir):
 
 
 def _pca_sql(rounds: int = _PCA_ROUNDS) -> str:
-    S = 1 << _PCA_BITS
-    d = _PCA_DIM
-    # AS MATERIALIZED: every round references q three times — DuckDB
+    return (
+        _pca_head_sql("mu AS")
+        + _pca_chain_sql("", rounds, deflate=False, u_break=" ")
+        + f"""
+SELECT CAST(mu.dim0 - 1 AS BIGINT) AS dim,
+       CAST(mu.mu AS BIGINT) AS mu_q,
+       CAST(v{rounds}.v AS BIGINT) AS v_fixed
+FROM mu JOIN v{rounds} USING (dim0)
+"""
+    )
+
+
+def _pca_head_sql(mu: str) -> str:
+    """The PCA twins' ``WITH`` head: quantized coordinates ``q``, the
+    row count, the integer mean ``mu`` (declared as ``mu``, e.g.
+    ``"mu AS MATERIALIZED"``) and the all-ones start ``v0``."""
+    S, d = 1 << _PCA_BITS, _PCA_DIM
+    # q AS MATERIALIZED: every round references q three times — DuckDB
     # inlines plain CTEs, so 6 rounds would re-open the parquet ~18
     # times concurrently (EMFILE) and re-quantize per reference.
-    parts = [f"""
+    return f"""
 WITH q AS MATERIALIZED (
   SELECT vec_id, i.i AS dim0,
          CAST(floor(CAST(embedding[i.i] AS DOUBLE) * {S} + 0.5) AS BIGINT)
@@ -8339,44 +8259,60 @@ WITH q AS MATERIALIZED (
   WHERE embedding IS NOT NULL AND len(embedding) = {d}
 ), nn AS (
   SELECT count(DISTINCT vec_id) AS n FROM q
-), mu AS (
+), {mu} (
   SELECT dim0, sum(q) // (SELECT n FROM nn) AS mu FROM q GROUP BY 1
 ), v0 AS (
   SELECT unnest(generate_series(1, {d})) AS dim0, CAST({S} AS BIGINT) AS v
-)"""]
-    # every round CTE is MATERIALIZED: v{r} is referenced twice by
-    # round r+1, so inlined CTEs re-expand the whole chain 2^rounds
-    # times — the DuckDB analogue of the self-join plan-doubling trap
-    # (dup_clusters lesson); materialization pins each round to one
-    # evaluation.
-    prev = "v0"
+)"""
+
+
+def _pca_chain_sql(tag: str, rounds: int, deflate: bool,
+                   u_break: str = "\n           ") -> str:
+    """``rounds`` fixed-point power-iteration rounds from ``v0``, the
+    CTEs ``m{tag}{r} .. v{tag}{r}``; ``deflate`` subtracts each round's
+    projection on the converged ``v1f`` (``similarity.pca_power_two``).
+    ``u_break`` is the text between the two terms of ``u``.
+
+    Every round CTE is MATERIALIZED: v{r} is referenced twice by round
+    r+1, so inlined CTEs re-expand the whole chain 2^rounds times — the
+    DuckDB analogue of the self-join plan-doubling trap (dup_clusters
+    lesson); materialization pins each round to one evaluation."""
+    S = 1 << _PCA_BITS
+    out, prev = [], "v0"
     for r in range(1, rounds + 1):
-        parts.append(f""", m{r} AS MATERIALIZED (
+        u_cte = f"w{tag}{r}" if deflate else f"u{tag}{r}"
+        out.append(f""", m{tag}{r} AS MATERIALIZED (
   SELECT sum(mu.mu * {prev}.v) AS m FROM mu JOIN {prev} USING (dim0)
-), s{r} AS MATERIALIZED (
+), s{tag}{r} AS MATERIALIZED (
   SELECT q.vec_id,
-         (sum(q.q * {prev}.v) - (SELECT m FROM m{r})) // {S} AS s
+         (sum(q.q * {prev}.v) - (SELECT m FROM m{tag}{r})) // {S} AS s
   FROM q JOIN {prev} USING (dim0) GROUP BY 1
-), t{r} AS MATERIALIZED (
-  SELECT sum(s) AS t FROM s{r}
-), u{r} AS MATERIALIZED (
+), t{tag}{r} AS MATERIALIZED (
+  SELECT sum(s) AS t FROM s{tag}{r}
+), {u_cte} AS MATERIALIZED (
   SELECT q.dim0,
-         sum(q.q * s{r}.s) - max(mu.mu) * (SELECT t FROM t{r}) AS u
-  FROM q JOIN s{r} USING (vec_id) JOIN mu ON mu.dim0 = q.dim0
+         sum(q.q * s{tag}{r}.s){u_break}- max(mu.mu) * (SELECT t FROM t{tag}{r}) AS u
+  FROM q JOIN s{tag}{r} USING (vec_id) JOIN mu ON mu.dim0 = q.dim0
   GROUP BY q.dim0
-), sc{r} AS MATERIALIZED (
-  SELECT greatest(1, max(abs(u)) // {S}) AS sc FROM u{r}
-), v{r} AS MATERIALIZED (
-  SELECT dim0, u // (SELECT sc FROM sc{r}) AS v FROM u{r}
 )""")
-        prev = f"v{r}"
-    parts.append(f"""
-SELECT CAST(mu.dim0 - 1 AS BIGINT) AS dim,
-       CAST(mu.mu AS BIGINT) AS mu_q,
-       CAST({prev}.v AS BIGINT) AS v_fixed
-FROM mu JOIN {prev} USING (dim0)
-""")
-    return "".join(parts)
+        if deflate:
+            out.append(f""", pr{tag}{r} AS MATERIALIZED (
+  SELECT sum(CAST(w.u AS HUGEINT) * f.v) AS proj
+  FROM w{tag}{r} w JOIN v1f f USING (dim0)
+), u{tag}{r} AS MATERIALIZED (
+  SELECT w.dim0,
+         CAST(w.u AS HUGEINT)
+           - ((SELECT proj FROM pr{tag}{r}) * f.v)
+             // (SELECT nrm FROM nrm1) AS u
+  FROM w{tag}{r} w JOIN v1f f USING (dim0)
+)""")
+        out.append(f""", sc{tag}{r} AS MATERIALIZED (
+  SELECT greatest(1, max(abs(u)) // {S}) AS sc FROM u{tag}{r}
+), v{tag}{r} AS MATERIALIZED (
+  SELECT dim0, u // (SELECT sc FROM sc{tag}{r}) AS v FROM u{tag}{r}
+)""")
+        prev = f"v{tag}{r}"
+    return "".join(out)
 
 
 def q_doc_golden(spark, sf_dir):
@@ -8396,21 +8332,7 @@ def q_doc_golden(spark, sf_dir):
 
 
 def _golden_sql() -> str:
-    return f"""
-WITH RECURSIVE nd AS ({_near_dups_sql()}
-), e AS (
-  SELECT id_a AS src, id_b AS dst FROM nd
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM nd
-), n AS (
-  SELECT DISTINCT src AS node FROM e
-), reach AS (
-  SELECT node, node AS lab FROM n
-  UNION
-  SELECT e.dst AS node, r.lab FROM reach r JOIN e ON e.src = r.node
-), cc AS (
-  SELECT node, min(lab) AS cluster_id FROM reach GROUP BY node
-), joined AS (
+    return f"""{_cc_closure_sql()}, joined AS (
   SELECT coalesce(cc.cluster_id, d.doc_id) AS cluster_id,
          d.doc_id AS id,
          coalesce(CAST(d.n_chars AS BIGINT), {-(1 << 62)}) AS sc
@@ -8442,19 +8364,7 @@ def q_orders_trend(spark, sf_dir):
     in two map-side-combined aggregates."""
     from pynomaly_spark.features import ols_fit
 
-    o = (
-        _tbl(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate").isNotNull())
-        .select(
-            "o_orderpriority",
-            (
-                (F.year("o_orderdate") - F.lit(1995)) * 12
-                + F.month("o_orderdate")
-                - 1
-            ).cast("long").alias("month_idx"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
-        )
-    )
+    o = _order_months(spark, sf_dir, "o_orderpriority", "month_idx")
     monthly = o.groupBy("o_orderpriority", "month_idx").agg(
         F.expr("sum(_c) div 100").alias("rev_d")
     )
@@ -8516,7 +8426,7 @@ def q_lineitem_qhist(spark, sf_dir):
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("_c"),
+        _cents("l_extendedprice").alias("_c"),
     )
     split = F.lit(_QH_SPLIT).cast("timestamp")
     early = qhist_build(
@@ -8608,19 +8518,7 @@ def q_customer_ltv(spark, sf_dir):
     cohort×offset rollup — so "active customers" is a plain count of
     the collapsed frame, no count-distinct Expand.  Revenue is exact
     cents."""
-    o = (
-        _tbl(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate").isNotNull())
-        .select(
-            "o_custkey",
-            (
-                (F.year("o_orderdate") - F.lit(1995)) * 12
-                + F.month("o_orderdate")
-                - 1
-            ).cast("long").alias("_m"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
-        )
-    )
+    o = _order_months(spark, sf_dir, "o_custkey", "_m")
     first = o.groupBy("o_custkey").agg(F.min("_m").alias("_cohort"))
     per_cust = (
         o.join(
@@ -8824,7 +8722,7 @@ def q_lineitem_qhist_audit(spark, sf_dir):
 
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("_c"),
+        _cents("l_extendedprice").alias("_c"),
         F.lit(1).alias("_w"),
     )
     exact = weighted_quantiles(li, ["l_returnflag"], "_c", "_w", ps=(50, 95))
@@ -8980,25 +8878,7 @@ def q_events_funnel_latency(spark, sf_dir):
 
 def _funnel_latency_sql(steps=None) -> str:
     steps = steps or _FUNNEL_STEPS
-    ctes = [
-        "e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events)",
-        f"""s1 AS (
-  SELECT user_id,
-         min(us) FILTER (WHERE event_type = '{steps[0]}') AS t1
-  FROM e GROUP BY user_id
-)""",
-    ]
-    for i in range(2, len(steps) + 1):
-        prev_cte, prev_t = f"s{i - 1}", f"t{i - 1}"
-        prev_cols = ", ".join(
-            f"any_value({prev_cte}.t{j}) AS t{j}" for j in range(1, i)
-        )
-        ctes.append(f"""s{i} AS (
-  SELECT e.user_id, {prev_cols},
-         min(us) FILTER (WHERE event_type = '{steps[i - 1]}'
-                         AND {prev_t} IS NOT NULL AND us > {prev_t}) AS t{i}
-  FROM e JOIN {prev_cte} USING (user_id) GROUP BY e.user_id
-)""")
+    ctes = [_FUNNEL_E_SQL, *_funnel_step_ctes("user_id", steps)]
     last = f"s{len(steps)}"
     lat_selects = [
         f"SELECT CAST({k} AS BIGINT) AS step, t{k} - t{k - 1} AS lat"
@@ -9378,10 +9258,7 @@ def q_nation_market_share(spark, sf_dir):
     window over the fact table and never a second scan."""
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
     )
     o = _tbl(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.year("o_orderdate").alias("yr")
@@ -9447,13 +9324,7 @@ def q_customer_returns(spark, sf_dir):
         .where(F.col("l_returnflag") == "R")
         .select(
             "l_orderkey",
-            (
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (
-                    F.lit(100)
-                    - F.round(F.col("l_discount") * 100).cast("long")
-                )
-            ).alias("_rev"),
+            _rev_cents().alias("_rev"),
         )
     )
     o = (
@@ -9507,10 +9378,7 @@ def q_part_promo_share(spark, sf_dir):
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.date_format("l_shipdate", "yyyy-MM").alias("month"),
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
     )
     p = _tbl(spark, sf_dir, "part").select("p_partkey", "p_type")
     j = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -9565,69 +9433,16 @@ def q_emb_pca_top2(spark, sf_dir):
 
 
 def _pca2_sql(rounds: int = _PCA_ROUNDS) -> str:
-    S = 1 << _PCA_BITS
-    d = _PCA_DIM
-    parts = [f"""
-WITH q AS MATERIALIZED (
-  SELECT vec_id, i.i AS dim0,
-         CAST(floor(CAST(embedding[i.i] AS DOUBLE) * {S} + 0.5) AS BIGINT)
-           AS q
-  FROM embeddings, (SELECT unnest(generate_series(1, {d})) AS i) i
-  WHERE embedding IS NOT NULL AND len(embedding) = {d}
-), nn AS (
-  SELECT count(DISTINCT vec_id) AS n FROM q
-), mu AS MATERIALIZED (
-  SELECT dim0, sum(q) // (SELECT n FROM nn) AS mu FROM q GROUP BY 1
-), v0 AS (
-  SELECT unnest(generate_series(1, {d})) AS dim0, CAST({S} AS BIGINT) AS v
-)"""]
-
-    def chain(tag: str, prev0: str, deflate: bool) -> str:
-        out, prev = [], prev0
-        for r in range(1, rounds + 1):
-            u_cte = f"w{tag}{r}" if deflate else f"u{tag}{r}"
-            out.append(f""", m{tag}{r} AS MATERIALIZED (
-  SELECT sum(mu.mu * {prev}.v) AS m FROM mu JOIN {prev} USING (dim0)
-), s{tag}{r} AS MATERIALIZED (
-  SELECT q.vec_id,
-         (sum(q.q * {prev}.v) - (SELECT m FROM m{tag}{r})) // {S} AS s
-  FROM q JOIN {prev} USING (dim0) GROUP BY 1
-), t{tag}{r} AS MATERIALIZED (
-  SELECT sum(s) AS t FROM s{tag}{r}
-), {u_cte} AS MATERIALIZED (
-  SELECT q.dim0,
-         sum(q.q * s{tag}{r}.s)
-           - max(mu.mu) * (SELECT t FROM t{tag}{r}) AS u
-  FROM q JOIN s{tag}{r} USING (vec_id) JOIN mu ON mu.dim0 = q.dim0
-  GROUP BY q.dim0
-)""")
-            if deflate:
-                out.append(f""", pr{tag}{r} AS MATERIALIZED (
-  SELECT sum(CAST(w.u AS HUGEINT) * f.v) AS proj
-  FROM w{tag}{r} w JOIN v1f f USING (dim0)
-), u{tag}{r} AS MATERIALIZED (
-  SELECT w.dim0,
-         CAST(w.u AS HUGEINT)
-           - ((SELECT proj FROM pr{tag}{r}) * f.v)
-             // (SELECT nrm FROM nrm1) AS u
-  FROM w{tag}{r} w JOIN v1f f USING (dim0)
-)""")
-            out.append(f""", sc{tag}{r} AS MATERIALIZED (
-  SELECT greatest(1, max(abs(u)) // {S}) AS sc FROM u{tag}{r}
-), v{tag}{r} AS MATERIALIZED (
-  SELECT dim0, u // (SELECT sc FROM sc{tag}{r}) AS v FROM u{tag}{r}
-)""")
-            prev = f"v{tag}{r}"
-        return "".join(out)
-
-    parts.append(chain("a", "v0", False))
-    parts.append(f""", v1f AS MATERIALIZED (
+    return (
+        _pca_head_sql("mu AS MATERIALIZED")
+        + _pca_chain_sql("a", rounds, deflate=False)
+        + f""", v1f AS MATERIALIZED (
   SELECT dim0, v FROM va{rounds}
 ), nrm1 AS MATERIALIZED (
   SELECT greatest(1, sum(v * v)) AS nrm FROM v1f
-)""")
-    parts.append(chain("b", "v0", True))
-    parts.append(f"""
+)"""
+        + _pca_chain_sql("b", rounds, deflate=True)
+        + f"""
 SELECT CAST(1 AS BIGINT) AS component, CAST(mu.dim0 - 1 AS BIGINT) AS dim,
        CAST(mu.mu AS BIGINT) AS mu_q, CAST(v1f.v AS BIGINT) AS v_fixed
 FROM mu JOIN v1f USING (dim0)
@@ -9635,8 +9450,8 @@ UNION ALL
 SELECT CAST(2 AS BIGINT), CAST(mu.dim0 - 1 AS BIGINT),
        CAST(mu.mu AS BIGINT), CAST(vb{rounds}.v AS BIGINT)
 FROM mu JOIN vb{rounds} USING (dim0)
-""")
-    return "".join(parts)
+"""
+    )
 
 
 def q_events_session_funnel(spark, sf_dir):
@@ -9684,6 +9499,7 @@ def q_events_session_funnel(spark, sf_dir):
 def _session_funnel_sql(gap_min: int = _SESSION_GAP_MIN) -> str:
     gap_us = gap_min * 60 * 1_000_000
     steps = _FUNNEL_STEPS
+    s1, *rest = _funnel_step_ctes("skey", steps)
     ctes = [f"""e0 AS (
   SELECT user_id, event_id, epoch_us(ts) AS us, event_type FROM events
 ), marked AS (
@@ -9700,31 +9516,26 @@ def _session_funnel_sql(gap_min: int = _SESSION_GAP_MIN) -> str:
            AS skey,
          us, event_type
   FROM marked
-), s1 AS (
-  SELECT skey,
-         min(us) FILTER (WHERE event_type = '{steps[0]}') AS t1
-  FROM e GROUP BY skey
-)"""]
-    for i in range(2, len(steps) + 1):
-        prev_cte, prev_t = f"s{i - 1}", f"t{i - 1}"
-        prev_cols = ", ".join(
-            f"any_value({prev_cte}.t{j}) AS t{j}" for j in range(1, i)
-        )
-        ctes.append(f"""s{i} AS (
-  SELECT e.skey, {prev_cols},
-         min(us) FILTER (WHERE event_type = '{steps[i - 1]}'
-                         AND {prev_t} IS NOT NULL AND us > {prev_t}) AS t{i}
-  FROM e JOIN {prev_cte} USING (skey) GROUP BY e.skey
-)""")
-    selects = [
-        f"SELECT CAST({i} AS BIGINT) AS step, '{s}' AS step_type,"
-        f" CAST(count(t{i}) AS BIGINT) AS sessions_reached FROM s{i}"
-        for i, s in enumerate(steps, start=1)
-    ]
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
+), {s1}""", *rest]
+    return _funnel_reached_sql(ctes, steps, "sessions_reached")
 
 
 _STL_HALF_H = 84  # centered trend window: ±84h (one week total)
+
+
+def _hourly_cents(spark, sf_dir, name: str):
+    """Event value per epoch hour ``h`` as exact cents ``name``."""
+    return (
+        _tbl(spark, sf_dir, "events")
+        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
+        .select(
+            F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
+            .alias("h"),
+            _cents("value").alias("_c"),
+        )
+        .groupBy("h")
+        .agg(F.sum("_c").alias(name))
+    )
 
 
 def q_events_stl(spark, sf_dir):
@@ -9737,16 +9548,7 @@ def q_events_stl(spark, sf_dir):
     so the unpartitioned RANGE window is control-plane sized by
     construction.  The decomposition the residual-outlier gate
     (events_residual_outliers) assumes, made explicit and exact."""
-    ev = (
-        _tbl(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-            .alias("h"),
-            F.round(F.col("value") * 100).cast("long").alias("_c"),
-        )
-    )
-    hourly = ev.groupBy("h").agg(F.sum("_c").alias("y_c"))
+    hourly = _hourly_cents(spark, sf_dir, "y_c")
     trended = hourly.select(
         "h",
         "y_c",
@@ -9842,14 +9644,6 @@ def q_emb_hard_negatives(spark, sf_dir):
 
 
 def _emb_hard_negatives_sql(threshold: float = _HN_THR) -> str:
-    from .similarity import _hyperplanes
-
-    planes = _hyperplanes(_EMB_DIM, 6, 42)
-    bucket_terms = "\n       + ".join(
-        f"(CASE WHEN list_dot_product(v, {_sql_double_array(p)}) > 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
     return f"""
 WITH base AS (
   SELECT vec_id, label,
@@ -9857,7 +9651,7 @@ WITH base AS (
   FROM embeddings WHERE label IS NOT NULL
 ), it AS (
   SELECT vec_id, label, v,
-         {bucket_terms} AS bucket
+         {_plane_bucket_sql()} AS bucket
   FROM base
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -10017,7 +9811,7 @@ def q_customer_lorenz(spark, sf_dir):
 
     o = _tbl(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
+        _cents("o_totalprice").alias("_c"),
     )
     per_cust = o.groupBy("o_custkey").agg(F.sum("_c").alias("rev_c"))
     qb = quantile_bins(
@@ -10080,16 +9874,15 @@ def q_lineitem_q6(spark, sf_dir):
     li = _tbl(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        & (F.round(F.col("l_discount") * 100).cast("long") >= 5)
-        & (F.round(F.col("l_discount") * 100).cast("long") <= 7)
+        & (_cents("l_discount") >= 5)
+        & (_cents("l_discount") <= 7)
         & (F.col("l_quantity") < 24)
     )
     return li.agg(
         F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.sum(
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * F.round(F.col("l_discount") * 100).cast("long")
-        ).cast("long").alias("revenue_c4"),
+        F.sum(_cents("l_extendedprice") * _cents("l_discount"))
+        .cast("long")
+        .alias("revenue_c4"),
     )
 
 
@@ -10117,15 +9910,12 @@ def q_nation_profit(spark, sf_dir):
         "l_partkey",
         "l_suppkey",
         F.year("l_shipdate").cast("long").alias("yr"),
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
         F.round(F.col("l_quantity")).cast("long").alias("_qty"),
     )
     p = _tbl(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("_ret_c"),
+        _cents("p_retailprice").alias("_ret_c"),
     )
     s = _tbl(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _tbl(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -10166,10 +9956,7 @@ def q_part_bracket_revenue(spark, sf_dir):
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.round(F.col("l_quantity")).cast("long").alias("_qty"),
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
     )
     p = _tbl(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size"
@@ -10236,10 +10023,7 @@ def q_nation_trade(spark, sf_dir):
         "l_orderkey",
         "l_suppkey",
         F.year("l_shipdate").cast("long").alias("yr"),
-        (
-            F.round(F.col("l_extendedprice") * 100).cast("long")
-            * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-        ).alias("_rev"),
+        _rev_cents().alias("_rev"),
     )
     o = _tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _tbl(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -10291,25 +10075,9 @@ def q_events_asof_staleness(spark, sf_dir):
     means the matched click is ancient, not causal).  Composes the
     as-of join with ``weighted_quantiles`` over the integer-µs gaps;
     unmatched purchases count in the rate but carry no gap mass."""
-    from pynomaly_spark.asof import asof_join
     from pynomaly_spark.profiling import weighted_quantiles
 
-    ev = _tbl(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    j = asof_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        ts_col="ts",
-        payload_cols=["event_id"],
-        right_tiebreak="event_id",
-        suffix="_click",
-    )
+    j = _purchase_last_click(spark, sf_dir, ["event_id"])
     p_us = F.unix_micros(F.col("ts").cast("timestamp"))
     gaps = j.select(
         (p_us - F.col("matched_us")).alias("gap_us"),
@@ -10467,7 +10235,7 @@ def q_lineitem_ks_exact(spark, sf_dir):
 
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"),
+        _cents("l_extendedprice").alias("c"),
     )
     split = F.lit("1998-01-01").cast("timestamp")
     return ks_exact(
@@ -10517,7 +10285,7 @@ def q_lineitem_mwu(spark, sf_dir):
 
     li = _tbl(spark, sf_dir, "lineitem").select(
         "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"),
+        _cents("l_extendedprice").alias("c"),
     )
     split = F.lit("1998-01-01").cast("timestamp")
     return rank_sum_u(
@@ -10648,19 +10416,7 @@ def q_orders_theilsen(spark, sf_dir):
     never by row count."""
     from pynomaly_spark.profiling import weighted_quantiles
 
-    o = (
-        _tbl(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate").isNotNull())
-        .select(
-            "o_orderpriority",
-            (
-                (F.year("o_orderdate") - F.lit(1995)) * 12
-                + F.month("o_orderdate")
-                - 1
-            ).cast("long").alias("m"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
-        )
-    )
+    o = _order_months(spark, sf_dir, "o_orderpriority", "m")
     monthly = o.groupBy("o_orderpriority", "m").agg(
         F.sum("_c").alias("rev")
     )
@@ -10739,17 +10495,7 @@ def q_events_changepoint(spark, sf_dir):
     pointwise complement to sequences.cusum_flags' threshold alarms."""
     from pyspark.sql import Window
 
-    hourly = (
-        _tbl(spark, sf_dir, "events")
-        .where(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-            .alias("h"),
-            F.round(F.col("value") * 100).cast("long").alias("_c"),
-        )
-        .groupBy("h")
-        .agg(F.sum("_c").alias("y"))
-    )
+    hourly = _hourly_cents(spark, sf_dir, "y")
     w = Window.orderBy("h").rowsBetween(Window.unboundedPreceding, 0)
     cum = hourly.select(
         "h",
@@ -10845,7 +10591,7 @@ def q_events_trending(spark, sf_dir):
             F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
             .alias("day"),
             "event_type",
-            F.round(F.col("value") * 100).cast("long").alias("_c"),
+            _cents("value").alias("_c"),
         )
     )
     daily = ev.groupBy("day", "event_type").agg(
@@ -11102,9 +10848,7 @@ def q_lineitem_spearman(spark, sf_dir):
         .groupBy("l_orderkey")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).cast("long").alias("cents"),
+            F.sum(_cents("l_extendedprice")).cast("long").alias("cents"),
         )
     )
     return spearman_rho(per_order, "n_lines", "cents")
@@ -11418,13 +11162,18 @@ def q_doc_w1_drift(spark, sf_dir):
     )
 
 
-def _w1_sql(n_bins: int = _KS_BINS, width: float = _KS_WIDTH) -> str:
-    last = n_bins - 1
-    cum = ",\n         ".join(
+def _cum_bins_sql(n_bins: int, name: str) -> str:
+    # the W1 twins' inclusive cumulative bin counts {name}0..{name}{n-1}
+    return ",\n         ".join(
         f"CAST(sum(CASE WHEN bin <= {i} THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS c{i}"
+        f" AS {name}{i}"
         for i in range(n_bins)
     )
+
+
+def _w1_sql(n_bins: int = _KS_BINS, width: float = _KS_WIDTH) -> str:
+    last = n_bins - 1
+    cum = _cum_bins_sql(n_bins, "c")
     num = "\n           + ".join(
         f"ABS(CAST(p.c{i} AS HUGEINT) * g.c{last}"
         f" - CAST(g.c{i} AS HUGEINT) * p.c{last})"
@@ -11503,18 +11252,12 @@ _MHF_P, _MHF_B, _MHF_R = 16, 4, 4  # perms, bands, rows per band
 _MHF_MAXID = 300
 
 
-def q_doc_minhash_fidelity(spark, sf_dir):
-    """MinHash calibration audit: for every LSH candidate pair, the
-    signature-agreement estimate (``agree/P``) against the EXACT word
-    Jaccard, rolled up per agreement count — the est-vs-truth curve
-    that tells a dedup pipeline what a band match actually means
-    (monotone mean_true rising to 1.0 at agree = P on this corpus).
-    The sketch-audit sibling of ``lineitem_qhist_audit`` /
-    ``emb_ann_recall``: every sketch the engine ships gets an
-    in-engine fidelity check.  md5-keyed signatures so the twin
-    recomputes them bit-for-bit (the scale path swaps in xxhash64 —
-    same plan); truth is integer-decided 6-dp fixed point; the only
-    joins are band-bucket and candidate-keyed — never all-pairs."""
+def _mh_band_pairs(spark, sf_dir):
+    """The md5-MinHash LSH candidates shared by ``doc_minhash_fidelity``
+    and ``doc_containment``: the distinct words ``w2`` of the first
+    ``_MHF_MAXID`` documents, their ``P`` md5 signatures ``sig``
+    (``h0..h{P-1}``), word counts ``nb`` (``nw``) and the distinct
+    band-matched pairs ``(id_a < id_b)``."""
     P, B, R = _MHF_P, _MHF_B, _MHF_R
     w2 = (
         _doc(spark, sf_dir)
@@ -11558,18 +11301,13 @@ def q_doc_minhash_fidelity(spark, sf_dir):
         .select(F.col("doc_id").alias("id_a"), F.col("_id2").alias("id_b"))
         .distinct()
     )
-    sig_b = sig.select(
-        F.col("doc_id").alias("_sb_id"),
-        *[F.col(f"h{k}").alias(f"_hb{k}") for k in range(P)],
-    )
-    agree_expr = sum(
-        (F.col(f"h{k}") == F.col(f"_hb{k}")).cast("int") for k in range(P)
-    )
-    scored = (
-        pairs.join(sig, F.col("id_a") == F.col("doc_id"))
-        .join(sig_b, F.col("id_b") == F.col("_sb_id"))
-        .select("id_a", "id_b", agree_expr.cast("long").alias("agree"))
-    )
+    return w2, sig, nb, pairs
+
+
+def _mh_pair_sizes(frame, pairs, w2, nb):
+    """``frame`` (keyed by ``id_a, id_b``) with each candidate pair's
+    exact word-intersection size ``_i`` (left join: NULL when the pair
+    shares no word) and both word counts ``_na``, ``_nb``."""
     wa = w2.select(F.col("doc_id").alias("_wa_id"), F.col("w").alias("_wa"))
     wb = w2.select(F.col("doc_id").alias("_wb_id"), F.col("w").alias("_wb"))
     inter = (
@@ -11584,17 +11322,45 @@ def q_doc_minhash_fidelity(spark, sf_dir):
     )
     na = nb.select(F.col("doc_id").alias("_na_id"), F.col("nw").alias("_na"))
     nbb = nb.select(F.col("doc_id").alias("_nb_id"), F.col("nw").alias("_nb"))
-    per_pair = (
-        scored.join(inter, ["id_a", "id_b"], "left")
+    return (
+        frame.join(inter, ["id_a", "id_b"], "left")
         .join(na, F.col("id_a") == F.col("_na_id"))
         .join(nbb, F.col("id_b") == F.col("_nb_id"))
-        .select(
-            "agree",
-            F.expr(
-                "(coalesce(_i, 0L) * 1000000L)"
-                " div (_na + _nb - coalesce(_i, 0L))"
-            ).alias("true_6dp"),
-        )
+    )
+
+
+def q_doc_minhash_fidelity(spark, sf_dir):
+    """MinHash calibration audit: for every LSH candidate pair, the
+    signature-agreement estimate (``agree/P``) against the EXACT word
+    Jaccard, rolled up per agreement count — the est-vs-truth curve
+    that tells a dedup pipeline what a band match actually means
+    (monotone mean_true rising to 1.0 at agree = P on this corpus).
+    The sketch-audit sibling of ``lineitem_qhist_audit`` /
+    ``emb_ann_recall``: every sketch the engine ships gets an
+    in-engine fidelity check.  md5-keyed signatures so the twin
+    recomputes them bit-for-bit (the scale path swaps in xxhash64 —
+    same plan); truth is integer-decided 6-dp fixed point; the only
+    joins are band-bucket and candidate-keyed — never all-pairs."""
+    P = _MHF_P
+    w2, sig, nb, pairs = _mh_band_pairs(spark, sf_dir)
+    sig_b = sig.select(
+        F.col("doc_id").alias("_sb_id"),
+        *[F.col(f"h{k}").alias(f"_hb{k}") for k in range(P)],
+    )
+    agree_expr = sum(
+        (F.col(f"h{k}") == F.col(f"_hb{k}")).cast("int") for k in range(P)
+    )
+    scored = (
+        pairs.join(sig, F.col("id_a") == F.col("doc_id"))
+        .join(sig_b, F.col("id_b") == F.col("_sb_id"))
+        .select("id_a", "id_b", agree_expr.cast("long").alias("agree"))
+    )
+    per_pair = _mh_pair_sizes(scored, pairs, w2, nb).select(
+        "agree",
+        F.expr(
+            "(coalesce(_i, 0L) * 1000000L)"
+            " div (_na + _nb - coalesce(_i, 0L))"
+        ).alias("true_6dp"),
     )
     return per_pair.groupBy("agree").agg(
         F.expr(f"(max(agree) * 1000000L) div {P}")
@@ -11609,7 +11375,9 @@ def q_doc_minhash_fidelity(spark, sf_dir):
     )
 
 
-def _minhash_fidelity_sql() -> str:
+def _mh_band_pairs_sql() -> str:
+    """The twin of ``_mh_band_pairs`` (CTEs ``w2``, ``sig``, ``nb``,
+    ``banded``, ``pairs``), as the head of a ``WITH`` list."""
     P, B, R = _MHF_P, _MHF_B, _MHF_R
     sig_cols = ",\n    ".join(
         f"min(md5('{k}:' || w)) AS h{k}" for k in range(P)
@@ -11621,9 +11389,6 @@ def _minhash_fidelity_sql() -> str:
         for b in range(B)
     )
     band_list = ", ".join(f"b{b}" for b in range(B))
-    agree = " + ".join(
-        f"CASE WHEN a.h{k} = bb.h{k} THEN 1 ELSE 0 END" for k in range(P)
-    )
     return f"""
 WITH w AS (
   SELECT DISTINCT doc_id, unnest(string_split_regex(text, '\\s+')) AS w
@@ -11641,16 +11406,28 @@ banded AS (
   FROM (SELECT doc_id, unnest([{band_list}]) AS bh FROM banded) x
   JOIN (SELECT doc_id, unnest([{band_list}]) AS bh FROM banded) y
     ON x.bh = y.bh AND x.doc_id < y.doc_id
-), scored AS (
-  SELECT p.id_a, p.id_b, CAST({agree} AS BIGINT) AS agree
-  FROM pairs p JOIN sig a ON a.doc_id = p.id_a
-  JOIN sig bb ON bb.doc_id = p.id_b
-), inter AS (
+)"""
+
+
+# the twin of _mh_pair_sizes' intersection join
+_MH_INTER_SQL = """inter AS (
   SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS i
   FROM pairs p JOIN w2 wa ON wa.doc_id = p.id_a
   JOIN w2 wb ON wb.doc_id = p.id_b AND wb.w = wa.w
   GROUP BY 1, 2
-), per_pair AS (
+)"""
+
+
+def _minhash_fidelity_sql() -> str:
+    P = _MHF_P
+    agree = " + ".join(
+        f"CASE WHEN a.h{k} = bb.h{k} THEN 1 ELSE 0 END" for k in range(P)
+    )
+    return f"""{_mh_band_pairs_sql()}, scored AS (
+  SELECT p.id_a, p.id_b, CAST({agree} AS BIGINT) AS agree
+  FROM pairs p JOIN sig a ON a.doc_id = p.id_a
+  JOIN sig bb ON bb.doc_id = p.id_b
+), {_MH_INTER_SQL}, per_pair AS (
   SELECT s.agree,
          CAST((coalesce(i.i, 0) * 1000000)
               // (na.nw + nbb.nw - coalesce(i.i, 0)) AS BIGINT)
@@ -11731,13 +11508,7 @@ def q_customer_gap_forecast(spark, sf_dir):
     act = (
         _tbl(spark, sf_dir, "orders")
         .where(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
-        .select(
-            F.col("o_custkey").alias("c"),
-            F.expr(
-                "unix_micros(cast(o_orderdate as timestamp))"
-                " div 86400000000"
-            ).alias("day"),
-        )
+        .select(F.col("o_custkey").alias("c"), _order_day().alias("day"))
         .distinct()
     )
     days = act.groupBy("c").agg(
@@ -11987,74 +11758,13 @@ def q_doc_containment(spark, sf_dir):
     reports per-class counts and exact 6-dp mean Jaccard/containment.
     The dedup-pipeline triage that decides DROP vs KEEP-LONGER vs
     KEEP-BOTH."""
-    P, B, R = _MHF_P, _MHF_B, _MHF_R
-    w2 = (
-        _doc(spark, sf_dir)
-        .where((F.col("doc_id") < _MHF_MAXID) & F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.explode(F.split(F.col("text"), r"\s+")).alias("w"),
-        )
-        .where(F.col("w") != "")
-        .distinct()
-    )
-    sig = w2.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("w")))).alias(
-                f"h{k}"
-            )
-            for k in range(P)
-        ]
-    )
-    nb = w2.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("nw"))
-    bands = F.array(
-        *[
-            F.md5(
-                F.concat(
-                    *[F.col(f"h{b * R + r}") for r in range(R)],
-                    F.lit(f":{b}"),
-                )
-            )
-            for b in range(B)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(bands).alias("bh"))
-    pairs = (
-        banded.join(
-            banded.select(
-                F.col("doc_id").alias("_id2"), F.col("bh").alias("_bh2")
-            ),
-            (F.col("bh") == F.col("_bh2"))
-            & (F.col("doc_id") < F.col("_id2")),
-        )
-        .select(F.col("doc_id").alias("id_a"), F.col("_id2").alias("id_b"))
-        .distinct()
-    )
-    wa = w2.select(F.col("doc_id").alias("_wa_id"), F.col("w").alias("_wa"))
-    wb = w2.select(F.col("doc_id").alias("_wb_id"), F.col("w").alias("_wb"))
-    inter = (
-        pairs.join(wa, F.col("id_a") == F.col("_wa_id"))
-        .join(
-            wb,
-            (F.col("id_b") == F.col("_wb_id"))
-            & (F.col("_wb") == F.col("_wa")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("_i"))
-    )
-    na = nb.select(F.col("doc_id").alias("_na_id"), F.col("nw").alias("_na"))
-    nbb = nb.select(F.col("doc_id").alias("_nb_id"), F.col("nw").alias("_nb"))
-    per_pair = (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .join(na, F.col("id_a") == F.col("_na_id"))
-        .join(nbb, F.col("id_b") == F.col("_nb_id"))
-        .select(
-            F.coalesce(F.col("_i"), F.lit(0)).alias("i"),
-            F.col("_na").alias("n_a"),
-            F.col("_nb").alias("n_b"),
-            (F.col("_na") + F.col("_nb") - F.coalesce(F.col("_i"), F.lit(0)))
-            .alias("u"),
-        )
+    w2, _, nb, pairs = _mh_band_pairs(spark, sf_dir)
+    per_pair = _mh_pair_sizes(pairs, pairs, w2, nb).select(
+        F.coalesce(F.col("_i"), F.lit(0)).alias("i"),
+        F.col("_na").alias("n_a"),
+        F.col("_nb").alias("n_b"),
+        (F.col("_na") + F.col("_nb") - F.coalesce(F.col("_i"), F.lit(0)))
+        .alias("u"),
     )
     relation = (
         F.when(F.expr("5 * i >= 4 * u"), F.lit("near_dup"))
@@ -12080,40 +11790,7 @@ def q_doc_containment(spark, sf_dir):
 
 
 def _containment_sql() -> str:
-    P, B, R = _MHF_P, _MHF_B, _MHF_R
-    sig_cols = ",\n    ".join(
-        f"min(md5('{k}:' || w)) AS h{k}" for k in range(P)
-    )
-    band_exprs = ", ".join(
-        "md5("
-        + " || ".join(f"h{b * R + r}" for r in range(R))
-        + f" || ':{b}') AS b{b}"
-        for b in range(B)
-    )
-    band_list = ", ".join(f"b{b}" for b in range(B))
-    return f"""
-WITH w AS (
-  SELECT DISTINCT doc_id, unnest(string_split_regex(text, '\\s+')) AS w
-  FROM documents WHERE doc_id < {_MHF_MAXID} AND text IS NOT NULL
-), w2 AS (SELECT doc_id, w FROM w WHERE w <> ''),
-sig AS (
-  SELECT doc_id,
-    {sig_cols}
-  FROM w2 GROUP BY doc_id
-), nb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nw FROM w2 GROUP BY 1),
-banded AS (
-  SELECT doc_id, {band_exprs} FROM sig
-), pairs AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM (SELECT doc_id, unnest([{band_list}]) AS bh FROM banded) x
-  JOIN (SELECT doc_id, unnest([{band_list}]) AS bh FROM banded) y
-    ON x.bh = y.bh AND x.doc_id < y.doc_id
-), inter AS (
-  SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS i
-  FROM pairs p JOIN w2 wa ON wa.doc_id = p.id_a
-  JOIN w2 wb ON wb.doc_id = p.id_b AND wb.w = wa.w
-  GROUP BY 1, 2
-), per_pair AS (
+    return f"""{_mh_band_pairs_sql()}, {_MH_INTER_SQL}, per_pair AS (
   SELECT coalesce(i.i, 0) AS i, na.nw AS n_a, nbb.nw AS n_b,
          na.nw + nbb.nw - coalesce(i.i, 0) AS u
   FROM pairs p
@@ -12256,25 +11933,12 @@ def q_orders_aging(spark, sf_dir):
     horizon = (
         _tbl(spark, sf_dir, "orders")
         .where(F.col("o_orderdate").isNotNull())
-        .agg(
-            F.max(
-                F.expr(
-                    "unix_micros(cast(o_orderdate as timestamp))"
-                    " div 86400000000"
-                )
-            ).alias("_h")
-        )
+        .agg(F.max(_order_day()).alias("_h"))
     )
     aged = o.crossJoin(F.broadcast(horizon)).select(
         F.col("o_orderstatus").alias("status"),
         F.col("o_orderpriority").alias("priority"),
-        (
-            F.col("_h")
-            - F.expr(
-                "unix_micros(cast(o_orderdate as timestamp))"
-                " div 86400000000"
-            )
-        ).alias("age_days"),
+        (F.col("_h") - _order_day()).alias("age_days"),
         F.lit(1).cast("long").alias("_w"),
     )
     out = weighted_quantiles(
@@ -12337,7 +12001,7 @@ def q_part_abc(spark, sf_dir):
         )
         .groupBy(F.col("l_partkey").alias("part"))
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(_cents("l_extendedprice"))
             .cast("long")
             .alias("rev")
         )
@@ -12411,7 +12075,7 @@ def q_nation_hhi(spark, sf_dir):
         )
         .groupBy("l_suppkey")
         .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(_cents("l_extendedprice"))
             .cast("long")
             .alias("r")
         )
@@ -12481,16 +12145,8 @@ def q_events_window_w1(spark, sf_dir):
 
 def _window_w1_sql(n_bins: int = _WPSI_BINS, width: float = _WPSI_WIDTH) -> str:
     last = n_bins - 1
-    cum = ",\n         ".join(
-        f"CAST(sum(CASE WHEN bin <= {i} THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS c{i}"
-        for i in range(n_bins)
-    )
-    gcum = ",\n         ".join(
-        f"CAST(sum(CASE WHEN bin <= {i} THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS g{i}"
-        for i in range(n_bins)
-    )
+    cum = _cum_bins_sql(n_bins, "c")
+    gcum = _cum_bins_sql(n_bins, "g")
     num = "\n           + ".join(
         f"ABS(CAST(w.c{i} AS HUGEINT) * g.g{last}"
         f" - CAST(g.g{i} AS HUGEINT) * w.c{last})"
@@ -12593,13 +12249,7 @@ def q_customer_segment_migration(spark, sf_dir):
     o = (
         _tbl(spark, sf_dir, "orders")
         .where(F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull())
-        .select(
-            F.col("o_custkey").alias("c"),
-            F.expr(
-                "unix_micros(cast(o_orderdate as timestamp))"
-                " div 86400000000"
-            ).alias("day"),
-        )
+        .select(F.col("o_custkey").alias("c"), _order_day().alias("day"))
     )
     bounds = o.agg(
         F.min("day").alias("_lo"), F.max("day").alias("_hi")

@@ -1810,6 +1810,31 @@ def test_golden_records_survivorship_rules(spark):
         golden_records(recs, clusters, "nope", "n_chars")
 
 
+def test_golden_records_all_null_cluster_reports_null_score(spark):
+    """A cluster whose scores are all NULL still picks its smallest id,
+    and reports a NULL survivor_score, never the ordering sentinel; a
+    cluster with one real score reports it."""
+    from pynomaly_spark.dedup import golden_records
+
+    recs = spark.createDataFrame(
+        [("p", None), ("q", None), ("r", None), ("s", 7), ("t", None)],
+        "doc_id string, n_chars long",
+    )
+    clusters = spark.createDataFrame(
+        [("q", "c1"), ("p", "c1"), ("s", "c2"), ("t", "c2")],
+        "node string, cluster_id string",
+    )
+    got = {r["cluster_id"]: (r["survivor_id"], r["survivor_score"],
+                             r["n_members"])
+           for r in golden_records(recs, clusters, "doc_id",
+                                   "n_chars").collect()}
+    assert got == {
+        "c1": ("p", None, 2),
+        "c2": ("s", 7, 2),
+        "r": ("r", None, 1),
+    }
+
+
 def _two_planted_directions(spark, d=8):
     """300 vectors along two orthogonal planted directions ``w1`` (strong)
     and ``w2`` (weak) plus small noise: ``(df, w1, w2)``."""

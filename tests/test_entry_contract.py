@@ -58,6 +58,27 @@ def test_registry_has_no_duplicate_keys():
             assert not dupes, f"duplicate registry keys: {dupes}"
 
 
+# sha256 over every (name, oracle) pair of ORACLES in registry order;
+# the oracle strings are frozen, so only a change to the registry's
+# declared set of twins may move it
+_ORACLES_SHA256 = (
+    "6b56029227ec9cdb5e300d7edc7e4fe9342baa04924b5a93dd31f9439d212638"
+)
+
+
+def test_oracle_text_is_frozen():
+    """The twin generators in ``queries.py`` share helpers; a change to
+    one helper must not change any generated oracle string."""
+    import hashlib
+
+    from pynomaly_spark.queries import ORACLES
+
+    h = hashlib.sha256()
+    for name, sql in ORACLES.items():
+        h.update(name.encode() + b"\0" + sql.encode() + b"\0")
+    assert h.hexdigest() == _ORACLES_SHA256
+
+
 def test_oracle_parity_all(spark):
     from tests.oracle_compare import compare_all
 

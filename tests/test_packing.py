@@ -122,16 +122,22 @@ def test_pack_chunks_plan_is_bucket_parallel(spark):
     """The big-frame window must shuffle on the bucket key, never
     funnel the corpus through one reducer."""
     rows = [("g", i, 10) for i in range(100)]
+    import re
+
     plan = pack_chunks(
         _mkdf(spark, rows, parts=4), "n", "doc_id",
         cap=64, group_col="grp", n_buckets=8,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "_bucket" in plan
-    # exactly the tiny offsets relation may single-partition; the local
-    # cumsum window must carry the bucket in its partition spec
-    assert "partitionBy" not in plan or True
-    win_lines = [ln for ln in plan.splitlines() if "Window" in ln]
-    assert any("_bucket" in ln for ln in win_lines)
+    )._jdf.queryExecution().optimizedPlan().toString()
+    # a Window line reads "Window [exprs], [partition spec], [order spec]";
+    # only the tiny offsets relation may be unkeyed by the bucket: every
+    # window over the row-level token counts must partition on it
+    wins = [
+        re.search(r"Window \[(.*)\], \[([^\[\]]*)\], \[[^\[\]]*\]\s*$", ln)
+        for ln in plan.splitlines()
+        if "Window [" in ln
+    ]
+    row_level = [m for m in wins if m and "sum(n_tokens" in m.group(1)]
+    assert row_level and all("_bucket" in m.group(2) for m in row_level)
 
 
 def test_pack_chunks_validates_args(spark):
