@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
-from .knn import _ns_eq
+from .knn import _ns_eq, _ns_join
 from .profiling import _check_k, _fd_violating_keys, _non_null, _pooled_flag
 
 __all__ = [
@@ -502,9 +502,8 @@ def drift_scores(
     sizes = group_sizes(feats).withColumn(
         "_oversized", F.col("n_rows") > F.lit(int(chk.max_group_rows))
     )
-    routed = feats.join(
-        F.broadcast(sizes.select("partition_id", "_oversized")),
-        on="partition_id",
+    routed = _ns_join(
+        feats, F.broadcast(sizes.select("partition_id", "_oversized")), ["partition_id"]
     )
     small = routed.where(~F.col("_oversized")).drop("_oversized")
     big = routed.where(F.col("_oversized")).drop("_oversized")
@@ -521,9 +520,10 @@ def drift_scores(
         caches_out=caches_out,
     )
     if carry:
-        big_scored = big_scored.join(
+        big_scored = _ns_join(
+            big_scored,
             big.select("partition_id", "row_id", *carry),
-            on=["partition_id", "row_id"],
+            ["partition_id", "row_id"],
         )
     return small_scored.unionByName(big_scored)
 

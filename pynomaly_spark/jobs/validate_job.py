@@ -14,13 +14,14 @@ committed partitions (per-partition manifests carry lineage).
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
 import time
 
 
-def main(argv=None) -> None:
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="dir with files.parquet [+ commits/sha_oracle]")
     p.add_argument("--ckpt", default=None, help="checkpoint dir (enables resume)")
@@ -44,23 +45,46 @@ def main(argv=None) -> None:
                         " Arrow, and codegen before the clock starts —"
                         " measured ~9s of one-time JVM cost at any scale;"
                         " a long-running production job amortizes it)")
-    args = p.parse_args(argv)
+    return p
+
+
+def _suite(args, has_commits: bool, has_oracle: bool):
+    """``CheckSuite.default()`` with the drift options of ``args``,
+    without ReferentialIntegrity when there is no commits table and
+    with RowInvariant when there is a sha oracle."""
+    from pynomaly_spark.checks import (
+        CheckSuite,
+        Drift,
+        ReferentialIntegrity,
+        RowInvariant,
+    )
+
+    checks = []
+    for chk in CheckSuite.default().checks:
+        if isinstance(chk, Drift):
+            chk = dataclasses.replace(
+                chk,
+                n_neighbors=args.k,
+                extent=args.extent,
+                max_group_rows=args.salt_rows or None,
+                exact_oversized=args.exact_oversized,
+            )
+        elif isinstance(chk, ReferentialIntegrity) and not has_commits:
+            continue
+        checks.append(chk)
+    if has_oracle:
+        checks.append(RowInvariant())
+    return CheckSuite(checks=checks)
+
+
+def main(argv=None) -> None:
+    args = _parser().parse_args(argv)
 
     # import after arg parsing so --help is instant under spark-submit
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
     from pyspark.sql import SparkSession
 
-    from pynomaly_spark.checks import (
-        Cardinality,
-        CheckSuite,
-        Drift,
-        LengthQuantiles,
-        NullRate,
-        ReferentialIntegrity,
-        RowInvariant,
-        Uniqueness,
-        run_suite,
-    )
+    from pynomaly_spark.checks import run_suite
 
     spark = SparkSession.builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -82,24 +106,7 @@ def main(argv=None) -> None:
     if os.path.exists(f"{args.input}/sha_oracle.parquet"):
         sha_oracle = spark.read.parquet(f"{args.input}/sha_oracle.parquet")
 
-    checks = [
-        NullRate("content", max_rate=0.01),
-        NullRate("lang", max_rate=0.02),
-        LengthQuantiles("content"),
-        Cardinality("lang", max_distinct=64),
-        Uniqueness(),
-        Drift(
-            n_neighbors=args.k,
-            extent=args.extent,
-            max_group_rows=args.salt_rows or None,
-            exact_oversized=args.exact_oversized,
-        ),
-    ]
-    if commits is not None:
-        checks.append(ReferentialIntegrity())
-    if sha_oracle is not None:
-        checks.append(RowInvariant())
-    suite = CheckSuite(checks=checks)
+    suite = _suite(args, commits is not None, sha_oracle is not None)
 
     n_rows = files.count()
     if not args.no_warmup:

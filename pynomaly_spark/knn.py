@@ -80,6 +80,17 @@ def _ns_eq(left: DataFrame, right: DataFrame, pairs: list):
     return cond
 
 
+def _ns_join(left: DataFrame, right: DataFrame, keys: list, how: str = "inner"):
+    """``left.join(right, on=keys, how=how)`` with NULL equal to NULL
+    (:func:`_ns_eq`): ``right``'s keys are renamed for the join and
+    dropped after it, so only ``left``'s key columns remain."""
+    r = right.select(
+        *[F.col(c).alias(f"_r_{c}") if c in keys else F.col(c) for c in right.columns]
+    )
+    cond = _ns_eq(left, r, [(k, f"_r_{k}") for k in keys])
+    return left.join(r, cond, how).drop(*[f"_r_{k}" for k in keys])
+
+
 def _cell_expr(features_col: str, dim: int, cell_size: float):
     return F.floor(F.col(features_col).getItem(dim) / F.lit(float(cell_size)))
 

@@ -37,6 +37,8 @@ from operator import and_
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .knn import _ns_join
+
 __all__ = ["group_sizes", "with_salt"]
 
 
@@ -63,7 +65,7 @@ def with_salt(
         "_buckets",
         F.ceil(F.col("n_rows") / F.lit(int(max_group_rows))).cast("int"),
     )
-    out = df.join(F.broadcast(sizes), on=partition_col, how="inner")
+    out = _ns_join(df, F.broadcast(sizes), [partition_col])
     return out.withColumn(
         salt_col,
         F.when(F.col("_buckets") <= 1, F.lit(0)).otherwise(

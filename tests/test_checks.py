@@ -923,3 +923,46 @@ def test_ri_join_is_left_to_the_planner(spark, tmp_path):
         assert anti_join() == {"SortMergeJoin"}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _planted_lang_rows():
+    """2 × 61 rows, lang python and NULL, with identical contents: 60
+    short files and one 50,000-char file each."""
+    rows = []
+    for lang, tag in (("python", "py"), (None, "nl")):
+        for i in range(60):
+            text = " ".join(f"tok{j % 7}" for j in range(5 + i))
+            rows.append(("r", f"{tag}{i}.py", f"c{i}", lang, text))
+        rows.append(("r", f"big_{tag}.py", "cbig", lang, "x" * 50000))
+    return rows
+
+
+@pytest.mark.parametrize(
+    "drift",
+    [
+        Drift(max_group_rows=None),
+        Drift(),
+        Drift(max_group_rows=50, exact_oversized=True),
+    ],
+    ids=["grouped", "salted", "exact_oversized"],
+)
+def test_null_partition_drift_scores_like_its_twin(spark, drift):
+    """A NULL partition is scored as a partition on every drift route
+    (one grouped fit, salted sub-fits, and the distributed kernel for a
+    group above ``max_group_rows``): with the same contents as the
+    python partition it reads the same verdict and reports its planted
+    file."""
+    m, v = _by_lang(spark, _planted_lang_rows(), [drift])
+    gated = m[m.metric == "gated"]
+    assert len(gated) == 2
+    assert (gated.value == 0.0).all() and gated.passed.all()
+    rate = m[m.metric == "violation_rate"]
+    assert len(rate) == 2 and rate.passed.all()
+    assert abs(rate.value.iloc[0] - rate.value.iloc[1]) < 1e-12
+    assert sorted(v.path) == ["big_nl.py", "big_py.py"]
+    assert v.partition_id.isna().sum() == 1
+    assert v.loop_score.min() > 0.95
+    if not drift.exact_oversized:
+        # the distributed kernel's scores vary with the hashed row ids
+        # (0.9896-0.9901 here against 0.9908 for one exact fit)
+        assert abs(v.loop_score.iloc[0] - v.loop_score.iloc[1]) < 1e-9

@@ -5,6 +5,7 @@ regression that silently reintroduces a row-grain window or an
 all-pairs join flips these, not just a benchmark.
 """
 
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -129,3 +130,44 @@ def test_corpus_overlap_distinct_pin_is_a_user_repartition(spark):
     plan = _plan(corpus_overlap(df, "source", "text", num_perm=4))
     dp = spark.sparkContext.defaultParallelism
     assert _user_repartitions(plan) == {("_g, _sh", dp)}, plan
+
+
+_PERFBENCH_SF = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "perfbench", "data", "sf0.1"
+)
+_TABLES = ("customer", "orders", "lineitem", "events", "documents", "embeddings")
+
+
+def _round_robin_inputs(df) -> list:
+    """The subtree under each round-robin repartition of the optimized
+    plan, attribute ids and tree glyphs stripped."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    subtrees = re.split(r"\n[ :+-]*Repartition \d+, true\n", re.sub(r"#\d+L?", "", plan))
+    return [
+        "\n".join(line.strip(" :+-") for line in sub.split("\n")[:2])
+        for sub in subtrees[1:]
+    ]
+
+
+def test_tbl_is_a_plain_read(spark):
+    """``queries._tbl`` plans no repartition for any table: the few-file
+    spread is a consumer's device, never a reader default."""
+    from pynomaly_spark.queries import _tbl
+
+    for name in _TABLES:
+        plan = _plan(_tbl(spark, _PERFBENCH_SF, name))
+        assert "Exchange" not in plan and "Repartition" not in plan, name
+
+
+def test_spread_stays_at_its_measured_consumers(spark):
+    """``emb_knn_classifier`` (CPU-dense pair dots, measured slower
+    without the spread) reads its few-file table through exactly one
+    round-robin repartition, shared by both sides of its self-join;
+    ``doc_null_rate`` (a columnar aggregate, measured faster without)
+    plans none."""
+    from pynomaly_spark.queries import QUERIES
+
+    knn = _round_robin_inputs(QUERIES["emb_knn_classifier"](spark, _PERFBENCH_SF))
+    assert len(knn) == 2 and len(set(knn)) == 1, knn  # one per self-join side
+    assert knn[0].endswith("Relation [vec_id,embedding,label] parquet"), knn
+    assert _round_robin_inputs(QUERIES["doc_null_rate"](spark, _PERFBENCH_SF)) == []

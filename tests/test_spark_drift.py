@@ -254,8 +254,8 @@ def test_grouped_matches_kernel_per_group(spark):
 
 
 def test_grouped_scores_null_partition_keys(spark):
-    """Null group keys must be scored (pid 'None'), not silently dropped
-    by pandas groupby's dropna default (round-2 review finding)."""
+    """Null group keys must be scored as a NULL partition, not silently
+    dropped by pandas groupby's dropna default."""
     from pyspark.sql import functions as F
 
     rng = np.random.RandomState(3)
@@ -269,7 +269,7 @@ def test_grouped_scores_null_partition_keys(spark):
     )
     out = loop_grouped(df, n_neighbors=5).toPandas()
     assert len(out) == 40
-    assert set(out.partition_id) == {"a", "None"}
+    assert set(out.partition_id) == {"a", None}
     assert out.loop_score.notna().all()
 
 
